@@ -9,6 +9,8 @@ as ``yyyy-MM-dd HH:mm`` (cli/main.go:157-163).
 from __future__ import annotations
 
 import argparse
+import datetime as dt
+import json
 import sys
 
 from nexus_event_stream_spark.serving import NotFoundError, SignalService
@@ -23,6 +25,14 @@ def _trunc(s: str | None) -> str:
 
 def _fmt_ts(ts) -> str:
     return ts.strftime("%Y-%m-%d %H:%M") if ts else ""
+
+
+def _signal(row: dict) -> dict:
+    """A decoded signal row with its ISO timestamps back as datetimes."""
+    for k in ("created_at", "updated_at"):
+        if row[k] is not None:
+            row[k] = dt.datetime.fromisoformat(row[k])
+    return row
 
 
 def render_list(rows) -> str:
@@ -106,11 +116,12 @@ def main(
     args = parser.parse_args(argv)
 
     if args.cmd == "list":
-        print(render_list(service.list(priority=args.priority)))
+        rows = json.loads(service.list(priority=args.priority))
+        print(render_list([_signal(r) for r in rows]))
         return 0
     if args.cmd == "get":
         try:
-            print(render_get(service.get(args.id)))
+            print(render_get(_signal(json.loads(service.get(args.id)))))
             return 0
         except NotFoundError:
             print("error: signal not found", file=sys.stderr)

@@ -115,11 +115,6 @@ def _timestamp_units(path: str) -> dict[str, str]:
     return out
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load all ten driver tables as a dict of DataFrames."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every driver table as a temp view for the SQL API."""
     for name in TABLE_NAMES:

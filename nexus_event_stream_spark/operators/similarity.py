@@ -143,20 +143,6 @@ def lit_matrix(rows: list[list[float]]) -> Column:
     )
 
 
-def dot_to_literal(vec_col: Column | str, centroid: list[float]) -> Column:
-    """Dot product of a vector column with a literal centroid, as a
-    left-to-right ``aggregate`` fold — the same association order as the
-    oracle's ``list_reduce``, so both engines produce bit-identical doubles
-    and therefore identical argmaxes."""
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    arr = F.array(*[F.lit(x) for x in centroid])
-    return F.aggregate(
-        F.zip_with(v, arr, lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-
-
 def centroid_dots(vec_col: Column | str, codebook: list[list[float]]) -> Column:
     """Array of dot products against every codebook centroid (1-indexed
     downstream via array_position/posexplode+1). On a UNIT-NORM codebook,

@@ -13,16 +13,21 @@ projection/signal.go:70-108; CLI client.go:68-77):
                               ``ErrNotFound`` / HTTP 404 analogue);
 - ``health()``              → view reachability + row count.
 
-Each endpooint is a one-liner DataFrame query over the materialized view;
-Catalyst's pushdown replaces the reference's hand-picked Redis indexes
-(SURVEY.md §4).
+``list`` and ``get`` return the response body as JSON text. Each read is
+ONE Spark job whose rows are JSON-encoded in the JVM (``to_json``), so the
+driver builds no per-row ``Row`` objects. Each endpoint is a one-liner
+DataFrame query over the materialized view; Catalyst's pushdown replaces
+the reference's hand-picked Redis indexes (SURVEY.md §4). The lazy view
+plan is built once per committed snapshot and reused until the pointer
+moves (snapshot directories are immutable), so a read pays no file
+listing or scan analysis.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from nexus_event_stream_spark.operators.topk import newest_first
@@ -32,22 +37,48 @@ from nexus_event_stream_spark.streaming.projection import ParquetViewStore
 LIST_LIMIT = 50  # handler/signal.go:45 — hardcoded ZRANGE 0 49
 
 
+#: wire format of a view row: ISO-8601 timestamps to the microsecond,
+#: null fields kept (``to_json`` drops them by default)
+_JSON_OPTIONS = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+    "ignoreNullFields": "false",
+}
+
+
 class NotFoundError(LookupError):
     """Entity absent from the view (handler 404 / client ErrNotFound)."""
+
+
+def _json(view: DataFrame) -> Column:
+    """A view row as its JSON object text, encoded in the JVM."""
+    return F.to_json(F.struct(*view.columns), _JSON_OPTIONS)
 
 
 @dataclass
 class SignalService:
     spark: SparkSession
     store: ParquetViewStore
+    #: (pointer, live view) of the snapshot last served: a lazy plan, not
+    #: rows, rebuilt only when the committed pointer moves
+    _live: tuple = field(default=(None, None), init=False, repr=False)
 
     def _view(self) -> DataFrame | None:
-        return self.store.read_live(self.spark)
+        # HTTP handler threads share the cache without a lock: a request
+        # always serves the plan of the pointer IT read, so a race costs
+        # at most a duplicate rebuild, never a stale or mixed snapshot
+        cur = self.store.current()
+        if cur is None:
+            return None
+        pinned, view = self._live
+        if pinned != cur:
+            view = self.store.read_live(self.spark, cur=cur)
+            self._live = (cur, view)
+        return view
 
-    def list(self, priority: str | None = None) -> list[Row]:
+    def list(self, priority: str | None = None) -> str:
         view = self._view()
         if view is None:
-            return []
+            return "[]"
         if priority is not None:
             # Unknown display string maps to score 0 → matches nothing
             # (projection/signal.go:21-25,84-96). Equality on the stored
@@ -55,25 +86,32 @@ class SignalService:
             # ListByPriority has NO 0-49 range (ZRangeArgs ByScore, exact
             # score): it returns ALL matches, ascending member order —
             # the 50-row cap applies only to the unfiltered list.
-            return (
+            # The order is applied here to the collected (id, json) pairs,
+            # nulls first like ``id.asc()``: an orderBy would add a
+            # range-sort shuffle to every read.
+            pairs = (
                 view.filter(F.col("priority") == F.lit(priority))
-                .orderBy(F.col("id").asc())
+                .select("id", _json(view))
                 .collect()
             )
-        return newest_first(
+            pairs.sort(key=lambda r: (r[0] is not None, r[0]))
+            return "[" + ",".join(r[1] for r in pairs) + "]"
+        top = newest_first(
             view, ts_col="created_at", tiebreak=["id"], limit=LIST_LIMIT
-        ).collect()
+        ).select(_json(view))
+        return "[" + ",".join(r[0] for r in top.collect()) + "]"
 
-    def get(self, id_: str) -> Row:
+    def get(self, id_: str) -> str:
         view = self._view()
+        # ids are unique in the view, so no limit: the scan is one job
         rows = (
-            view.filter(F.col("id") == F.lit(id_)).limit(1).collect()
+            view.filter(F.col("id") == F.lit(id_)).select(_json(view)).collect()
             if view is not None
             else []
         )
         if not rows:
             raise NotFoundError(id_)
-        return rows[0]
+        return rows[0][0]
 
     def health(self) -> dict:
         view = self._view()

@@ -121,7 +121,11 @@ def make_handler(
 ):
     class Handler(BaseHTTPRequestHandler):
         def _send(self, code: int, payload) -> None:
-            body = json.dumps(payload).encode()
+            self._send_text(code, json.dumps(payload))
+
+        def _send_text(self, code: int, text: str) -> None:
+            """Send a JSON body that is already encoded (signal reads)."""
+            body = text.encode()
             self.send_response(code)
             self.send_header("Content-Type", "application/json")
             self.send_header("Content-Length", str(len(body)))
@@ -256,11 +260,10 @@ def make_handler(
                     self._send(401, {"error": "authentication required"})
                 elif parts == ["signals"]:
                     prio = parse_qs(url.query).get("priority", [None])[0]
-                    rows = service.list(priority=prio)
-                    self._send(200, [_row_to_dict(r) for r in rows])
+                    self._send_text(200, service.list(priority=prio))
                 elif len(parts) == 2 and parts[0] == "signals":
                     try:
-                        self._send(200, _row_to_dict(service.get(parts[1])))
+                        self._send_text(200, service.get(parts[1]))
                     except NotFoundError:
                         self._send(404, {"error": "signal not found"})
                 elif parts == ["rollups"] and rollups is not None:

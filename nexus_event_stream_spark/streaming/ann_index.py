@@ -59,7 +59,6 @@ import uuid
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from nexus_event_stream_spark.operators.similarity import (
     ivf_pq_topk,
@@ -79,16 +78,6 @@ class SnapshotExpiredError(RuntimeError):
     merged and the originals removed — so the read fails loudly here
     instead of surfacing a raw path error from the scan. Retry with a
     fresh ``current()``."""
-
-
-def _index_schema(id_col: str) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("centroid_id", T.IntegerType()),
-            T.StructField("codes", T.ArrayType(T.IntegerType())),
-        ]
-    )
 
 
 class PQIndexStore:

@@ -29,9 +29,9 @@ partitioned by a stable hash of the key to keep per-file sizes bounded.
 from __future__ import annotations
 
 import datetime as dt
+import logging
 import os
 import shutil
-import sys
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -43,6 +43,8 @@ from nexus_event_stream_spark.operators.lww import (
 from nexus_event_stream_spark.schemas import STATE_SCHEMA
 from nexus_event_stream_spark.streaming.commit import PosixRenameBackend
 from nexus_event_stream_spark.streaming.replay import ReplayGuard
+
+logger = logging.getLogger(__name__)
 
 POINTER = "_CURRENT"
 
@@ -110,18 +112,20 @@ class ParquetViewStore:
 
     # -- read/write ---------------------------------------------------------
 
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        """Full state table (latest event per key, tombstones included)."""
-        cur = self.current()
+    def read(self, spark: SparkSession, cur=None) -> DataFrame | None:
+        """Full state table (latest event per key, tombstones included).
+        ``cur`` pins a pointer snapshot the caller already read."""
+        if cur is None:
+            cur = self.current()
         if cur is None:
             return None
         return spark.read.schema(self.schema).parquet(
             os.path.join(self.path, f"v={cur['version']}")
         )
 
-    def read_live(self, spark: SparkSession) -> DataFrame | None:
+    def read_live(self, spark: SparkSession, cur=None) -> DataFrame | None:
         """Serving view: tombstones filtered, action column dropped."""
-        state = self.read(spark)
+        state = self.read(spark, cur=cur)
         return None if state is None else live_view(state)
 
     def write(
@@ -344,8 +348,8 @@ class BucketedViewStore:
             return None
         return spark.read.schema(self.schema).parquet(*paths)
 
-    def read_live(self, spark: SparkSession) -> DataFrame | None:
-        state = self.read(spark)
+    def read_live(self, spark: SparkSession, cur=None) -> DataFrame | None:
+        state = self.read(spark, cur=cur)
         return None if state is None else live_view(state)
 
     # -- write --------------------------------------------------------------
@@ -672,10 +676,11 @@ def start_projection(
 
                 try:
                     publish_serving_snapshot(spark, bstore, serving_path)
-                except Exception as exc:  # noqa: BLE001 — ingest must survive
-                    print(
-                        f"serving-layout publish failed (epoch {epoch}): {exc}",
-                        file=sys.stderr,
+                except Exception:  # noqa: BLE001 — ingest must survive
+                    logger.warning(
+                        "serving-layout publish failed (epoch %d)",
+                        epoch,
+                        exc_info=True,
                     )
 
     else:

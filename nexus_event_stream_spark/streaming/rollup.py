@@ -54,9 +54,13 @@ equal in tests/test_rollup.py).
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .projection import BucketedViewStore, _bucket_expr
+
+logger = logging.getLogger(__name__)
 
 __all__ = [
     "RollupStore",
@@ -743,8 +747,6 @@ def start_rollup(
     ``append``-mode stores (every N epochs; the start_search_index
     shape) — logged-and-continued, never fatal to ingest. None (default)
     disables; merge-mode stores never need it."""
-    import sys
-
     from .dedup import run_token_for
 
     run_token = run_token_for(checkpoint_path)
@@ -754,10 +756,9 @@ def start_rollup(
         if compact_every and epoch % compact_every == compact_every - 1:
             try:
                 store.compact(spark)
-            except Exception as exc:  # noqa: BLE001 — ingest must survive
-                print(
-                    f"rollup segment compaction failed (epoch {epoch}): {exc}",
-                    file=sys.stderr,
+            except Exception:  # noqa: BLE001 — ingest must survive
+                logger.warning(
+                    "rollup segment compaction failed (epoch %d)", epoch, exc_info=True
                 )
 
     writer = (

@@ -44,10 +44,14 @@ one tiny aggregate over those postings, and scoring reuses the batch
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..operators.search import BM25Index, bm25_topk, search_tokens
 from .projection import BucketedViewStore, _bucket_expr
+
+logger = logging.getLogger(__name__)
 
 __all__ = ["BM25IndexStore", "start_search_index"]
 
@@ -422,8 +426,6 @@ def start_search_index(
     inline-scheduled-maintenance shape as ``start_projection``'s serving
     publish. Compaction failures are logged-and-continued (it is pure
     read maintenance; it must never take down ingest). None disables."""
-    import sys
-
     from .dedup import run_token_for
 
     run_token = run_token_for(checkpoint_path)
@@ -433,10 +435,9 @@ def start_search_index(
         if compact_every and epoch % compact_every == compact_every - 1:
             try:
                 store.compact(spark)
-            except Exception as exc:  # noqa: BLE001 — ingest must survive
-                print(
-                    f"bm25 segment compaction failed (epoch {epoch}): {exc}",
-                    file=sys.stderr,
+            except Exception:  # noqa: BLE001 — ingest must survive
+                logger.warning(
+                    "bm25 segment compaction failed (epoch %d)", epoch, exc_info=True
                 )
 
     writer = (

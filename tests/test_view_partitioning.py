@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import json
 
 from pyspark.sql import functions as F
 
@@ -35,8 +36,8 @@ def test_partitioned_store_roundtrip_and_pruning(spark, tmp_path):
     assert "PartitionFilters: [isnotnull(priority" in plan
 
     svc = SignalService(spark, store)
-    assert {r["id"] for r in svc.list(priority="High")} == {"s1", "s3"}
-    assert svc.list(priority="Bogus") == []
+    assert {r["id"] for r in json.loads(svc.list(priority="High"))} == {"s1", "s3"}
+    assert json.loads(svc.list(priority="Bogus")) == []
 
 
 def test_snapshot_retention_window(spark, tmp_path):
