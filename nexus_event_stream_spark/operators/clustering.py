@@ -14,7 +14,9 @@ Design constraints, in order:
 
 * **Write path is one shuffle.** The Z-key is a pure projection (codegen'd
   binary-search binning + bit interleave — no UDF), then a single
-  ``repartitionByRange`` on the key; file count is explicit.
+  ``repartitionByRange`` on the key; file count is explicit. Each column
+  is binned once per write: the layout's occupancy counts read the same
+  bin columns the Z-key interleaves, inside the write action.
 * **Equi-depth bins.** Bin boundaries come from ``approxQuantile`` so skewed
   columns still spread across the full bin space (equi-width bins would put
   90 % of a zipf column in one bin and destroy the clustering).
@@ -178,34 +180,24 @@ def zorder_write(
     against a frozen layout pass them back to ``zorder_key``).
     """
     boundaries = equi_depth_boundaries(df, cols, bits)
-    z = zorder_key(df, cols, bits, boundaries)
     # Base occupancy: the layout's OWN bin histogram, the yardstick the
     # decay detector compares appends against. Against uniform instead, a
     # low-cardinality column (15 users over 64 bins → most bins empty,
     # occupied ones at ~4× uniform) would read as skewed on every healthy
-    # append. Observed metrics RIDE the write action — zero extra passes.
-    observed, resolve = _occupancy_observation(df, cols, boundaries, bits)
-    with _micros_timestamps(df.sparkSession):
-        (
-            observed.withColumn("__z", z)
-            .repartitionByRange(n_files, F.col("__z"))
-            .sortWithinPartitions("__z")
-            .drop("__z")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
+    # append.
+    n_rows, base_occ = _clustered_write(
+        df, path, cols, boundaries, bits, n_files, "overwrite"
+    )
     if manifest:
         build_skipping_manifest(df.sparkSession, path, cols)
-    _, base_occ = resolve()
     _write_layout_state(
         path,
         {
             "cols": list(cols),
             "bits": bits,
             "boundaries": boundaries,
-            # footer-only row count: the base mass the appended-fraction
-            # trigger compares against
-            "n_base_rows": _footer_row_count(path),
+            # the base mass the appended-fraction trigger compares against
+            "n_base_rows": n_rows,
             "n_appended_rows": 0,
             "base_occupancy": base_occ,
             "occupancy": {c: [0] * (1 << bits) for c in cols},
@@ -214,43 +206,61 @@ def zorder_write(
     return boundaries
 
 
-def _occupancy_observation(
+def _clustered_write(
     df: DataFrame,
+    path: str,
     cols: Sequence[str],
     boundaries: dict[str, list[float]],
     bits: int,
-):
-    """Attach bin-occupancy metrics to ``df`` so the NEXT action over it
-    (the layout write) also produces the per-column bin histogram —
-    ``df.observe`` rides the existing scan with 2^bits·|cols| map-side
-    partial counters; the occupancy costs zero extra passes and zero
-    shuffles. Returns ``(observed_df, resolve)`` where ``resolve()``
-    (call AFTER the action) yields ``(row count, {col: [counts]})``."""
+    n_files: int,
+    mode: str,
+) -> tuple[int, dict[str, list[int]]]:
+    """Write ``df`` clustered on the Z-order of ``cols`` and count, in the
+    same action, its rows and its per-column bin occupancy.
+
+    Each column is binned ONCE: one projection adds a bin column per
+    clustered column, the Z-key interleaves those columns, and
+    ``df.observe`` counts ``bin == i`` over the same columns — so the
+    histogram is exactly the binning the files are clustered on. The
+    counts sit AFTER the range exchange: ``repartitionByRange`` first runs
+    a sampling job over its whole input, and an observation below the
+    exchange would count every row twice. One range shuffle on the key,
+    an in-file sort, the write; no extra pass. Returns
+    ``(row count, {col: [rows per bin]})``."""
     from pyspark.sql import Observation
 
     n_bins = 1 << bits
+    bins = [f"__bin{j}" for j in range(len(cols))]
+    keyed = df.select(
+        "*",
+        *[
+            _bin_expr(_numeric(c, df.schema[c].dataType), boundaries[c]).alias(b)
+            for c, b in zip(cols, bins)
+        ],
+    ).withColumn("__z", _interleave([F.col(b) for b in bins], bits))
     obs = Observation()
-    aggs = [F.count(F.lit(1)).alias("__n")] + [
-        F.sum(
-            (
-                _bin_expr(_numeric(c, df.schema[c].dataType), boundaries[c])
-                == i
-            ).cast("long")
-        ).alias(f"__o_{c}_{i}")
-        for c in cols
-        for i in range(n_bins)
-    ]
-    observed = df.observe(obs, *aggs)
-
-    def resolve() -> tuple[int, dict[str, list[int]]]:
-        row = obs.get
-        occ = {
-            c: [int(row[f"__o_{c}_{i}"] or 0) for i in range(n_bins)]
-            for c in cols
-        }
-        return int(row["__n"] or 0), occ
-
-    return observed, resolve
+    observed = keyed.repartitionByRange(n_files, F.col("__z")).observe(
+        obs,
+        F.count(F.lit(1)).alias("__n"),
+        *[
+            F.sum((F.col(b) == i).cast("long")).alias(f"{b}_{i}")
+            for b in bins
+            for i in range(n_bins)
+        ],
+    )
+    with _micros_timestamps(df.sparkSession):
+        (
+            observed.sortWithinPartitions("__z")
+            .drop("__z", *bins)
+            .write.mode(mode)
+            .parquet(path)
+        )
+    row = obs.get
+    occupancy = {
+        c: [int(row[f"{b}_{i}"] or 0) for i in range(n_bins)]
+        for c, b in zip(cols, bins)
+    }
+    return int(row["__n"] or 0), occupancy
 
 
 # ----------------------------------------------------------- layout state
@@ -275,18 +285,6 @@ def _write_layout_state(path: str, state: dict) -> None:
     with open(tmp, "w") as fh:
         json.dump(state, fh)
     os.replace(tmp, _state_path(path))  # same POSIX-rename commit as the stores
-
-
-def _footer_row_count(path: str) -> int:
-    import pyarrow.parquet as pq
-
-    n = 0
-    for f in _data_files(path):
-        try:
-            n += pq.ParquetFile(f).metadata.num_rows
-        except Exception:
-            continue
-    return n
 
 
 def layout_skew(state: dict) -> dict:
@@ -393,10 +391,11 @@ def zorder_append(
     the appended region decays toward full scans. Correctness never
     breaks (the residual predicate is always re-applied), but at 100 TB
     with daily appends this is the dominant layout-decay mode. Each
-    append therefore also bins the batch against the frozen boundaries
-    (one map-side aggregation riding the same scan shape — 2^bits partial
-    counters per column, no extra shuffle of data rows) and accumulates
-    per-column bin occupancy in the layout state. Returns a report::
+    append therefore also counts the batch's rows per frozen bin — read
+    off the same bin columns its Z-key interleaves, inside the append's own
+    write action (no extra pass, no extra shuffle of data rows) — and
+    accumulates per-column bin occupancy in the layout state. Returns a
+    report::
 
         {"new_files": [...], "skew": {col: max_share_ratio},
          "appended_frac": float | None, "needs_compaction": bool}
@@ -420,23 +419,13 @@ def zorder_append(
         bits = state["bits"]
     before = _data_files(path)
     n_bins = 1 << bits
-    z = zorder_key(df, cols, bits=bits, boundaries=boundaries)
-    # occupancy of THIS batch against the frozen bins rides the append
-    # write via df.observe — map-side partial counters, zero extra passes
-    observed, resolve = _occupancy_observation(df, cols, boundaries, bits)
-    with _micros_timestamps(spark):
-        (
-            observed.withColumn("__z", z)
-            .repartitionByRange(n_files, F.col("__z"))
-            .sortWithinPartitions("__z")
-            .drop("__z")
-            .write.mode("append")
-            .parquet(path)
-        )
+    # occupancy of THIS batch against the frozen bins rides the append write
+    n_batch, batch_occ = _clustered_write(
+        df, path, cols, boundaries, bits, n_files, "append"
+    )
     new_files = sorted(set(_data_files(path)) - set(before))
     if new_files:
         _extend_manifest(spark, path, new_files, cols)
-    n_batch, batch_occ = resolve()
     # appended_frac is None (not absent) without layout state — callers
     # reading report["appended_frac"] on a pre-upgrade / explicit-
     # boundaries layout get a value, never a KeyError (ADVICE r7)

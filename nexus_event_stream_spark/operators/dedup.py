@@ -623,176 +623,6 @@ def bucket_candidates(
     return pairs.distinct()
 
 
-def banded_pair_source(
-    keyed: DataFrame, max_bucket_size: int | None = None
-) -> tuple[DataFrame, DataFrame | None]:
-    """Candidate pairs WITHOUT the global ``distinct`` — the r15 twin of
-    ``bucket_candidates`` for callers that verify pairs with both docs'
-    signatures in hand (minhash_dedup, phash_pairs, video_phash_pairs).
-
-    ``keyed`` is a ``(doc_id, __band, bucket)`` relation (one row per
-    band, ``__band`` the 0-based band index; bucket keys embed the band,
-    so equal buckets imply equal bands). Returns ``(cands, masks)``:
-
-    - ``cands``: ``(doc_a, doc_b, __band, __star)`` — one row per
-      (colliding pair, matching band) from the in-cap buckets, plus one
-      row per (hot bucket, non-hub member) star edge. NOT deduplicated:
-      a pair colliding in k bands appears k times.
-    - ``masks``: ``None`` when uncapped, else per-doc band bitmasks
-      ``(doc_id, __hot_mask, __hub_mask)`` — bit j of ``__hot_mask`` set
-      iff the doc's band-j bucket is hot, bit j of ``__hub_mask`` set
-      iff the doc is additionally that hot bucket's hub (min id).
-
-    The caller MUST filter the verify join with ``first_match_keep`` to
-    recover exactly the distinct pair set ``bucket_candidates`` returns
-    (pinned by tests). Why: the old ``pairs.distinct()`` was one full
-    exchange of the candidate multiset — a pair that collides in k bands
-    shipped k× (guide §2.3/§2.4; the r14 verdict's band-local-pre-dedup
-    item). Collision multiplicity is not knowable from one banded row,
-    but it IS knowable where both signatures meet — the verify join the
-    caller runs anyway — so the dedup moves there as a free filter
-    ("keep the row only at the pair's first qualifying band") and the
-    exchange disappears outright. The capped path pays one extra NARROW
-    shuffle (n·bands (doc, band, flags) rows → n mask rows), orders of
-    magnitude below the pair multiset it replaces on dup-heavy corpora.
-    """
-    if max_bucket_size is None:
-        a, b = keyed.alias("a"), keyed.alias("b")
-        cands = a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        ).select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.__band").alias("__band"),
-            F.lit(False).alias("__star"),
-        )
-        return cands, None
-    wb = Window.partitionBy("bucket")
-    sized = keyed.select(
-        "doc_id",
-        "__band",
-        "bucket",
-        F.count(F.lit(1)).over(wb).alias("__bsz"),
-        F.min("doc_id").over(wb).alias("__hub"),
-    )
-    hot = F.col("__bsz") > max_bucket_size
-    band_bit = F.expr("shiftleft(1L, __band)")
-    masks = sized.groupBy("doc_id").agg(
-        F.sum(F.when(hot, band_bit).otherwise(F.lit(0)))
-        .cast("long")
-        .alias("__hot_mask"),
-        F.sum(
-            F.when(hot & (F.col("doc_id") == F.col("__hub")), band_bit).otherwise(
-                F.lit(0)
-            )
-        )
-        .cast("long")
-        .alias("__hub_mask"),
-    )
-    normal = sized.filter(~hot).select("doc_id", "__band", "bucket")
-    star = sized.filter(hot & (F.col("doc_id") != F.col("__hub"))).select(
-        F.col("__hub").alias("doc_a"),
-        F.col("doc_id").alias("doc_b"),
-        F.col("__band").alias("__band"),
-        F.lit(True).alias("__star"),
-    )
-    a, b = normal.alias("a"), normal.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.col("a.__band").alias("__band"),
-        F.lit(False).alias("__star"),
-    )
-    return pairs.unionByName(star), masks
-
-
-def first_match_keep(
-    band_col: Column,
-    star_col: Column,
-    matches: Sequence[Column],
-    hot_mask: Column | None = None,
-    hub_mask: Column | None = None,
-) -> Column:
-    """Keep predicate turning ``banded_pair_source`` output into exactly
-    the distinct pair set, evaluated inside the verify join where both
-    docs' signatures are in hand.
-
-    ``matches[j]`` must be true iff the pair shares its band-j bucket
-    (derivable from the two signatures: equal slice ⟺ equal bucket key;
-    when true, the shared bucket's hot/hub flags are identical on both
-    sides, so doc_a's masks suffice). A normal row survives only at the
-    pair's FIRST matching non-hot band — the unique band the in-cap
-    self-join emits it from that the old ``distinct`` would have kept.
-    A star row (doc_a = hub) survives only at its first band where the
-    pair shares a HOT bucket whose hub is doc_a, and only if no non-hot
-    band matches at all (else the normal row already covers the pair) —
-    reproducing exactly the old ``union(pairs, star).distinct()`` set.
-    """
-    bands = len(matches)
-    if hot_mask is None:
-        hot = [F.lit(False)] * bands
-        hub = [F.lit(False)] * bands
-    else:
-        hot = [
-            F.shiftright(hot_mask, j).bitwiseAND(F.lit(1)) == F.lit(1)
-            for j in range(bands)
-        ]
-        hub = [
-            F.shiftright(hub_mask, j).bitwiseAND(F.lit(1)) == F.lit(1)
-            for j in range(bands)
-        ]
-    first_normal: Column | None = None
-    first_star: Column | None = None
-    for j in range(bands):
-        n_cond = matches[j] & ~hot[j]
-        s_cond = matches[j] & hot[j] & hub[j]
-        first_normal = (
-            F.when(n_cond, j) if first_normal is None else first_normal.when(n_cond, j)
-        )
-        first_star = (
-            F.when(s_cond, j) if first_star is None else first_star.when(s_cond, j)
-        )
-    keep_normal = (~star_col) & (band_col == first_normal)
-    keep_star = star_col & first_normal.isNull() & (band_col == first_star)
-    return keep_normal | keep_star
-
-
-def _sig_band_matches(
-    sig_a: Column, sig_b: Column, bands: int, rows_per_band: int
-) -> list[Column]:
-    """matches[j] for MinHash signatures: the band-j slices are equal
-    (element-wise over the band's rows) ⟺ the band-j bucket keys built
-    by band_key_array are equal (integer values joined with ':' render
-    identically iff equal)."""
-    out = []
-    for j in range(bands):
-        cond: Column | None = None
-        for r in range(rows_per_band):
-            eq = sig_a[j * rows_per_band + r] == sig_b[j * rows_per_band + r]
-            cond = eq if cond is None else cond & eq
-        out.append(cond)
-    return out
-
-
-def _attach_masks(side: DataFrame, masks: DataFrame | None) -> DataFrame:
-    """Left-join the per-doc band masks onto a signature relation (NULL →
-    0: a doc absent from the banding has no hot bands)."""
-    if masks is None:
-        return side
-    return side.join(masks, "doc_id", "left").withColumns(
-        {
-            "__hot_mask": F.coalesce(F.col("__hot_mask"), F.lit(0).cast("long")),
-            "__hub_mask": F.coalesce(F.col("__hub_mask"), F.lit(0).cast("long")),
-        }
-    )
-
-
 def minhash_dedup(
     docs: DataFrame,
     num_perm: int = 16,
@@ -814,10 +644,9 @@ def minhash_dedup(
     corpora where one degenerate bucket would otherwise go quadratic.
 
     Candidate dedup stays the explicit ``distinct`` (bucket_candidates).
-    The r15 first-match-in-verify alternative (banded_pair_source +
-    first_match_keep — dedup as a free filter where both signatures
-    meet) was implemented and MEASURED here, and rejected for this
-    operator: the verify payload is the per-doc shingle-hash array
+    The first-match-in-verify alternative (dedup as a free filter where
+    both signatures meet) was implemented, MEASURED and rejected, and its
+    code deleted: the verify payload is the per-doc shingle-hash array
     (~1 KB/doc), and evaluating the dedup in the verify join forces that
     payload through the join at PRE-dedup multiplicity — on the 125 k
     mirror corpus 6 M candidate rows × two ~1 KB arrays of joined-row

@@ -288,19 +288,6 @@ def phash_band_keys(
     )
 
 
-def _phash_band_matches(a: Column, b: Column, bands: int) -> list[Column]:
-    """matches[j] for 64-bit fingerprints: the band-j bit slices are
-    equal ⟺ the band-j bucket keys built by phash_band_keys are equal
-    (same unsigned-shift + mask extraction)."""
-    width = 64 // bands
-    mask = F.lit(-1) if bands == 1 else F.lit((1 << width) - 1)
-    return [
-        F.shiftrightunsigned(a, j * width).bitwiseAND(mask)
-        == F.shiftrightunsigned(b, j * width).bitwiseAND(mask)
-        for j in range(bands)
-    ]
-
-
 def phash_pairs(
     hashes: DataFrame,
     max_hamming: int = 3,
@@ -322,9 +309,8 @@ def phash_pairs(
     too — even with this operator's 8-byte payload it ran ~30% slower at
     bench scale (the capped path's per-doc hot/hub mask regroup + a third
     evaluation of the bucket-size window subtree cost more than the saved
-    distinct of narrow pair rows). The machinery stays in
-    operators/dedup.py, equivalence-pinned, as the documented
-    alternative for shapes where the distinct dominates."""
+    distinct of narrow pair rows). The path was rejected on that
+    measurement and its code deleted."""
     from pyspark import StorageLevel
 
     from .dedup import bucket_candidates

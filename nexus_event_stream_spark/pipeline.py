@@ -553,6 +553,10 @@ def prepare_training_corpus(
         # and the anti-join's small side is bounded by the docs that
         # appear in a verified pair — usually orders of magnitude below
         # the corpus, broadcastable far longer (guide §3.1/§2.4).
+        # Edge ids: a NULL-id document never forms a pair and never
+        # matches the anti-join key, so it is kept; rows sharing an id
+        # are kept or dropped together, and the anti-join never
+        # multiplies them (pinned in tests/test_pipeline.py).
         comp = connected_components(pairs)
         non_keepers = comp.filter(F.col("node") != F.col("comp")).select(
             F.col("node").alias(id_col)

@@ -27,13 +27,6 @@ from nexus_event_stream_spark.operators.clustering import (
     zorder_write,
 )
 
-#: r15 two-tier suite (VERDICT r14 #6): this module is a multi-second
-#: store/protocol INTEGRATION suite — the dominant cost of the ~93-min
-#: full run that outgrew the driver's verification window. Skipped by
-#: default (SPARK_GRAFT_FULL_TESTS=1 runs it); the operators it
-#: exercises keep fast-tier unit coverage in the sibling suites.
-pytestmark = pytest.mark.slow
-
 
 def _py_zvalue(bins: list[int], bits: int) -> int:
     z = 0
@@ -279,6 +272,61 @@ def test_zorder_append_extends_layout_and_manifest(spark, sf_dir, tmp_path):
     assert got.count() == want.count() > 0
     assert stats["files_total"] == 8
     assert spark.read.parquet(path).count() == ev.count()
+
+
+def test_write_and_append_bin_each_column_once(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The Z-key and the occupancy counts share one bin column per
+    clustered column: a write or an append builds the 64-leaf bin tree
+    once per column, and the counts it persists are the exact bisect_right
+    histogram (and row count) of the rows it wrote."""
+    import bisect
+
+    from nexus_event_stream_spark.operators import clustering
+
+    built = []
+    real_bin_expr = clustering._bin_expr
+
+    def counting_bin_expr(v, boundaries):
+        built.append(len(boundaries))
+        return real_bin_expr(v, boundaries)
+
+    monkeypatch.setattr(clustering, "_bin_expr", counting_bin_expr)
+    cols = ["user_id", "ts"]
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    base, batch = ev.filter("event_id % 3 != 0"), ev.filter("event_id % 3 = 0")
+    path = str(tmp_path / "binned_once")
+
+    boundaries = zorder_write(base, path, cols, n_files=4)
+    assert len(built) == len(cols)
+
+    def histogram(df):
+        rows = df.select(
+            F.col("user_id").cast("double"), F.unix_micros("ts").cast("double")
+        ).collect()
+        occ = {c: [0] * 64 for c in cols}
+        for r in rows:
+            for c, v in zip(cols, r):
+                occ[c][0 if v is None else bisect.bisect_right(boundaries[c], v)] += 1
+        return occ, len(rows)
+
+    state = clustering.read_layout_state(path)
+    want_base, n_base = histogram(base)
+    assert state["n_base_rows"] == n_base
+    assert state["base_occupancy"] == want_base
+
+    built.clear()
+    zorder_append(batch, path, cols, n_files=2)
+    assert len(built) == len(cols)
+    after = clustering.read_layout_state(path)
+    want_batch, n_batch = histogram(batch)
+    for c in cols:
+        added = [a - b for a, b in zip(after["occupancy"][c], state["occupancy"][c])]
+        assert added == want_batch[c], c
+    assert after["n_appended_rows"] == state["n_appended_rows"] + n_batch
+    assert after["base_occupancy"] == state["base_occupancy"]
+    assert after["n_base_rows"] == n_base
 
 
 def test_stale_manifest_keeps_unknown_files(spark, sf_dir, tmp_path):

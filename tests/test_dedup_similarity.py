@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from nexus_event_stream_spark.operators.dedup import (
     exact_dedup,
     minhash_dedup,
@@ -295,79 +293,3 @@ def test_ann_multiprobe_improves_recall(spark):
     assert all(multi[v] >= c - 1e-12 for v, c in plain.items())
     # with 6 bits over 500 vectors, hamming-1 probing should actually help
     assert sum(multi[v] > plain[v] + 1e-12 for v in plain) > 0
-
-
-def test_first_match_machinery_equals_distinct_spec(spark):
-    """r15 shared candidate machinery (banded_pair_source +
-    first_match_keep — candidate dedup as a verify-join filter instead
-    of a global ``distinct``; live in phash_pairs/video_phash_pairs):
-    pin its pair set bit-equal to the bucket_candidates spec on MinHash
-    banding over a randomized corpus with near-dup clusters, empties,
-    NULLs, and — at cap=3 — forced hot buckets where the star fallback
-    and its first-match dedup must agree too. (minhash_dedup itself
-    keeps the distinct path: its verify payload is array-sized and the
-    measured multiplicity cost outweighs the saved exchange — see the
-    operator docstring — but the machinery must stay correct for any
-    signature family.)"""
-    import random
-
-    from nexus_event_stream_spark.operators.dedup import (
-        _attach_masks,
-        _sig_band_matches,
-        band_key_array,
-        banded_pair_source,
-        bucket_candidates,
-        first_match_keep,
-    )
-
-    random.seed(7)
-    vocab = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta"]
-    rows, did = [], 0
-    for _ in range(30):
-        base = " ".join(random.choices(vocab, k=random.randint(0, 12)))
-        for m in range(random.randint(1, 8)):
-            t = (f"r{m} " + base) if random.random() < 0.7 else base
-            rows.append((did, t))
-            did += 1
-    rows += [(did, ""), (did + 1, None), (did + 2, "a"), (did + 3, "a")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = minhash_signatures(docs).persist()
-
-    def spec(cap):
-        keyed = sigs.select(
-            "doc_id", F.explode(band_key_array(4, 4)).alias("bucket")
-        )
-        return sorted(
-            map(tuple, bucket_candidates(keyed, cap).collect())
-        )
-
-    def first_match(cap):
-        keyed = sigs.select(
-            "doc_id",
-            F.posexplode(band_key_array(4, 4)).alias("__band", "bucket"),
-        )
-        cands, masks = banded_pair_source(keyed, cap)
-        side = _attach_masks(sigs.select("doc_id", "sig"), masks)
-        keep = first_match_keep(
-            F.col("__band"),
-            F.col("__star"),
-            _sig_band_matches(F.col("sa.sig"), F.col("sb.sig"), 4, 4),
-            F.col("sa.__hot_mask") if masks is not None else None,
-            F.col("sa.__hub_mask") if masks is not None else None,
-        )
-        out = (
-            cands.join(side.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-            .join(
-                sigs.select("doc_id", "sig").alias("sb"),
-                F.col("doc_b") == F.col("sb.doc_id"),
-            )
-            .filter(keep)
-            .select("doc_a", "doc_b")
-        )
-        return sorted(map(tuple, out.collect()))
-
-    for cap in (None, 3, 200):
-        got = first_match(cap)
-        assert got == spec(cap), f"pair set diverged at cap={cap}"
-        assert len(got) == len(set(got))
-    sigs.unpersist()

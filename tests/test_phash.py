@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from nexus_event_stream_spark.functions.jpeg import synthesize_jpeg
 from nexus_event_stream_spark.functions.png import encode_png, resize_nearest
@@ -17,7 +16,6 @@ from nexus_event_stream_spark.operators.phash import (
     dhash_bytes,
     perceptual_dedup,
     perceptual_hashes,
-    phash_band_keys,
     phash_pairs,
 )
 
@@ -606,88 +604,3 @@ def test_video_decoder_fn_may_return_ndarray(spark):
     assert rows[0].decoded and rows[0].n_frames == 5
     assert rows[1].decoded and rows[1].vhash != rows[0].vhash
     assert not rows[2].decoded
-
-
-def test_phash_first_match_equals_distinct_spec(spark):
-    """r15 machinery pin: the first-match-in-verify candidate dedup
-    (banded_pair_source + first_match_keep + _phash_band_matches) must
-    produce exactly phash_pairs' pair set (phash_pairs itself keeps the
-    measured-faster bucket_candidates distinct path — see its docstring)
-    on fingerprints with planted near-dups and — at cap=4 — forced hot
-    buckets (exact-dup clusters larger than the cap)."""
-    import random
-
-    from nexus_event_stream_spark.operators.dedup import (
-        _attach_masks,
-        banded_pair_source,
-        first_match_keep,
-    )
-    from nexus_event_stream_spark.operators.phash import (
-        _bands_for,
-        _phash_band_matches,
-    )
-
-    rng = random.Random(3)
-    rows = []
-    for i in range(200):
-        base = rng.getrandbits(63)
-        rows.append((i * 10, base))
-        if i % 3 == 0:  # near-dup: ≤2 flipped bits
-            v = base ^ (1 << rng.randrange(63)) ^ (1 << rng.randrange(63))
-            rows.append((i * 10 + 1, v))
-        if i % 11 == 0:  # exact-dup cluster → hot bucket at small caps
-            for m in range(6):
-                rows.append((i * 10 + 2 + m, base))
-    hashes = spark.createDataFrame(
-        [(i, h, True) for i, h in rows],
-        "media_id long, phash long, decoded boolean",
-    )
-
-    def first_match(cap):
-        bands = _bands_for(3)
-        sigs = (
-            hashes.filter(F.col("phash").isNotNull())
-            .select(F.col("media_id").alias("doc_id"), "phash")
-            .persist()
-        )
-        keyed = sigs.select(
-            "doc_id",
-            F.posexplode(phash_band_keys("phash", bands)).alias(
-                "__band", "bucket"
-            ),
-        )
-        cands, masks = banded_pair_source(keyed, cap)
-        side_a = _attach_masks(sigs, masks)
-        keep = first_match_keep(
-            F.col("__band"),
-            F.col("__star"),
-            _phash_band_matches(F.col("ha.phash"), F.col("hb.phash"), bands),
-            F.col("ha.__hot_mask") if masks is not None else None,
-            F.col("ha.__hub_mask") if masks is not None else None,
-        )
-        ham = F.bit_count(F.col("ha.phash").bitwiseXOR(F.col("hb.phash")))
-        out = (
-            cands.join(side_a.alias("ha"), F.col("doc_a") == F.col("ha.doc_id"))
-            .join(sigs.alias("hb"), F.col("doc_b") == F.col("hb.doc_id"))
-            .filter(keep)
-            .select(
-                F.col("doc_a").alias("id_a"),
-                F.col("doc_b").alias("id_b"),
-                ham.alias("hamming"),
-            )
-            .filter(F.col("hamming") <= 3)
-        )
-        got = sorted(map(tuple, out.collect()))
-        sigs.unpersist()
-        return got
-
-    for cap in (None, 4, 100):
-        spec = sorted(
-            map(
-                tuple,
-                phash_pairs(hashes, max_hamming=3, max_bucket_size=cap).collect(),
-            )
-        )
-        got = first_match(cap)
-        assert got == spec, f"pair set diverged at cap={cap}"
-        assert len(got) == len({(a, b) for a, b, _ in got})

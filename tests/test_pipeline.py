@@ -66,6 +66,43 @@ def test_stages_toggle_off(spark, sf_dir):
     assert corpus is docs
 
 
+def test_near_dedup_anti_join_null_and_duplicate_ids(spark):
+    """The near-dup stage drops the non-keeper ids with a left anti-join.
+    A NULL-id document never forms a pair and never matches the anti-join
+    key, so it is kept; rows sharing an id are kept or dropped together,
+    and never multiplied."""
+    t1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    t3 = "red orange yellow green blue indigo violet white black grey"
+    t7 = "one two three four five six seven eight nine ten eleven"
+    t11 = "spark shuffle planner joins broadcast exchange codegen stage"
+    docs = spark.createDataFrame(
+        [
+            (1, t1),
+            (2, t1),  # near-dup of 1 → dropped
+            (None, t1),  # NULL id, same text as 1 → kept
+            (3, t3),
+            (5, t3),  # both id-5 rows duplicate 3 → dropped together
+            (5, t3),
+            (7, t7),  # both id-7 rows are the keeper → kept, once each
+            (7, t7),
+            (9, t7),  # near-dup of 7 → dropped
+            (11, t11),
+        ],
+        "doc_id long, text string",
+    )
+    recipe = CorpusRecipe(
+        quality=False,
+        redact_pii=False,
+        exact_dedup=False,
+        near_dedup=True,
+        minhash_params={"threshold": 0.5},
+    )
+    corpus, _ = prepare_training_corpus(docs, recipe)
+    ids = [r.doc_id for r in corpus.collect()]
+    assert ids.count(None) == 1
+    assert sorted(i for i in ids if i is not None) == [1, 3, 7, 7, 11]
+
+
 def test_pii_stage_rewrites_text(spark):
     docs = spark.createDataFrame(
         [(1, "mail me at a.b@example.com ok five words here", "s")],

@@ -3,9 +3,9 @@
 Usage: python tools/r15_plans.py <suffix> [sf_dir]
 Writes plans/r15/<query>_<suffix>.txt for each declared query.
 
-Unlike tools/r14_plans.py this captures ``df.explain(mode="formatted")``
-output via stdout redirection instead of reaching into private classic-mode
-JVM internals (``df._jdf.queryExecution()``) — ADVICE r14: the JVM path
+This captures ``df.explain(mode="formatted")`` output via stdout
+redirection instead of reaching into private classic-mode JVM internals
+(``df._jdf.queryExecution()``) — ADVICE r14: the JVM path
 does not exist under Spark Connect and can break across versions.
 """
 
