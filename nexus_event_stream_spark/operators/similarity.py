@@ -305,83 +305,6 @@ def ann_topk_per_vector(
     )
 
 
-def topk_vs_queries_numpy(
-    corpus: DataFrame,
-    queries: list[tuple[int, list[float]]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k of many query vectors at once — Arrow/numpy path.
-
-    The expression-based operators win when similarities must be
-    bit-deterministic and oracle-verified; when raw throughput matters
-    (batch scoring thousands of queries against a 100 TB corpus), a
-    mapInPandas GEMM is the right tool: each Arrow batch of corpus vectors
-    becomes one numpy (batch×d)·(d×q) matrix multiply — SIMD, no per-pair
-    lambda interpretation. Per-partition top-k heaps merge into a global
-    top-k, so only k·q·partitions rows leave the executors.
-
-    ``queries`` is a small driver-side list [(query_id, vector)] — ships to
-    workers inside the closure as one dense matrix.
-    Output: query_id, vec_id, cosine (float64), rank.
-    """
-    import numpy as np
-
-    qids = np.array([q[0] for q in queries], dtype=np.int64)
-    qmat = np.array([q[1] for q in queries], dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1)
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField(id_col, T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            sims = (m @ qmat.T) / (
-                np.linalg.norm(m, axis=1)[:, None] * qnorm[None, :]
-            )
-            # per-partition prune: keep the top k+1 rows per query — one
-            # extra because the query's own corpus row (cosine 1.0) may
-            # occupy a slot and is filtered out downstream; pruning to
-            # exactly k could drop the true k-th neighbor
-            frames = []
-            kk = k + 1
-            for j in range(len(qids)):
-                col = sims[:, j]
-                keep = (
-                    np.argpartition(col, -kk)[-kk:]
-                    if len(col) > kk
-                    else np.arange(len(col))
-                )
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[j],
-                            id_col: pdf[id_col].to_numpy()[keep],
-                            "cosine": col[keep],
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    scored = spread(corpus).select(id_col, vec_col).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.filter(F.col("query_id") != F.col(id_col))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
 def ivf_train_centroids(
     embeddings: DataFrame,
     n_centroids: int = 16,

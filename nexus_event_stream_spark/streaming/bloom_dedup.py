@@ -65,6 +65,7 @@ from nexus_event_stream_spark.operators.bloom import (
     bloom_params,
 )
 from nexus_event_stream_spark.streaming.dedup import SignatureStore
+from nexus_event_stream_spark.streaming.projection import _bucket_expr
 
 #: posting schema for the exact tier: the digest IS the bucket key.
 EXACT_POSTING_SCHEMA = T.StructType(
@@ -215,12 +216,10 @@ def exact_suppress_and_register(
             candidates = batch_kept.filter(
                 bloom_might_contain(bf, F.col("__digest"))
             )
-        from nexus_event_stream_spark.streaming.dedup import _bucket_of
-
         touched = sorted(
             r[0]
             for r in candidates.select(
-                _bucket_of(F.col("__digest"), store.n_buckets).alias("b")
+                _bucket_expr(store.n_buckets, "__digest").alias("b")
             )
             .distinct()
             .collect()
@@ -298,7 +297,7 @@ def compact_exact_store(
     cur = store.current()
     if cur is None:
         return version
-    df = store.read_buckets(spark, sorted(cur["buckets"], key=int))
+    df = store.read_buckets(spark, list(cur["manifest"]))
     if df is None:
         _commit_bloom_reset(store, fpr)
         return version
@@ -403,12 +402,10 @@ def paragraph_suppress_and_register(
                 .select(F.col("h").alias("bucket_key"))
                 .distinct()
             )
-        from nexus_event_stream_spark.streaming.dedup import _bucket_of
-
         touched = sorted(
             r[0]
             for r in cand.select(
-                _bucket_of(F.col("bucket_key"), store.n_buckets).alias("b")
+                _bucket_expr(store.n_buckets, "bucket_key").alias("b")
             )
             .distinct()
             .collect()

@@ -1,8 +1,11 @@
 """Pluggable pointer-commit backends for the snapshot stores.
 
-Every store in this package (ParquetViewStore, BucketedViewStore,
-SignatureStore) publishes state the same way: write data directories
-nobody references yet, then atomically swing a single JSON pointer file.
+Every snapshot store in this package publishes state the same way:
+write data directories nobody references yet, then atomically swing a
+single JSON pointer file. ``ParquetViewStore`` and ``BucketedViewStore``
+(``streaming/projection.py``) each own one such pointer; the rollup,
+BM25, embedding and signature stores delegate their layout, commit and
+vacuum to a ``BucketedViewStore``.
 HOW that pointer swing is made atomic is deployment-specific:
 
 - On a POSIX filesystem (this sandbox, HDFS with a rename-consistent

@@ -10,13 +10,14 @@ path (streaming/projection.py):
 
 - beside the accepted corpus lives a ``SignatureStore``: the LSH posting
   relation (band-bucket key → doc, with the doc's hashed shingle set for
-  exact-Jaccard verification), laid out in ``n_buckets`` key-hash bucket
-  directories exactly like ``BucketedViewStore`` — a micro-batch probes
-  ONLY the bucket directories its own band keys hash into;
+  exact-Jaccard verification), held in a ``BucketedViewStore`` keyed on
+  the band key — ``n_buckets`` key-hash bucket directories of append
+  segments, so a micro-batch probes ONLY the bucket directories its own
+  band keys hash into;
 - each ``foreachBatch``: signatures for the batch (narrow map) →
   within-batch LSH self-join (earlier id wins) → bucket-pruned equi-join
   against the store's touched buckets → exact-Jaccard verify → survivors
-  registered back into the store (append-only bucket write + atomic
+  registered back into the store (one append segment + atomic
   pointer commit);
 - the (run_token, epoch) guard from the projection path makes replayed
   micro-batches no-ops on the store, and the suppression decision itself
@@ -29,10 +30,10 @@ Scale notes: the posting row carries the shingle set once per band
 (bands× write amplification) so the verify join needs no second hop back
 to a shingle table; at extreme scale store shingles once per doc and
 verify via a doc-keyed join instead — the probe shape is unchanged.
-Bucket directories accumulate one file per epoch; ``append`` schedules
-``compact()`` automatically once any bucket's version list exceeds
-``compact_threshold``, folding the history back to one directory per
-bucket.
+Buckets accumulate one segment per epoch; ``append`` schedules
+``compact()`` automatically once any bucket's segment list exceeds
+``compact_threshold``, folding the history back to one version per
+bucket (``write_buckets``).
 
 Exactly-once corpus: the survivor append shares the store's pointer
 commit — survivors are written to ``corpus_root/v={version}`` BEFORE the
@@ -47,23 +48,23 @@ in the corpus exactly once, never zero or two times.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nexus_event_stream_spark.streaming.commit import PosixRenameBackend
-from nexus_event_stream_spark.streaming.replay import ReplayGuard
+from nexus_event_stream_spark.streaming.projection import (
+    BucketedViewStore,
+    ParquetViewStore,
+    _bucket_expr,
+)
 from nexus_event_stream_spark.operators.dedup import (
     band_key_array,
     jaccard,
     minhash_lsh_candidates,
     minhash_signatures,
 )
-
-POINTER = "_CURRENT"
 
 #: On-disk posting schema. ``shingles`` is the doc's hashed shingle set
 #: (the exact-Jaccard verify input); ``run``/``epoch`` scope replay.
@@ -78,34 +79,30 @@ POSTING_SCHEMA = T.StructType(
 )
 
 
-def _bucket_of(key_col, n_buckets: int):
-    """Stable bucket-key → directory bucket (same recipe as the view
-    store's key bucketing)."""
-    return F.coalesce(
-        F.pmod(F.xxhash64(key_col), F.lit(n_buckets)), F.lit(0)
-    ).cast("int")
-
-
 class SignatureStore:
-    """Append-only bucketed LSH posting store with an atomic pointer.
+    """Append-only bucketed LSH posting store: a thin delegate over
+    ``BucketedViewStore`` keyed on ``bucket_key``, the way the rollup,
+    BM25 and embedding stores are.
 
-    Layout: ``v={version}/__bucket={k}/*.parquet``. The pointer maps each
-    bucket to the LIST of versions holding its postings (append-only: a
-    bucket accumulates one entry per epoch that touched it); reading a
-    bucket unions those directories and nothing else. Commit is a single
-    atomic pointer rename; a crash between data write and commit leaves
-    an unreferenced directory, never a corrupt store.
+    Layout, commit and vacuum are the inner store's: postings land as
+    append segments (``append_buckets``), the manifest maps each bucket
+    to the list of versions holding its postings, and reading a bucket
+    unions those directories and nothing else. Commit is a single atomic
+    pointer rename; a crash between data write and commit leaves an
+    unreferenced directory, never a corrupt store.
 
     The same pointer also publishes the survivor CORPUS (when ``append``
     is given one): corpus directories live under a caller-supplied root
-    as ``v={version}`` and only pointer-listed versions are visible —
-    that one rename is what makes the corpus append exactly-once.
+    as ``v={version}`` and only pointer-listed versions
+    (``corpus_versions``) are visible — that one rename is what makes
+    the corpus append exactly-once. Queued takedowns (``tombstones``)
+    ride the pointer too.
 
-    ``compact_threshold`` bounds manifest growth: once a bucket's version
+    ``compact_threshold`` bounds manifest growth: once a bucket's segment
     list exceeds it, ``append`` triggers a PARTIAL ``compact()`` of just
-    the offending buckets (mirroring BucketedViewStore's fold-and-vacuum
-    policy), so per-bucket file counts stay O(threshold) over unbounded
-    epochs while compaction cost tracks the hot buckets, not the store.
+    the offending buckets, so per-bucket file counts stay O(threshold)
+    over unbounded epochs while compaction cost tracks the hot buckets,
+    not the store.
     """
 
     def __init__(
@@ -117,8 +114,6 @@ class SignatureStore:
         schema: T.StructType | None = None,
         max_tombstones: int = 512,
     ):
-        self.path = path
-        self.n_buckets = n_buckets
         self.compact_threshold = compact_threshold
         #: when the queued-takedown list carried by the pointer exceeds
         #: this, the next ``append`` escalates to a FULL compact (the
@@ -132,28 +127,29 @@ class SignatureStore:
         #: whole store with their own payload columns, as long as
         #: ``bucket_key`` (string) and ``doc_id`` (long) stay: bucketing,
         #: probes, tombstones, forget, and compaction key on those two.
-        self.schema = schema or POSTING_SCHEMA
-        self.backend = backend or PosixRenameBackend()
-        #: idempotent replay discipline (streaming/replay.py): replayed
-        #: signature registration self-suppresses (an exact replay has
-        #: Jaccard 1), so cross-run re-applies are harmless and only
-        #: positively-identified same-run replays skip the append.
-        self.guard = ReplayGuard("idempotent")
-        os.makedirs(path, exist_ok=True)
+        #: Replay discipline is the inner store's idempotent guard
+        #: (streaming/replay.py): replayed signature registration
+        #: self-suppresses (an exact replay has Jaccard 1), so cross-run
+        #: re-applies are harmless and only positively-identified
+        #: same-run replays skip the append.
+        self._store = BucketedViewStore(
+            path,
+            n_buckets=n_buckets,
+            backend=backend,
+            schema=schema or POSTING_SCHEMA,
+            key_col="bucket_key",
+        )
+        self.path = path
+        self.n_buckets = n_buckets
+        self.backend = self._store.backend
+        self.schema = self._store.schema
+        self.guard = self._store.guard
         #: paths touched by the most recent probe — lets tests pin the
         #: "no full rescan" contract.
         self.last_probe_paths: list[str] | None = None
 
-    # -- pointer ------------------------------------------------------------
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.path, POINTER)
-
     def current(self) -> dict | None:
-        return self.backend.read(self._pointer_path())
-
-    def _commit(self, pointer: dict, expected: dict | None = None) -> None:
-        self.backend.commit(self._pointer_path(), pointer, expected)
+        return self._store.current()
 
     # -- read ---------------------------------------------------------------
 
@@ -164,14 +160,7 @@ class SignatureStore:
         probe, forget counting, compaction's fold — sees them as already
         gone the moment the forget pointer lands."""
         cur = self.current()
-        if cur is None:
-            self.last_probe_paths = []
-            return None
-        paths = [
-            os.path.join(self.path, f"v={ver}", f"__bucket={b}")
-            for b in buckets
-            for ver in cur["buckets"].get(str(b), [])
-        ]
+        paths = self._store._bucket_paths(cur["manifest"], buckets) if cur else []
         self.last_probe_paths = paths
         if not paths:
             return None
@@ -193,7 +182,7 @@ class SignatureStore:
         corpus: DataFrame | None = None,
         corpus_root: str | None = None,
     ) -> int:
-        """Append posting rows as a new version of their buckets — and,
+        """Append posting rows as a new segment of their buckets — and,
         when ``corpus``/``corpus_root`` are given, the epoch's survivor
         rows as ``corpus_root/v={version}`` — then commit BOTH with one
         atomic pointer rename. Epoch metadata is recorded even when the
@@ -202,20 +191,15 @@ class SignatureStore:
         Exactly-once: every data write targets a directory named by the
         not-yet-committed version with ``mode("overwrite")``, so a replay
         after a crash-before-commit rewrites the identical directories
-        instead of appending beside them.
+        instead of appending beside them. The corpus version, the queue
+        and the commit all come from ONE pointer read: a writer that
+        moved the pointer in between (a takedown, a sweep) makes the
+        commit fail under a compare-and-swap backend, never lose its
+        update.
         """
         cur = self.current()
         version = (cur["version"] + 1) if cur else 0
-        out = os.path.join(self.path, f"v={version}")
-        (
-            postings.withColumn(
-                "__bucket", _bucket_of(F.col("bucket_key"), self.n_buckets)
-            )
-            .write.mode("overwrite")
-            .partitionBy("__bucket")
-            .parquet(out)
-        )
-        corpus_versions = list(cur.get("corpus_versions", [])) if cur else []
+        corpus_versions = list((cur or {}).get("corpus_versions", []))
         if corpus is not None and corpus_root is not None:
             cdir = os.path.join(corpus_root, f"v={version}")
             corpus.write.mode("overwrite").parquet(cdir)
@@ -223,39 +207,28 @@ class SignatureStore:
             # readers open an empty directory
             if any(n.endswith(".parquet") for n in os.listdir(cdir)):
                 corpus_versions.append(version)
-        buckets = dict(cur["buckets"]) if cur else {}
-        written = [
-            name.split("=", 1)[1]
-            for name in os.listdir(out)
-            if name.startswith("__bucket=")
-        ]
-        for b in written:
-            buckets[b] = buckets.get(b, []) + [version]
-        self._commit(
-            {
-                "version": version,
-                "epoch": epoch,
-                "run_token": run_token,
-                "buckets": buckets,
-                "corpus_versions": corpus_versions,
-                # queued takedowns ride through every append
-                "tombstones": (cur or {}).get("tombstones", []),
-            },
-            expected=cur,
+        tombstones = (cur or {}).get("tombstones", [])
+        self._store.append_buckets(
+            postings,
+            None,  # band keys were not counted: the inner store sizes the write
+            epoch,
+            run_token,
+            # queued takedowns ride through every append
+            extra={"corpus_versions": corpus_versions, "tombstones": tombstones},
+            cur=cur,
         )
         if self.compact_threshold is not None:
             over = [
-                b for b, v in buckets.items() if len(v) > self.compact_threshold
+                b
+                for b, v in self.current()["manifest"].items()
+                if isinstance(v, list) and len(v) > self.compact_threshold
             ]
             if over:
                 # fold ONLY the offending buckets: scheduled compaction
                 # cost tracks the hot buckets' data, not the whole store,
                 # keeping the per-epoch contract O(batch + touched)
                 self.compact(postings.sparkSession, buckets=over)
-        if (
-            self.max_tombstones is not None
-            and len((cur or {}).get("tombstones", [])) > self.max_tombstones
-        ):
+        if self.max_tombstones is not None and len(tombstones) > self.max_tombstones:
             # the takedown queue outgrew its budget: a FULL compact is
             # the one sweep that physically removes victims and clears
             # the queue — partial folds never may (victims can hold
@@ -278,89 +251,58 @@ class SignatureStore:
         )
 
     def compact(self, spark: SparkSession, buckets=None) -> int | None:
-        """Fold the version history of ``buckets`` (default: all) into one
-        directory each (bounds per-bucket file counts after many epochs).
+        """Fold the segment lists of ``buckets`` (default: all) into one
+        version each (bounds per-bucket file counts after many epochs).
 
         Partial compaction is what ``append`` schedules: only buckets
-        whose version list exceeded the threshold fold, so the cost is
+        whose segment list exceeded the threshold fold, so the cost is
         proportional to THOSE buckets' data — the store is never rescanned
-        wholesale inside a micro-batch. Version directories are vacuumed
-        only once no bucket references them. ``last_probe_paths`` (the
-        batch-probe test pin) is preserved across the internal read.
-        Single-writer, like view-store compaction; returns the new
-        version or None if nothing to fold.
+        wholesale inside a micro-batch. Single-writer, like view-store
+        compaction; returns the new version or None if nothing to fold.
         """
         cur = self.current()
-        if cur is None or not cur["buckets"]:
+        if cur is None or not cur["manifest"]:
             return None
-        targets = sorted(
-            cur["buckets"] if buckets is None else
-            [b for b in buckets if b in cur["buckets"]],
-            key=int,
-        )
-        if not targets:
-            return None
+        targets = [
+            b for b in (cur["manifest"] if buckets is None else map(str, buckets))
+            if b in cur["manifest"]
+        ]
+        return self._fold(spark, cur, targets)
+
+    def _fold(
+        self, spark: SparkSession, cur: dict, targets, drop: DataFrame | None = None
+    ) -> int | None:
+        """Rewrite ``targets``' postings as one version each through the
+        tombstone-filtered read, less ``drop``'s doc ids, in one
+        ``write_buckets`` commit. A FULL fold has physically removed every
+        queued victim, so it clears the queue; a partial fold keeps it
+        (victims may still have postings in unfolded buckets). Epoch,
+        token and corpus references ride through, and the commit is
+        conditional on ``cur`` itself: an append or takedown that landed
+        after the caller's read fails the fold under a compare-and-swap
+        backend instead of being folded away. ``last_probe_paths``
+        (the batch-probe test pin) is preserved across the read."""
         saved_probe = self.last_probe_paths
-        df = self.read_buckets(spark, targets)
+        df = self.read_buckets(spark, targets) if targets else None
         self.last_probe_paths = saved_probe
         if df is None:
             return None
-        version = cur["version"] + 1
-        out = os.path.join(self.path, f"v={version}")
-        (
-            df.withColumn("__bucket", _bucket_of(F.col("bucket_key"), self.n_buckets))
-            .write.mode("overwrite")
-            .partitionBy("__bucket")
-            .parquet(out)
-        )
-        written = {
-            name.split("=", 1)[1]
-            for name in os.listdir(out)
-            if name.startswith("__bucket=")
-        }
-        new_buckets = dict(cur["buckets"])
-        for b in targets:
-            # folded buckets now live solely in the new version; a target
-            # whose postings were all empty keeps an empty list
-            new_buckets[b] = [version] if b in written else []
-        # a FULL fold (every bucket rewritten through the tombstone-
-        # filtered read) has physically removed every queued victim —
-        # clear the queue; a partial fold keeps it (victims may still
-        # have postings in unfolded buckets)
-        full = set(targets) == set(cur["buckets"])
-        self._commit(
-            {
-                "version": version,
-                "epoch": cur.get("epoch"),
-                "run_token": cur.get("run_token"),
-                "buckets": new_buckets,
+        if drop is not None:
+            df = df.join(F.broadcast(drop), "doc_id", "left_anti")
+        full = set(targets) == set(cur["manifest"])
+        return self._store.write_buckets(
+            df,
+            [int(b) for b in targets],
+            cur.get("epoch"),
+            cur.get("run_token"),
+            extra={
                 # corpus dirs live under their own root and are NOT part
                 # of posting compaction — carry the references through
                 "corpus_versions": cur.get("corpus_versions", []),
                 "tombstones": [] if full else cur.get("tombstones", []),
             },
-            expected=cur,
+            cur=cur,
         )
-        _vacuum_with_grace(self.path, cur, new_buckets, version)
-        return version
-
-
-def _vacuum_with_grace(
-    path: str, prev: dict, new_buckets: dict, version: int
-) -> None:
-    """Sweep version dirs no longer referenced — EXCEPT those the
-    PREVIOUS pointer referenced (one-generation grace window, the
-    BucketedViewStore._vacuum discipline): a concurrent reader that
-    resolved its paths from the previous pointer must not fail
-    mid-read. Previous-generation dirs fall out on the NEXT sweep,
-    when no live pointer can still name them."""
-    referenced = {ver for vs in new_buckets.values() for ver in vs} | {version}
-    prev_refs = {ver for vs in prev["buckets"].values() for ver in vs}
-    prev_refs.add(prev["version"])
-    keep = referenced | prev_refs
-    for name in os.listdir(path):
-        if name.startswith("v=") and int(name.split("=", 1)[1]) not in keep:
-            shutil.rmtree(os.path.join(path, name), ignore_errors=True)
 
 
 def forget_signatures(
@@ -373,28 +315,27 @@ def forget_signatures(
 
     ``mode='tombstone'`` (default) amortizes that sweep: victims queue
     in the pointer (one read-only counting job + one atomic pointer
-    swing, zero data writes), ``read_buckets`` anti-filters the queue
-    so every probe treats them as gone IMMEDIATELY, and the next FULL
-    ``store.compact()`` folds the physical removal in for free — N
-    takedowns between compactions cost one sweep. ``mode='sweep'``
-    rewrites now, clearing the queue alongside.
+    swing through the inner store, zero data writes), ``read_buckets``
+    anti-filters the queue so every probe treats them as gone
+    IMMEDIATELY, and the next FULL ``store.compact()`` folds the
+    physical removal in for free — N takedowns between compactions cost
+    one sweep. ``mode='sweep'`` rewrites now (the same fold as
+    ``compact``, less the victims), clearing the queue alongside.
 
     Returns how many distinct victim docs held postings. A forgotten
     doc stops suppressing future near-duplicates of itself; docs it
     already suppressed stay suppressed. Epoch/token/corpus references
     ride through unchanged (the survivor CORPUS dirs are the caller's
     to redact — this sweeps the signature index)."""
-    import os
-
     if mode not in ("tombstone", "sweep"):
         raise ValueError(f"mode must be tombstone|sweep, got {mode!r}")
     cur = store.current()
-    if cur is None or not cur["buckets"]:
+    if cur is None or not cur["manifest"]:
         return 0
     ids = [int(d) for d in doc_ids]
     if not ids:
         return 0
-    targets = sorted(cur["buckets"], key=int)
+    targets = list(cur["manifest"])
     # read_buckets already excludes previously-queued victims — a
     # repeated takedown request counts (and queues) nothing twice
     df = store.read_buckets(spark, targets)
@@ -408,48 +349,16 @@ def forget_signatures(
         .distinct()
         .collect()
     ]
-    n_gone = len(present)
-    if not n_gone:
+    if not present:
         return 0
     if mode == "tombstone":
         queued = sorted(
             {int(d) for d in cur.get("tombstones", [])} | set(present)
         )
-        store._commit({**cur, "tombstones": queued}, expected=cur)
-        return n_gone
-    kept = df.join(F.broadcast(idf), "doc_id", "left_anti")
-    version = cur["version"] + 1
-    out = os.path.join(store.path, f"v={version}")
-    (
-        kept.withColumn(
-            "__bucket", _bucket_of(F.col("bucket_key"), store.n_buckets)
-        )
-        .write.mode("overwrite")
-        .partitionBy("__bucket")
-        .parquet(out)
-    )
-    written = {
-        name.split("=", 1)[1]
-        for name in os.listdir(out)
-        if name.startswith("__bucket=")
-    }
-    new_buckets = {
-        b: ([version] if b in written else []) for b in cur["buckets"]
-    }
-    store._commit(
-        {
-            "version": version,
-            "epoch": cur.get("epoch"),
-            "run_token": cur.get("run_token"),
-            "buckets": new_buckets,
-            "corpus_versions": cur.get("corpus_versions", []),
-            # the filtered read swept queued victims too — queue clears
-            "tombstones": [],
-        },
-        expected=cur,
-    )
-    _vacuum_with_grace(store.path, cur, new_buckets, version)
-    return int(n_gone)
+        store._store._commit({**cur, "tombstones": queued}, expected=cur)
+    else:
+        store._fold(spark, cur, targets, drop=idf)
+    return len(present)
 
 
 def suppress_and_register(
@@ -525,7 +434,7 @@ def suppress_and_register(
     touched = sorted(
         r[0]
         for r in posts.select(
-            _bucket_of(F.col("bucket_key"), store.n_buckets).alias("b")
+            _bucket_expr(store.n_buckets, "bucket_key").alias("b")
         )
         .distinct()
         .collect()
@@ -692,8 +601,6 @@ def label_store(path: str, backend=None):
     """A ParquetViewStore carrying the cluster labeling instead of the
     LWW state — same versioned snapshots, pointer commit, replay guard
     and backend injection, different schema."""
-    from nexus_event_stream_spark.streaming.projection import ParquetViewStore
-
     return ParquetViewStore(path, backend=backend, schema=LABEL_SCHEMA)
 
 
@@ -738,8 +645,6 @@ def bucketed_label_store(path: str, n_buckets: int = 64, backend=None):
     """Labels bucketed BY COMPONENT LABEL (``comp``): a relabel rewrites
     only the buckets housing affected components — the write-cost shape
     ``update_cluster_labels_bucketed`` needs at scale."""
-    from nexus_event_stream_spark.streaming.projection import BucketedViewStore
-
     return BucketedViewStore(
         path, n_buckets=n_buckets, backend=backend,
         schema=LABEL_SCHEMA, key_col="comp",
@@ -797,7 +702,6 @@ def update_cluster_labels_bucketed(
         connected_components,
         merge_edges,
     )
-    from nexus_event_stream_spark.streaming.projection import _bucket_expr
 
     if mode not in ("auto", "bucketed", "full"):
         raise ValueError(f"mode must be auto|bucketed|full, got {mode!r}")

@@ -74,10 +74,8 @@ from nexus_event_stream_spark.operators.exact_substr import (
     _window_starts,
     _winnow_anchors,
 )
-from nexus_event_stream_spark.streaming.dedup import (
-    SignatureStore,
-    _bucket_of,
-)
+from nexus_event_stream_spark.streaming.dedup import SignatureStore
+from nexus_event_stream_spark.streaming.projection import _bucket_expr
 
 #: anchor postings: the anchor hash (stringified int64) IS the bucket
 #: key; ``pos`` is the anchor's token offset in the accepted document.
@@ -241,9 +239,7 @@ def substr_suppress_and_register(
         touched = sorted(
             r[0]
             for r in batch_keys.select(
-                _bucket_of(F.col("bucket_key"), store.anchors.n_buckets).alias(
-                    "b"
-                )
+                _bucket_expr(store.anchors.n_buckets, "bucket_key").alias("b")
             )
             .distinct()
             .collect()
@@ -343,10 +339,12 @@ def substr_suppress_and_register(
                 {
                     r[0]
                     for r in hist_pos.select(
-                        _bucket_of(
-                            F.col("__hist_id").cast("string"),
-                            store.docs.n_buckets,
-                        ).alias("b")
+                        F.col("__hist_id").cast("string").alias("bucket_key")
+                    )
+                    .select(
+                        _bucket_expr(store.docs.n_buckets, "bucket_key").alias(
+                            "b"
+                        )
                     )
                     .distinct()
                     .collect()

@@ -55,7 +55,8 @@ from nexus_event_stream_spark.operators.phash import (
     phash_band_keys,
 )
 
-from .dedup import SignatureStore, _bucket_of, run_token_for
+from .dedup import SignatureStore, run_token_for
+from .projection import _bucket_expr
 
 __all__ = [
     "PHASH_POSTING_SCHEMA",
@@ -234,7 +235,7 @@ def suppress_and_register_media(
     touched = sorted(
         r[0]
         for r in posts.select(
-            _bucket_of(F.col("bucket_key"), store.n_buckets).alias("b")
+            _bucket_expr(store.n_buckets, "bucket_key").alias("b")
         )
         .distinct()
         .collect()

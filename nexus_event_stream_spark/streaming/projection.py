@@ -48,6 +48,10 @@ logger = logging.getLogger(__name__)
 
 POINTER = "_CURRENT"
 
+#: ``cur`` default of the bucketed write paths: read the pointer at
+#: write time (a caller's pinned snapshot may legitimately be None).
+_READ_POINTER = object()
+
 #: Tiebreak making the per-key order total when updated_at collides.
 _TIEBREAK = ("created_at", "title")
 
@@ -382,61 +386,46 @@ class BucketedViewStore:
         epoch: int | None = None,
         run_token: str | None = None,
         extra: dict | None = None,
+        cur=_READ_POINTER,
     ) -> int:
         """Write ``df`` (rows of the touched buckets only) as the new
-        version of those buckets and commit the stitched manifest.
-        ``extra`` rides the SAME atomic pointer commit — store-level
-        scalars (e.g. the search index's exact corpus counters) must
-        never land in a second commit, or a crash between the two leaves
-        data committed with its bookkeeping lost."""
-        cur = self.current()
-        version = (cur["version"] + 1) if cur else 0
-        out = os.path.join(self.path, f"v={version}")
-        self._write_partitioned(
-            df, out, min(self.n_buckets, max(1, len(touched)))
+        version of those buckets and commit the stitched manifest: each
+        touched bucket is REPLACED by the new version, or dropped when
+        none of its rows survived (every key deleted upstream — e.g. a
+        compaction). ``extra`` rides the SAME atomic pointer commit —
+        store-level scalars (e.g. the search index's exact corpus
+        counters) must never land in a second commit, or a crash between
+        the two leaves data committed with its bookkeeping lost.
+
+        ``cur`` is the pointer snapshot (None: no pointer yet) the caller
+        built ``extra`` from; the commit is conditional on THAT snapshot,
+        so a writer that moved the pointer in between raises
+        ``CommitConflictError`` under a compare-and-swap backend instead
+        of losing its update. Default: read the pointer here."""
+        return self._write_segment(
+            df, touched, epoch, run_token, extra, cur, append=False
         )
-        manifest = dict(cur["manifest"]) if cur else {}
-        written = {
-            name.split("=", 1)[1]
-            for name in os.listdir(out)
-            if name.startswith("__bucket=")
-        }
-        for b in touched:
-            if str(b) in written:
-                manifest[str(b)] = version
-            else:
-                # every key in the bucket was deleted upstream (compaction):
-                # the bucket's data is gone — drop it from the manifest
-                manifest.pop(str(b), None)
-        prev_refs = sorted(_manifest_versions(cur["manifest"]) | {cur["version"]}) if cur else []
-        self._commit(
-            {
-                **(extra or {}),
-                "version": version,
-                "epoch": epoch,
-                "run_token": run_token,
-                "manifest": manifest,
-                "prev_refs": prev_refs,
-            },
-            expected=cur,
-        )
-        self._vacuum(manifest, prev_refs, version)
-        return version
 
     def append_buckets(
         self,
         df: DataFrame,
-        touched: list[int],
+        touched: list[int] | None,
         epoch: int | None = None,
         run_token: str | None = None,
         extra: dict | None = None,
+        cur=_READ_POINTER,
     ) -> int:
-        """APPEND ``df``'s rows as a new SEGMENT of the touched buckets —
-        nothing already stored is read or rewritten; the manifest keeps a
-        segment-version LIST per bucket and reads union the segments.
+        """APPEND ``df``'s rows as a new SEGMENT of every bucket they land
+        in — nothing already stored is read or rewritten; the manifest
+        keeps a segment-version LIST per bucket and reads union the
+        segments. ``touched`` only sizes the aligned write (one task per
+        bucket); None — the caller did not count its rows' buckets —
+        runs one task per core. The manifest records every bucket the
+        write produced, so a ``touched`` list that undercounts the rows'
+        buckets cannot drop any of them. ``cur`` as in ``write_buckets``.
 
-        The additive-store write path (BM25 postings and any
-        append-only substrate): per-epoch write cost is O(|batch|)
+        The additive-store write path (BM25 postings, signature postings
+        and any append-only substrate): per-epoch write cost is O(|batch|)
         regardless of how many buckets the batch touches — a merge-store
         ``write_buckets`` would re-read and re-write every touched
         bucket's history, which for natural-language postings (every
@@ -446,28 +435,41 @@ class BucketedViewStore:
         collapses a bucket's list back to one owning version. Same
         pointer-last atomic commit, same vacuum safety (every listed
         segment version stays referenced)."""
-        cur = self.current()
+        return self._write_segment(
+            df, touched, epoch, run_token, extra, cur, append=True
+        )
+
+    def _write_segment(
+        self, df, touched, epoch, run_token, extra, cur, append: bool
+    ) -> int:
+        if cur is _READ_POINTER:
+            cur = self.current()
         version = (cur["version"] + 1) if cur else 0
         out = os.path.join(self.path, f"v={version}")
-        self._write_partitioned(
-            df, out, min(self.n_buckets, max(1, len(touched)))
+        n_parts = (
+            df.sparkSession.sparkContext.defaultParallelism
+            if touched is None
+            else max(1, len(touched))
         )
+        self._write_partitioned(df, out, min(self.n_buckets, n_parts))
         manifest = dict(cur["manifest"]) if cur else {}
         written = {
             name.split("=", 1)[1]
             for name in os.listdir(out)
             if name.startswith("__bucket=")
         }
-        for b in touched:
-            if str(b) not in written:
-                continue  # nothing landed in this bucket — no segment
-            prev = manifest.get(str(b))
-            if prev is None:
-                manifest[str(b)] = [version]
-            elif isinstance(prev, list):
-                manifest[str(b)] = prev + [version]
-            else:
-                manifest[str(b)] = [prev, version]
+        if append:
+            for b in sorted(written, key=int):
+                prev = manifest.get(b, [])
+                manifest[b] = (prev if isinstance(prev, list) else [prev]) + [
+                    version
+                ]
+        else:
+            for b in map(str, touched):
+                if b in written:
+                    manifest[b] = version
+                else:
+                    manifest.pop(b, None)
         prev_refs = sorted(_manifest_versions(cur["manifest"]) | {cur["version"]}) if cur else []
         self._commit(
             {

@@ -31,9 +31,10 @@ Scale notes: per-epoch probe cost is |batch| × |touched centroid
 lists| — ``n_clusters`` is the knob that keeps lists short (SemDeDup
 uses 50k clusters at web scale; lists shrink linearly as k grows).
 Registered buckets are REWRITTEN per touched epoch (read ∪ append →
-write, the BucketedViewStore contract) — correct and atomic; an
-append-only per-bucket layout like SignatureStore's is the upgrade path
-if bucket rewrite bandwidth ever dominates (the probe already reads the
+write, BucketedViewStore.write_buckets) — correct and atomic; the same
+store's append segments (``append_buckets``, what SignatureStore and the
+BM25 index use) are the upgrade path if bucket rewrite bandwidth ever
+dominates (the probe already reads the
 full touched list either way).
 """
 
@@ -44,7 +45,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from ..operators.semdedup import _normalized, semantic_dedup_pairs
 from ..operators.similarity import ivf_assign
 from .projection import BucketedViewStore, _bucket_expr
-from .replay import ReplayGuard
 
 __all__ = ["EmbeddingStore", "suppress_and_register_semantic", "start_semantic_ingest"]
 
@@ -72,10 +72,11 @@ class EmbeddingStore:
             schema=_STORE_SCHEMA,
             key_col="centroid_id",
         )
-        #: idempotent replay discipline (streaming/replay.py): a replayed
-        #: registration self-suppresses at cosine 1, so only
-        #: positively-identified same-run replays skip the append.
-        self.guard = ReplayGuard("idempotent")
+        #: the inner store's idempotent replay discipline
+        #: (streaming/replay.py): a replayed registration self-suppresses
+        #: at cosine 1, so only positively-identified same-run replays
+        #: skip the append.
+        self.guard = self._store.guard
 
     @property
     def n_buckets(self) -> int:

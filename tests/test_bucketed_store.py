@@ -22,13 +22,6 @@ from nexus_event_stream_spark.streaming.projection import (
     apply_batch_bucketed,
 )
 
-#: r15 two-tier suite (VERDICT r14 #6): this module is a multi-second
-#: store/protocol INTEGRATION suite — the dominant cost of the ~93-min
-#: full run that outgrew the driver's verification window. Skipped by
-#: default (SPARK_GRAFT_FULL_TESTS=1 runs it); the operators it
-#: exercises keep fast-tier unit coverage in the sibling suites.
-pytestmark = pytest.mark.slow
-
 TS = dt.datetime(2026, 2, 23, 15, 0, tzinfo=dt.timezone.utc)
 
 

@@ -162,7 +162,7 @@ def test_probe_reads_are_bucket_pruned(spark, store_dir, backend):
     run_epoch(spark, store, [(100, _words(rng, 20))], epoch=1)
     touched = store.anchors.last_probe_paths
     assert touched is not None
-    all_buckets = set(store.anchors.current()["buckets"])
+    all_buckets = set(store.anchors.current()["manifest"])
     probed = {p.rsplit("__bucket=", 1)[1] for p in touched}
     # a 9-anchor batch cannot legitimately touch every bucket of a
     # 12-doc x 40-token store spread over 32 buckets
