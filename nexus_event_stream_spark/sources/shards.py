@@ -31,10 +31,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nexus_event_stream_spark.operators.sampling import hash_bucket
-from nexus_event_stream_spark.streaming.commit import PosixRenameBackend
+from nexus_event_stream_spark.streaming.commit import PointerStore
 
 
-class ShardedCorpusWriter:
+class ShardedCorpusWriter(PointerStore):
     """Versioned sharded parquet corpus under ``root`` with an atomically
     committed manifest pointer (``manifest.json``)."""
 
@@ -43,16 +43,11 @@ class ShardedCorpusWriter:
     EPOCH_TAIL = 64
 
     def __init__(self, root: str, n_shards: int = 16, backend=None) -> None:
+        # the replay guard is the manifest's own ``max_epoch`` (see append)
+        super().__init__(os.path.join(root, "manifest.json"), backend)
         self.root = root
         self.n_shards = n_shards
-        self.backend = backend or PosixRenameBackend()
         os.makedirs(root, exist_ok=True)
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.root, "manifest.json")
-
-    def current(self) -> dict | None:
-        return self.backend.read(self._pointer_path())
 
     def _snapshot_dir(self, cur: dict | None, version: int | None = None) -> str:
         """Resolve a committed snapshot version to its directory name.
@@ -149,7 +144,7 @@ class ShardedCorpusWriter:
             # list, superseded wholesale by this snapshot)
             manifest["prev_version"] = cur["version"]
             manifest["prev_dir"] = self._snapshot_dir(cur)
-        self.backend.commit(self._pointer_path(), manifest, expected=cur)
+        self._commit(manifest, expected=cur)
         return manifest
 
     def append(self, df: DataFrame, epoch: int, key_col: str = "doc_id") -> dict:
@@ -213,7 +208,7 @@ class ShardedCorpusWriter:
             "max_epoch": epoch,
             "epoch_rows": epoch_rows,
         }
-        self.backend.commit(self._pointer_path(), manifest, expected=cur)
+        self._commit(manifest, expected=cur)
         return manifest
 
     def compact(self, spark: SparkSession, key_col: str = "doc_id") -> dict:

@@ -64,7 +64,7 @@ from nexus_event_stream_spark.operators.similarity import (
     ivf_pq_topk,
     pq_build_index,
 )
-from nexus_event_stream_spark.streaming.commit import PosixRenameBackend
+from nexus_event_stream_spark.streaming.commit import PointerStore
 
 POINTER = "_CURRENT"
 _QUANTIZERS = "_quantizers.json"
@@ -80,7 +80,7 @@ class SnapshotExpiredError(RuntimeError):
     fresh ``current()``."""
 
 
-class PQIndexStore:
+class PQIndexStore(PointerStore):
     """Append-only IVF-PQ index over a streaming embedding corpus."""
 
     def __init__(
@@ -93,8 +93,11 @@ class PQIndexStore:
         vec_col: str = "embedding",
         training_profile=None,
     ):
+        #: the idempotent guard only catches a same-token replay of an
+        #: epoch that committed no directory; replay of a written epoch is
+        #: caught by directory membership (see ``append``)
+        super().__init__(os.path.join(path, POINTER), backend, "idempotent")
         self.path = path
-        self.backend = backend or PosixRenameBackend()
         self.id_col = id_col
         self.vec_col = vec_col
         os.makedirs(path, exist_ok=True)
@@ -153,14 +156,6 @@ class PQIndexStore:
                 )
             os.replace(tmp, qpath)
 
-    # -- pointer ------------------------------------------------------------
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.path, POINTER)
-
-    def current(self) -> dict | None:
-        return self.backend.read(self._pointer_path())
-
     @property
     def n_indexed(self) -> int:
         """DERIVED from the pointer's per-directory row counts (ADVICE
@@ -210,15 +205,10 @@ class PQIndexStore:
             self.path, "epochs", f"run-{run_token or 'anon'}",
             f"epoch-{epoch}",
         )
-        if cur is not None:
-            if out in cur["dirs"]:
-                return False  # this exact (run, epoch) already committed
-            if (
-                run_token is not None
-                and cur.get("run_token") == run_token
-                and epoch <= cur["epoch"]
-            ):
-                return False  # replayed empty epoch (no dir to match)
+        if cur is not None and out in cur["dirs"]:
+            return False  # this exact (run, epoch) already committed
+        if self.guard.is_replay(cur, epoch, run_token):
+            return False  # replayed empty epoch (no dir to match)
         rows = pq_build_index(
             batch, self.centroids, self.codebooks, self.id_col, self.vec_col
         )
@@ -231,43 +221,29 @@ class PQIndexStore:
             for d in cur["dirs"]:
                 if d not in dir_rows:
                     dir_rows[d] = batch.sparkSession.read.parquet(d).count()
-        if n_batch == 0:
-            # still advance the epoch so the replay guard stays monotone
-            self.backend.commit(
-                self._pointer_path(),
-                {
-                    "epoch": epoch,
-                    "run_token": run_token,
-                    "dirs": cur["dirs"] if cur else [],
-                    "dir_rows": dir_rows,
-                    "n_vectors": sum(dir_rows.values()),
-                    # pointer keys must ride EVERY commit site or they
-                    # silently drop on the next append (the pointer-dict
-                    # rule) — losing prev_dirs here would leak every
-                    # compact's grace set forever
-                    "prev_dirs": (cur or {}).get("prev_dirs", []),
-                },
-                expected=cur,
-            )
-            return True
-        # deterministic content: a crash-replay overwrite reproduces the
-        # same rows, so a half-written dir can never corrupt the index
-        (
-            rows.write.mode("overwrite")
-            .partitionBy("centroid_id")
-            .parquet(out)
-        )
         dirs = list(cur["dirs"]) if cur else []
-        dirs.append(out)
-        dir_rows[out] = n_batch
-        self.backend.commit(
-            self._pointer_path(),
+        if n_batch:
+            # deterministic content: a crash-replay overwrite reproduces
+            # the same rows, so a half-written dir can never corrupt the
+            # index
+            (
+                rows.write.mode("overwrite")
+                .partitionBy("centroid_id")
+                .parquet(out)
+            )
+            dirs.append(out)
+            dir_rows[out] = n_batch
+        # an empty epoch still commits, so the replay guard stays monotone
+        self._commit(
             {
                 "epoch": epoch,
                 "run_token": run_token,
                 "dirs": dirs,
                 "dir_rows": dir_rows,
                 "n_vectors": sum(dir_rows.values()),
+                # pointer keys must ride every commit or they silently
+                # drop on the next append — losing prev_dirs would leak
+                # every compact's grace set forever
                 "prev_dirs": (cur or {}).get("prev_dirs", []),
             },
             expected=cur,
@@ -386,8 +362,7 @@ class PQIndexStore:
             if not (set(old_dirs) - set(dr))
             else spark.read.parquet(out).count()  # pre-upgrade pointer
         )
-        self.backend.commit(
-            self._pointer_path(),
+        self._commit(
             {
                 **cur,
                 "dirs": [out],
@@ -450,41 +425,47 @@ class PQIndexStore:
 # into a NEW generation dir (the old generation keeps serving the whole
 # time — nothing in its dir is touched) → swing the generation pointer
 # last (expected=-guarded) → vacuum generations older than the previous.
-# This is the same attempt-unique-dir + pointer-last discipline as every
-# other store in the package (serving_layout.py, shards.py); the
-# quantizer-mismatch guard in PQIndexStore is what FORCES the new-path
+# That is ``PointerStore.publish`` (streaming/commit.py), the same
+# attempt-unique-dir + pointer-last helper serving_layout.py publishes
+# through; the quantizer-mismatch guard in PQIndexStore is what FORCES the new-path
 # design — codes are only comparable under their own codebooks, so an
 # in-place retrain is structurally impossible rather than merely unwise.
 
 GEN_POINTER = "_GENERATION"
 
 
-def _gen_pointer_path(root: str) -> str:
-    return os.path.join(root, GEN_POINTER)
+def _generations(root: str, backend=None) -> PointerStore:
+    return PointerStore(os.path.join(root, GEN_POINTER), backend)
 
 
 def active_index(root: str, backend=None, **store_kwargs) -> PQIndexStore:
     """The PQIndexStore of the current generation — readers resolve the
     generation pointer first, so an in-flight retrain (building a new
     generation dir) is invisible until its pointer swing."""
-    backend = backend or PosixRenameBackend()
-    ptr = backend.read(_gen_pointer_path(root))
+    gens = _generations(root, backend)
+    ptr = gens.current()
     if ptr is None:
         raise ValueError(f"no committed index generation at {root}")
     return PQIndexStore(
-        os.path.join(root, ptr["dir"]), backend=backend, **store_kwargs
+        os.path.join(root, ptr["dir"]), backend=gens.backend, **store_kwargs
     )
 
 
-def _train_generation(
+def _publish_generation(
+    root: str,
+    gens: PointerStore,
+    ptr: dict | None,
     corpus: DataFrame,
     n_centroids: int,
     m: int,
     ksub: int,
     iters: int,
+    id_col: str,
     vec_col: str,
     profile=None,
-):
+) -> PQIndexStore:
+    """Train quantizers + profile on ``corpus``, encode it into a fresh
+    attempt-unique generation dir, and publish it over ``ptr``."""
     from nexus_event_stream_spark.operators.drift import embedding_profile
     from nexus_event_stream_spark.operators.similarity import (
         ivf_train_centroids,
@@ -502,7 +483,30 @@ def _train_generation(
     prof = profile if profile is not None else embedding_profile(
         corpus, vec_col=vec_col
     )
-    return cents, books, prof
+    gen = ptr["gen"] + 1 if ptr else 1
+    dirname = f"gen-{gen}-{uuid.uuid4().hex[:8]}"
+
+    def encode(out: str) -> PQIndexStore:
+        store = PQIndexStore(
+            out,
+            cents,
+            books,
+            backend=gens.backend,
+            id_col=id_col,
+            vec_col=vec_col,
+            training_profile=prof,
+        )
+        store.append(corpus, epoch=0, run_token="rebuild" if ptr else "seed")
+        return store
+
+    return gens.publish(
+        root,
+        dirname,
+        encode,
+        {"gen": gen, "dir": dirname, "prev_dir": ptr["dir"] if ptr else None},
+        expected=ptr,
+        prefix="gen-",
+    )
 
 
 def create_generation(
@@ -519,33 +523,16 @@ def create_generation(
     """Train quantizers + profile on the seed corpus, encode it as
     generation 1, and commit the generation pointer. The returned store
     then absorbs micro-batches via ``append`` / ``foreach_batch``."""
-    backend = backend or PosixRenameBackend()
-    ptr = backend.read(_gen_pointer_path(root))
+    gens = _generations(root, backend)
+    ptr = gens.current()
     if ptr is not None:
         raise ValueError(
             f"{root} already has generation {ptr['gen']} — use "
             "retrain_swap to supersede it"
         )
-    cents, books, prof = _train_generation(
-        corpus, n_centroids, m, ksub, iters, vec_col
+    return _publish_generation(
+        root, gens, None, corpus, n_centroids, m, ksub, iters, id_col, vec_col
     )
-    dirname = f"gen-1-{uuid.uuid4().hex[:8]}"
-    store = PQIndexStore(
-        os.path.join(root, dirname),
-        cents,
-        books,
-        backend=backend,
-        id_col=id_col,
-        vec_col=vec_col,
-        training_profile=prof,
-    )
-    store.append(corpus, epoch=0, run_token="seed")
-    backend.commit(
-        _gen_pointer_path(root),
-        {"gen": 1, "dir": dirname, "prev_dir": None},
-        expected=None,
-    )
-    return store
 
 
 def retrain_swap(
@@ -569,36 +556,19 @@ def retrain_swap(
     caller pass an already-computed embedding profile of ``corpus``
     (maybe_retrain computed one for the trigger) instead of re-scanning.
     Returns ``{"gen", "dir", "n_vectors"}``."""
-    backend = backend or PosixRenameBackend()
-    ptr = backend.read(_gen_pointer_path(root))
+    gens = _generations(root, backend)
+    ptr = gens.current()
     if ptr is None:
         raise ValueError(f"no committed index generation at {root}")
-    cents, books, prof = _train_generation(
-        corpus, n_centroids, m, ksub, iters, vec_col, profile=profile
+    store = _publish_generation(
+        root, gens, ptr, corpus, n_centroids, m, ksub, iters, id_col,
+        vec_col, profile=profile,
     )
-    gen = ptr["gen"] + 1
-    dirname = f"gen-{gen}-{uuid.uuid4().hex[:8]}"
-    store = PQIndexStore(
-        os.path.join(root, dirname),
-        cents,
-        books,
-        backend=backend,
-        id_col=id_col,
-        vec_col=vec_col,
-        training_profile=prof,
-    )
-    store.append(corpus, epoch=0, run_token="rebuild")
-    new_ptr = {"gen": gen, "dir": dirname, "prev_dir": ptr["dir"]}
-    try:
-        backend.commit(_gen_pointer_path(root), new_ptr, expected=ptr)
-    except Exception:
-        shutil.rmtree(os.path.join(root, dirname), ignore_errors=True)
-        raise
-    keep = {dirname, new_ptr["prev_dir"]}
-    for name in os.listdir(root):
-        if name.startswith("gen-") and name not in keep:
-            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-    return {"gen": gen, "dir": dirname, "n_vectors": store.n_indexed}
+    return {
+        "gen": ptr["gen"] + 1,
+        "dir": os.path.basename(store.path),
+        "n_vectors": store.n_indexed,
+    }
 
 
 def maybe_retrain(

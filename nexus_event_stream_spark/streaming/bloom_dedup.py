@@ -64,6 +64,7 @@ from nexus_event_stream_spark.operators.bloom import (
     bloom_might_contain,
     bloom_params,
 )
+from nexus_event_stream_spark.streaming.commit import PointerStore
 from nexus_event_stream_spark.streaming.dedup import SignatureStore
 from nexus_event_stream_spark.streaming.projection import _bucket_expr
 
@@ -99,8 +100,12 @@ def _bloom_path(store: SignatureStore) -> str:
     return os.path.join(store.path, BLOOM_POINTER)
 
 
+def _sidecar(store: SignatureStore) -> PointerStore:
+    return PointerStore(_bloom_path(store), store.backend)
+
+
 def read_bloom(store: SignatureStore) -> BloomFilter | None:
-    cur = store.backend.read(_bloom_path(store))
+    cur = _sidecar(store).current()
     if cur is None:
         return None
     return BloomFilter(
@@ -111,16 +116,15 @@ def read_bloom(store: SignatureStore) -> BloomFilter | None:
 def _commit_bloom(
     store: SignatureStore, bf: BloomFilter, n_keys: int
 ) -> None:
-    prev = store.backend.read(_bloom_path(store))
-    store.backend.commit(
-        _bloom_path(store),
+    sidecar = _sidecar(store)
+    sidecar._commit(
         {
             "m_bits": bf.m_bits,
             "k": bf.k,
             "words": list(bf.words),
             "n_keys": n_keys,
         },
-        expected=prev,
+        expected=sidecar.current(),
     )
 
 
@@ -260,7 +264,7 @@ def exact_suppress_and_register(
             batch_bf = bloom_build(
                 surv_keys, "bucket_key", m_bits=bf.m_bits, k=bf.k
             )
-            prev_meta = store.backend.read(_bloom_path(store)) or {"n_keys": 0}
+            prev_meta = _sidecar(store).current() or {"n_keys": 0}
             n_new = surv_keys.count()
             _commit_bloom(
                 store, _or_words(bf, batch_bf), prev_meta["n_keys"] + n_new
@@ -491,7 +495,7 @@ def paragraph_suppress_and_register(
                 m, k = bloom_params(expected_keys, fpr)
                 bf = BloomFilter(m_bits=m, k=k, words=tuple([0] * (m // 64)))
             batch_bf = bloom_build(novel, "bucket_key", m_bits=bf.m_bits, k=bf.k)
-            prev_meta = store.backend.read(_bloom_path(store)) or {"n_keys": 0}
+            prev_meta = _sidecar(store).current() or {"n_keys": 0}
             n_new = novel.count()
             # filter FIRST (crash leaves a superset — stray candidates,
             # never admitted duplicates), store append second

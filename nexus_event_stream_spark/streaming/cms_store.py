@@ -46,13 +46,12 @@ from nexus_event_stream_spark.operators.cms import (
     cms_build,
     cms_merge,
 )
-from nexus_event_stream_spark.streaming.commit import PosixRenameBackend
-from nexus_event_stream_spark.streaming.replay import ReplayGuard
+from nexus_event_stream_spark.streaming.commit import PointerStore
 
 POINTER = "_cms.json"
 
 
-class CMSStore:
+class CMSStore(PointerStore):
     """Pointer-committed running CMS with the additive replay guard
     (addition is NOT idempotent — a replayed epoch must be suppressed,
     never re-added; same discipline as the rollup store)."""
@@ -60,21 +59,16 @@ class CMSStore:
     def __init__(self, path: str, *, w: int, d: int, backend=None):
         if w <= 0 or d <= 0:
             raise ValueError("w and d must be positive")
+        super().__init__(os.path.join(path, POINTER), backend, "additive")
         self.path = path
         self.w = w
         self.d = d
-        self.backend = backend or PosixRenameBackend()
-        self.guard = ReplayGuard("additive")
         os.makedirs(path, exist_ok=True)
 
-    def _pointer_path(self) -> str:
-        return os.path.join(self.path, POINTER)
-
-    def current(self) -> dict | None:
-        return self.backend.read(self._pointer_path())
-
     def current_sketch(self) -> CMSketch:
-        cur = self.current()
+        return self._sketch(self.current())
+
+    def _sketch(self, cur: dict | None) -> CMSketch:
         if cur is None:
             return CMSketch(
                 w=self.w,
@@ -104,11 +98,10 @@ class CMSStore:
         the committed sketch unchanged (no double-count)."""
         cur = self.current()
         if self.guard.is_replay(cur, epoch, run_token):
-            return self.current_sketch()
+            return self._sketch(cur)
         batch_sk = cms_build(batch, key, w=self.w, d=self.d, weight=weight)
-        merged = cms_merge(self.current_sketch(), batch_sk)
-        self.backend.commit(
-            self._pointer_path(),
+        merged = cms_merge(self._sketch(cur), batch_sk)
+        self._commit(
             {
                 "epoch": epoch,
                 "run_token": run_token,
@@ -133,8 +126,7 @@ class CMSStore:
         replay guard stays armed."""
         cur = self.current()
         sk = cms_build(corpus, key, w=self.w, d=self.d, weight=weight)
-        self.backend.commit(
-            self._pointer_path(),
+        self._commit(
             {
                 "epoch": (cur or {}).get("epoch"),
                 "run_token": (cur or {}).get("run_token"),

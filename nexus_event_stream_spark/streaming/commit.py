@@ -1,11 +1,16 @@
-"""Pluggable pointer-commit backends for the snapshot stores.
+"""The pointer-store base and its pluggable commit backends.
 
 Every snapshot store in this package publishes state the same way:
 write data directories nobody references yet, then atomically swing a
-single JSON pointer file. ``ParquetViewStore`` and ``BucketedViewStore``
-(``streaming/projection.py``) each own one such pointer; the rollup,
-BM25, embedding and signature stores delegate their layout, commit and
-vacuum to a ``BucketedViewStore``.
+single JSON pointer file. ``PointerStore`` is that protocol, written
+once: the pointer path and the default backend, ``current()``, the one
+commit seam ``_commit(pointer, expected)``, the store's ``ReplayGuard``,
+the directory ``vacuum`` and the attempt-directory ``publish``. The view
+stores (``streaming/projection.py``), the CMS store, the drift monitor,
+the ANN index and its generation pointer, the serving-layout pointer,
+the Bloom sidecar and the sharded corpus sink are ``PointerStore``s; the
+rollup, BM25, embedding and signature stores delegate to a
+``BucketedViewStore``. So every store commits through one seam.
 HOW that pointer swing is made atomic is deployment-specific:
 
 - On a POSIX filesystem (this sandbox, HDFS with a rename-consistent
@@ -23,17 +28,20 @@ HOW that pointer swing is made atomic is deployment-specific:
   corruption.
 
 The stores default to ``PosixRenameBackend`` (correct here) and accept a
-``backend=`` injection; the exactly-once replay pins in
-tests/test_bucketed_store.py and tests/test_streaming_dedup.py run under
-BOTH backends. See SCALE.md for the deployment mapping.
+``backend=`` injection; the crash-replay pins in
+tests/test_bucketed_crash.py run every store under BOTH backends. See
+SCALE.md for the deployment mapping.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 import time
+
+from nexus_event_stream_spark.streaming.replay import ReplayGuard
 
 
 class CommitConflictError(RuntimeError):
@@ -118,3 +126,70 @@ class ConditionalPutBackend:
         finally:
             os.close(fd)
             os.unlink(lock)
+
+
+class PointerStore:
+    """One JSON pointer file committed through a backend — the skeleton
+    every snapshot store shares.
+
+    ``pointer_path`` names the pointer FILE (a store whose pointer sits
+    beside its data joins its directory with the file name).
+    ``guard_mode`` declares the store's replay discipline
+    (streaming/replay.py); None means the store keeps its own check.
+    """
+
+    def __init__(
+        self, pointer_path: str, backend=None, guard_mode: str | None = None
+    ):
+        self._pointer = pointer_path
+        self.backend = backend or PosixRenameBackend()
+        self.guard = None if guard_mode is None else ReplayGuard(guard_mode)
+
+    def _pointer_path(self) -> str:
+        return self._pointer
+
+    def current(self) -> dict | None:
+        return self.backend.read(self._pointer)
+
+    def _commit(self, pointer: dict, expected: dict | None = None) -> None:
+        """The one commit seam: ``expected`` is the pointer the caller
+        read, so under a compare-and-swap backend a writer that moved it
+        in between surfaces as ``CommitConflictError``."""
+        self.backend.commit(self._pointer, pointer, expected)
+
+    def adopt(self) -> None:
+        """Clear the committed-epoch watermark in one atomic commit, so a
+        NEW query (fresh checkpoint, epoch ids restarting at 0) can feed
+        the existing state. Only valid when the new stream is disjoint
+        from what is stored; see ``ReplayGuard.adopt``."""
+        cur = self.current()
+        if cur is not None:
+            self._commit(self.guard.adopt(cur), expected=cur)
+
+    def publish(
+        self, root: str, dirname: str, write, pointer: dict, expected, prefix: str
+    ):
+        """Write ``root/dirname`` (an attempt-unique name) with
+        ``write(out)``, swing the pointer to ``pointer`` against
+        ``expected``, and return what ``write`` returned. A refused or
+        failed commit removes the attempt directory, since nothing
+        references it. After the swing, ``prefix`` directories other than
+        this one and ``pointer["prev_dir"]`` are vacuumed: the previous
+        stays for in-flight readers of the old pointer."""
+        out = os.path.join(root, dirname)
+        result = write(out)
+        try:
+            self._commit(pointer, expected)
+        except Exception:
+            shutil.rmtree(out, ignore_errors=True)
+            raise
+        vacuum(root, {dirname, pointer.get("prev_dir")}, prefix)
+        return result
+
+
+def vacuum(root: str, keep, prefix: str) -> None:
+    """Remove every ``prefix`` directory under ``root`` not named in
+    ``keep``."""
+    for name in os.listdir(root):
+        if name.startswith(prefix) and name not in keep:
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)

@@ -12,14 +12,16 @@ streaming/dedup.py, sources/shards.py):
 
 - ``apply_batch(df, epoch)`` is ``foreachBatch``-compatible.
 - **Idempotent apply**: the committed pointer carries the last applied
-  epoch; a replayed epoch (crash between sink commit and checkpoint
-  write) is a no-op that returns the stored report — the running profile
-  is never double-merged.
-- **Pointer commit**: state (epoch, running profile JSON, last report)
-  commits through the pluggable backend (streaming/commit.py) with
-  ``expected`` set to the pointer last read, so on conditional-put
-  deployments a racing monitor becomes an explicit conflict, not a lost
-  update.
+  (epoch, run token), checked by ``ReplayGuard("additive")``
+  (streaming/replay.py): a replayed epoch is a no-op that returns the
+  stored report — the running profile is never double-merged — and a
+  DIFFERENT token presenting a regressed epoch raises
+  ``ReplayMismatchError`` instead of silently dropping the batch.
+- **Pointer commit**: state (epoch, run token, running profile JSON,
+  last report) commits through the pluggable backend
+  (streaming/commit.py) with ``expected`` set to the pointer last read,
+  so on conditional-put deployments a racing monitor becomes an
+  explicit conflict, not a lost update.
 - **Restart**: a new monitor on the same path resumes from the committed
   profile.
 
@@ -39,7 +41,7 @@ from nexus_event_stream_spark.operators.drift import (
     drift_report,
     merge_profiles,
 )
-from nexus_event_stream_spark.streaming.commit import PosixRenameBackend
+from nexus_event_stream_spark.streaming.commit import PointerStore
 
 #: Flags that compare absolute corpus volume — meaningful snapshot vs
 #: snapshot (cumulative verdict), structurally meaningless for one
@@ -48,9 +50,10 @@ from nexus_event_stream_spark.streaming.commit import PosixRenameBackend
 _SCALE_FLAGS = frozenset({"doc_count_jump", "empty_snapshot"})
 
 
-class StreamingProfileMonitor:
+class StreamingProfileMonitor(PointerStore):
     """Accumulates a running :class:`CorpusProfile` across epochs and
-    gates each epoch against ``reference`` (None = accumulate only)."""
+    gates each epoch against ``reference`` (None = accumulate only).
+    ``path`` is the pointer file itself."""
 
     def __init__(
         self,
@@ -61,6 +64,7 @@ class StreamingProfileMonitor:
         backend=None,
         **profile_kwargs,
     ):
+        super().__init__(path, backend, "additive")
         self.path = path
         self.reference = reference
         # The content-Jaccard gate compares EXACT shingle overlap — right
@@ -73,33 +77,32 @@ class StreamingProfileMonitor:
         # ``thresholds={"min_content_jaccard": ...}``.
         self.thresholds = {"min_content_jaccard": 0.0, **(thresholds or {})}
         self.text_col = text_col
-        self.backend = backend or PosixRenameBackend()
         self.profile_kwargs = profile_kwargs
 
     # -- state ---------------------------------------------------------
 
-    def _read(self) -> dict | None:
-        return self.backend.read(self.path)
-
     @property
     def profile(self) -> CorpusProfile | None:
         """The committed running profile (None before the first epoch)."""
-        ptr = self._read()
+        ptr = self.current()
         if ptr is None:
             return None
         return CorpusProfile.from_json(json.dumps(ptr["profile"]))
 
     @property
     def last_report(self) -> dict | None:
-        ptr = self._read()
+        ptr = self.current()
         return ptr["report"] if ptr else None
 
     # -- epoch apply -----------------------------------------------------
 
-    def apply_batch(self, df: DataFrame, epoch: int) -> dict | None:
+    def apply_batch(
+        self, df: DataFrame, epoch: int, run_token: str | None = None
+    ) -> dict | None:
         """Fold one micro-batch. Returns the epoch's drift report (None
         when no reference is pinned). Replayed epochs are no-ops that
-        return the stored report.
+        return the stored report; a different ``run_token`` presenting a
+        regressed epoch raises ``ReplayMismatchError``.
 
         The gate verdict is computed on the BATCH profile — "did the feed
         shift THIS epoch?" must not decay with stream history: against the
@@ -121,8 +124,8 @@ class StreamingProfileMonitor:
         r7). An empty batch SKIPS the batch verdict entirely
         (``batch.skipped``); volume anomalies stay the cumulative
         verdict's job, where the totals are actually comparable."""
-        ptr = self._read()
-        if ptr is not None and epoch <= ptr["epoch"]:
+        ptr = self.current()
+        if self.guard.is_replay(ptr, epoch, run_token):
             return ptr["report"]  # replay after a crash: already applied
         batch = corpus_profile(df, text_col=self.text_col, **self.profile_kwargs)
         if ptr is None:
@@ -157,10 +160,10 @@ class StreamingProfileMonitor:
                 "flags": sorted(set(batch_rep["flags"]) | set(cum_rep["flags"])),
                 "drifted": batch_rep["drifted"] or cum_rep["drifted"],
             }
-        self.backend.commit(
-            self.path,
+        self._commit(
             {
                 "epoch": epoch,
+                "run_token": run_token,
                 "profile": json.loads(running.to_json()),
                 "report": report,
             },
@@ -168,10 +171,10 @@ class StreamingProfileMonitor:
         )
         return report
 
-    def foreach_batch(self):
+    def foreach_batch(self, run_token: str | None = None):
         """Adapter for ``writeStream.foreachBatch`` — drop the return."""
 
         def fn(df: DataFrame, epoch: int) -> None:
-            self.apply_batch(df, epoch)
+            self.apply_batch(df, epoch, run_token)
 
         return fn

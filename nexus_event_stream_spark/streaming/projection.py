@@ -31,7 +31,6 @@ from __future__ import annotations
 import datetime as dt
 import logging
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -41,8 +40,7 @@ from nexus_event_stream_spark.operators.lww import (
     lww_merge_batch,
 )
 from nexus_event_stream_spark.schemas import STATE_SCHEMA
-from nexus_event_stream_spark.streaming.commit import PosixRenameBackend
-from nexus_event_stream_spark.streaming.replay import ReplayGuard
+from nexus_event_stream_spark.streaming.commit import PointerStore, vacuum
 
 logger = logging.getLogger(__name__)
 
@@ -56,7 +54,7 @@ _READ_POINTER = object()
 _TIEBREAK = ("created_at", "title")
 
 
-class ParquetViewStore:
+class ParquetViewStore(PointerStore):
     """Versioned parquet snapshots with an atomically-updated pointer.
 
     ``partition_by`` physically partitions each snapshot (e.g. by
@@ -80,39 +78,16 @@ class ParquetViewStore:
         partition_by: str | None = None,
         backend=None,
         schema=None,
-        guard_mode: str = "idempotent",
     ):
+        #: replay discipline (streaming/replay.py): the LWW snapshot is
+        #: idempotent under re-application, so the guard suppresses only
+        #: positively-identified same-run replays and lets cross-run
+        #: re-applies through harmlessly.
+        super().__init__(os.path.join(path, POINTER), backend, "idempotent")
         self.path = path
         self.partition_by = partition_by
-        self.backend = backend or PosixRenameBackend()
         self.schema = schema or STATE_SCHEMA
-        #: replay discipline, declared at construction (streaming/replay.py):
-        #: the LWW snapshot is idempotent under re-application, so the
-        #: default guard suppresses only positively-identified same-run
-        #: replays and lets cross-run re-applies through harmlessly.
-        self.guard = ReplayGuard(guard_mode)
         os.makedirs(path, exist_ok=True)
-
-    # -- pointer ------------------------------------------------------------
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.path, POINTER)
-
-    def current(self) -> dict | None:
-        return self.backend.read(self._pointer_path())
-
-    def _commit(
-        self,
-        version: int,
-        epoch: int | None,
-        run_token: str | None,
-        expected: dict | None = None,
-    ) -> None:
-        self.backend.commit(
-            self._pointer_path(),
-            {"version": version, "epoch": epoch, "run_token": run_token},
-            expected,
-        )
 
     # -- read/write ---------------------------------------------------------
 
@@ -144,16 +119,13 @@ class ParquetViewStore:
         writer.parquet(out)
         # `expected=cur`: under a CAS backend a concurrent commit since
         # our read surfaces as CommitConflictError, not a lost update
-        self._commit(version, epoch, run_token, expected=cur)
-        self._vacuum(keep=(version, version - 1))
+        self._commit(
+            {"version": version, "epoch": epoch, "run_token": run_token},
+            expected=cur,
+        )
+        # keep current + previous snapshot (in-flight readers)
+        vacuum(self.path, {f"v={version}", f"v={version - 1}"}, "v=")
         return version
-
-    def _vacuum(self, keep: tuple[int, ...]) -> None:
-        # Keep current + previous snapshot (in-flight readers), drop older.
-        keep_names = {f"v={v}" for v in keep}
-        for name in os.listdir(self.path):
-            if name.startswith("v=") and name not in keep_names:
-                shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
 
 
 def apply_batch(
@@ -266,7 +238,7 @@ def _bucket_expr(n_buckets: int, key_col: str = "id"):
     ).cast("int")
 
 
-class BucketedViewStore:
+class BucketedViewStore(PointerStore):
     """Manifest-tracked view store: the snapshot is split into ``n_buckets``
     key-hash buckets, and an epoch rewrites ONLY the buckets its batch
     touches — per-epoch write cost is O(|batch| + |touched buckets|), not
@@ -292,32 +264,20 @@ class BucketedViewStore:
         key_col: str = "id",
         guard_mode: str = "idempotent",
     ):
-        self.path = path
-        self.n_buckets = n_buckets
-        self.backend = backend or PosixRenameBackend()
-        #: schema/key_col generalize the store beyond the LWW state —
-        #: e.g. the near-dup label relation buckets by ``comp`` so a
-        #: relabel rewrite touches only affected components' buckets.
-        self.schema = schema or STATE_SCHEMA
-        self.key_col = key_col
         #: replay discipline, declared at construction (streaming/replay.py).
         #: Idempotent for LWW/label snapshots; ADDITIVE substrates (rollup
         #: partials, BM25 postings — where a re-applied epoch double-counts)
         #: must construct with guard_mode="additive" so a fresh-checkpoint
         #: query can never be silently swallowed.
-        self.guard = ReplayGuard(guard_mode)
+        super().__init__(os.path.join(path, POINTER), backend, guard_mode)
+        self.path = path
+        self.n_buckets = n_buckets
+        #: schema/key_col generalize the store beyond the LWW state —
+        #: e.g. the near-dup label relation buckets by ``comp`` so a
+        #: relabel rewrite touches only affected components' buckets.
+        self.schema = schema or STATE_SCHEMA
+        self.key_col = key_col
         os.makedirs(path, exist_ok=True)
-
-    # -- pointer ------------------------------------------------------------
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.path, POINTER)
-
-    def current(self) -> dict | None:
-        return self.backend.read(self._pointer_path())
-
-    def _commit(self, pointer: dict, expected: dict | None = None) -> None:
-        self.backend.commit(self._pointer_path(), pointer, expected)
 
     # -- read ---------------------------------------------------------------
 
@@ -482,16 +442,9 @@ class BucketedViewStore:
             },
             expected=cur,
         )
-        self._vacuum(manifest, prev_refs, version)
+        keep = _manifest_versions(manifest) | set(prev_refs) | {version}
+        vacuum(self.path, {f"v={v}" for v in keep}, "v=")
         return version
-
-    def _vacuum(self, manifest: dict, prev_refs: list[int], version: int) -> None:
-        keep = {f"v={v}" for v in _manifest_versions(manifest)}
-        keep |= {f"v={v}" for v in prev_refs}
-        keep.add(f"v={version}")
-        for name in os.listdir(self.path):
-            if name.startswith("v=") and name not in keep:
-                shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
 
 
 def apply_batch_bucketed(

@@ -35,11 +35,14 @@ reset) — is the explicit escape hatch: ``adopt(cur)`` returns a pointer
 with the committed-epoch watermark cleared so the new token starts its
 own monotone sequence. It must be a deliberate call, never a default.
 
-The streaming ANN index (streaming/ann_index.py) uses a third,
-membership-based discipline — epoch DIRS are namespaced by token and
-replay is detected by dir membership in the pointer — which subsumes
-both modes for stores whose epochs land in separate directories; it
-predates this module and documents its own contract.
+The streaming ANN index (streaming/ann_index.py) adds a membership
+check in front of its idempotent guard: epoch DIRS are namespaced by
+token and a replayed epoch is detected by dir membership in the pointer,
+which also makes ``run_token=None`` replays idempotent; the guard only
+catches a same-token replay of an epoch that committed no directory.
+The sharded corpus sink (sources/shards.py) keeps its own O(1)
+``max_epoch`` watermark. Every store holds its guard through the
+pointer-store base (streaming/commit.py).
 
 Run tokens come from ``dedup.run_token_for(checkpoint_path)``: minted
 once per checkpoint generation, persisted inside the checkpoint dir, so

@@ -610,14 +610,9 @@ class RollupStore:
     # -- write path ---------------------------------------------------------
 
     def adopt(self) -> None:
-        """Clear the committed-epoch watermark so a NEW query (fresh
-        checkpoint, epoch ids restarting at 0) can feed this store's
-        existing data — only valid when the new stream is disjoint from
-        what is stored (additive state: replays double-count). See
-        ``ReplayGuard.adopt``; the swing is one atomic pointer commit."""
-        cur = self.current()
-        if cur is not None:
-            self._store._commit(self._guard.adopt(cur), expected=cur)
+        """``PointerStore.adopt``: only valid when the new stream is
+        disjoint from what is stored (replays double-count)."""
+        self._store.adopt()
 
     def apply_batch(
         self,
@@ -660,11 +655,11 @@ class RollupStore:
             # folds them back.
             self._store.append_buckets(
                 batch_partials.select(*cols), touched, epoch,
-                run_token=run_token,
+                run_token=run_token, cur=cur,
             )
             return
         state_slice = (
-            self._store.read(spark, buckets=touched) if cur else None
+            self._store.read(spark, buckets=touched, cur=cur) if cur else None
         )
         merged = (
             batch_partials
@@ -678,7 +673,7 @@ class RollupStore:
             )
         )
         self._store.write_buckets(
-            merged.select(*cols), touched, epoch, run_token=run_token
+            merged.select(*cols), touched, epoch, run_token=run_token, cur=cur
         )
 
     def compact(self, spark: SparkSession) -> int | None:
@@ -697,7 +692,7 @@ class RollupStore:
         ):
             return None
         merged = merge_partials(
-            self._store.read(spark),
+            self._store.read(spark, cur=cur),
             self.dims,
             sketch=self.quantile_k is not None,
             distinct=self.distinct_col is not None,
@@ -707,7 +702,7 @@ class RollupStore:
         touched = [int(b) for b in cur["manifest"]]
         return self._store.write_buckets(
             merged.select(*cols), touched, cur.get("epoch"),
-            run_token=cur.get("run_token"),
+            run_token=cur.get("run_token"), cur=cur,
         )
 
     def realtime(

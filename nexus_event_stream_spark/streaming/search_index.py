@@ -92,14 +92,9 @@ class BM25IndexStore:
         return self._store.current()
 
     def adopt(self) -> None:
-        """Clear the committed-epoch watermark so a NEW query (fresh
-        checkpoint, epoch ids restarting at 0) can feed this index's
-        existing postings — only valid when the new stream's doc ids are
-        disjoint from what is indexed (append-only contract). One atomic
-        pointer commit; see ``ReplayGuard.adopt``."""
-        cur = self.current()
-        if cur is not None:
-            self._store._commit(self._guard.adopt(cur), expected=cur)
+        """``PointerStore.adopt``: only valid when the new stream's doc
+        ids are disjoint from what is indexed (append-only contract)."""
+        self._store.adopt()
 
     # -- write path ---------------------------------------------------------
 
@@ -213,6 +208,7 @@ class BM25IndexStore:
                 # append must not drop queued takedowns
                 "tombstones": self._tombstones(cur),
             },
+            cur=cur,
         )
 
     def compact(self, spark: SparkSession) -> int | None:
@@ -234,7 +230,9 @@ class BM25IndexStore:
             isinstance(v, list) and len(v) > 1 for v in cur["manifest"].values()
         ):
             return None
-        all_rows = self._exclude_tombstones(self._store.read(spark), cur)
+        all_rows = self._exclude_tombstones(
+            self._store.read(spark, cur=cur), cur
+        )
         touched = [int(b) for b in cur["manifest"]]
         return self._store.write_buckets(
             all_rows.select(*[f.name for f in _POSTING_SCHEMA.fields]),
@@ -246,6 +244,7 @@ class BM25IndexStore:
                 "sum_dl": cur.get("sum_dl", 0),
                 "tombstones": [],
             },
+            cur=cur,
         )
 
     def forget(self, spark: SparkSession, doc_ids, mode: str = "tombstone") -> int:
@@ -285,7 +284,9 @@ class BM25IndexStore:
             return 0
         # already-queued victims are invisible to this read — no double
         # counting when a takedown request repeats
-        all_rows = self._exclude_tombstones(self._store.read(spark), cur)
+        all_rows = self._exclude_tombstones(
+            self._store.read(spark, cur=cur), cur
+        )
         spark_ids = spark.createDataFrame(
             [(i,) for i in ids], "doc_id long"
         )
@@ -319,6 +320,7 @@ class BM25IndexStore:
                 "sum_dl": sum_dl,
                 "tombstones": [],
             },
+            cur=cur,
         )
         return len(gone_docs)
 

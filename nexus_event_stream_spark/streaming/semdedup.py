@@ -118,7 +118,8 @@ class EmbeddingStore:
         run_token: str | None,
         centroids,
     ) -> None:
-        old = self._store.read(spark, buckets=touched)
+        cur = self.current()
+        old = self._store.read(spark, buckets=touched, cur=cur) if cur else None
         merged = rows if old is None else old.unionByName(rows)
         self._store.write_buckets(
             merged.select(*[f.name for f in _STORE_SCHEMA.fields]),
@@ -126,6 +127,7 @@ class EmbeddingStore:
             epoch,
             run_token,
             extra={"centroids": [list(map(float, c)) for c in centroids]},
+            cur=cur,
         )
 
     def forget(self, spark: SparkSession, vec_ids) -> int:
@@ -151,7 +153,7 @@ class EmbeddingStore:
         if not ids:
             return 0
         idf = spark.createDataFrame([(i,) for i in ids], "vec_id long")
-        allrows = self._store.read(spark)
+        allrows = self._store.read(spark, cur=cur)
         victims = allrows.join(F.broadcast(idf), "vec_id", "left_semi")
         touched = [
             int(r[0])
@@ -164,7 +166,7 @@ class EmbeddingStore:
         if not touched:
             return 0
         n_gone = victims.count()
-        slice_ = self._store.read(spark, buckets=touched)
+        slice_ = self._store.read(spark, buckets=touched, cur=cur)
         kept = slice_.join(F.broadcast(idf), "vec_id", "left_anti")
         self._store.write_buckets(
             kept.select(*[f.name for f in _STORE_SCHEMA.fields]),
@@ -172,6 +174,7 @@ class EmbeddingStore:
             cur.get("epoch"),
             cur.get("run_token"),
             extra={"centroids": cur.get("centroids")},
+            cur=cur,
         )
         return int(n_gone)
 

@@ -36,13 +36,14 @@ then swings the single ``_serving_pointer.json`` LAST through the
 pluggable commit backends (streaming/commit.py) with the previously-read
 pointer as ``expected=`` — under a CAS backend a racing publisher gets
 ``CommitConflictError`` instead of silently clobbering, and readers
-resolve the pointer FIRST so they only ever see complete layouts. This
-is the same pointer-commit discipline as every other store in the repo
-(projection.py, shards.py, ann_index.py) and matches the reference's
-atomic view update (Redis MULTI/EXEC,
-``data-plane/internal/projection/signal.go:45-58``). Vacuum keeps the
-current and the immediately-previous snapshot so an in-flight reader
-that resolved the old pointer finishes against an intact directory.
+resolve the pointer FIRST so they only ever see complete layouts. The
+pointer is a ``PointerStore`` and the publish is its ``publish`` helper
+(streaming/commit.py) — the one attempt-dir swing the ANN index's
+``retrain_swap`` also uses — and matches the reference's atomic view
+update (Redis MULTI/EXEC, ``data-plane/internal/projection/signal.go:45-58``).
+Vacuum keeps the current and the immediately-previous snapshot so an
+in-flight reader that resolved the old pointer finishes against an
+intact directory.
 
 Freshness contract: reads serve the last published snapshot — the same
 eventual-consistency the reference's Redis view already has; cadence is
@@ -52,7 +53,6 @@ the caller's maintenance schedule.
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,7 +65,7 @@ from nexus_event_stream_spark.operators.clustering import (
     zorder_write,
 )
 from nexus_event_stream_spark.schemas import PRIORITY_SCORES
-from nexus_event_stream_spark.streaming.commit import PosixRenameBackend
+from nexus_event_stream_spark.streaming.commit import PointerStore
 from nexus_event_stream_spark.streaming.projection import BucketedViewStore
 
 _POINTER = "_serving_pointer.json"  # "_" prefix: invisible to data scans
@@ -75,16 +75,15 @@ _POINTER = "_serving_pointer.json"  # "_" prefix: invisible to data scans
 SERVING_COLS = ("priority_code", "created_at")
 
 
-def _pointer_path(path: str) -> str:
-    return os.path.join(path, _POINTER)
+def _serving_pointer(path: str, backend=None) -> PointerStore:
+    return PointerStore(os.path.join(path, _POINTER), backend)
 
 
 def resolve_serving_dir(path: str, backend=None) -> str:
     """The data directory of the CURRENT published snapshot — readers
     call this first, then scan only inside it; a concurrent republish
     writes elsewhere and cannot disturb the resolved layout."""
-    backend = backend or PosixRenameBackend()
-    ptr = backend.read(_pointer_path(path))
+    ptr = _serving_pointer(path, backend).current()
     if ptr is None:
         raise ValueError(f"no published serving snapshot at {path}")
     return os.path.join(path, ptr["dir"])
@@ -106,11 +105,11 @@ def publish_serving_snapshot(
     compactor needs). Raises ``CommitConflictError`` (CAS backends) if a
     concurrent publisher moved the pointer — the freshly-written attempt
     dir is removed before re-raising, since nothing references it."""
-    backend = backend or PosixRenameBackend()
+    pointer = _serving_pointer(path, backend)
     cur = store.current()
     if cur is None:
         raise ValueError("store has no committed state to publish")
-    ptr = backend.read(_pointer_path(path))
+    ptr = pointer.current()
     if ptr is not None and ptr["store_version"] == cur["version"]:
         return {
             "published": False,
@@ -128,36 +127,27 @@ def publish_serving_snapshot(
     # attempt-unique: a crashed or conflicted publish leaves garbage that
     # vacuum reclaims, never a dir a future attempt could half-overwrite
     dirname = f"v={version}-{uuid.uuid4().hex[:8]}"
-    zorder_write(
-        serving, os.path.join(path, dirname), list(SERVING_COLS), n_files=n_files
+    pointer.publish(
+        path,
+        dirname,
+        lambda out: zorder_write(
+            serving, out, list(SERVING_COLS), n_files=n_files
+        ),
+        {
+            "serving_version": version,
+            "dir": dirname,
+            "store_version": cur["version"],
+            "prev_dir": ptr["dir"] if ptr else None,
+        },
+        expected=ptr,
+        prefix="v=",
     )
-    new_ptr = {
-        "serving_version": version,
-        "dir": dirname,
-        "store_version": cur["version"],
-        "prev_dir": ptr["dir"] if ptr else None,
-    }
-    try:
-        backend.commit(_pointer_path(path), new_ptr, expected=ptr)
-    except Exception:
-        shutil.rmtree(os.path.join(path, dirname), ignore_errors=True)
-        raise
-    _vacuum(path, keep={dirname, new_ptr["prev_dir"]})
     return {
         "published": True,
         "store_version": cur["version"],
         "n_files": n_files,
         "serving_version": version,
     }
-
-
-def _vacuum(path: str, keep: set) -> None:
-    """Remove snapshot dirs that neither the current nor the previous
-    pointer references — the previous stays so an in-flight reader that
-    resolved the old pointer finishes against an intact layout."""
-    for name in os.listdir(path):
-        if name.startswith("v=") and name not in keep:
-            shutil.rmtree(os.path.join(path, name), ignore_errors=True)
 
 
 def serve_filter_priority(

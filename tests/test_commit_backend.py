@@ -1,9 +1,10 @@
 """Pointer-commit backends (streaming/commit.py): the CAS contract that
 makes snapshot commits safe where rename is not atomic (object stores).
 
-No SparkSession needed — the backends are pure pointer-file protocols;
-their integration with the stores is pinned by the parametrized fixtures
-in tests/test_bucketed_store.py and tests/test_streaming_dedup.py.
+The backend tests need no SparkSession — the backends are pure
+pointer-file protocols. The two store-level tests at the end pin that a
+stale writer conflicts instead of clobbering; crash replay through the
+stores is pinned by tests/test_bucketed_crash.py under both backends.
 """
 
 from __future__ import annotations
@@ -102,3 +103,41 @@ def test_store_level_conflict_surfaces_not_clobbers(tmp_path, spark):
             b._pointer_path(), {"version": 99, "epoch": 0}, expected=stale
         )
     assert a.current()["version"] == ver_a + 1  # a's commit intact
+
+
+def test_bm25_takedown_racing_an_append_conflicts_instead_of_being_lost(
+    tmp_path, spark
+):
+    """Under CAS, a BM25 tombstone takedown that lands between an
+    append's pointer read and its commit makes the append fail: the
+    append built its counters and tombstone queue from the pointer it
+    read, and committing them would un-forget the doc."""
+    from nexus_event_stream_spark.streaming.search_index import BM25IndexStore
+
+    store = BM25IndexStore(
+        str(tmp_path / "idx"), n_buckets=8, backend=ConditionalPutBackend()
+    )
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    store.apply_batch(spark, docs([(1, "alpha beta"), (2, "gamma delta")]), 0, "r")
+    inner = store._store
+    real_append = inner.append_buckets
+
+    def append_after_takedown(*args, **kwargs):
+        inner.append_buckets = real_append
+        assert store.forget(spark, [1]) == 1
+        return real_append(*args, **kwargs)
+
+    inner.append_buckets = append_after_takedown
+    with pytest.raises(CommitConflictError):
+        store.apply_batch(spark, docs([(3, "alpha epsilon")]), 1, "r")
+    cur = store.current()
+    assert cur["tombstones"] == [1] and cur["n_docs"] == 1 and cur["epoch"] == 0
+    # the retried epoch keeps the takedown: doc 1 stays forgotten
+    store.apply_batch(spark, docs([(3, "alpha epsilon")]), 1, "r")
+    cur = store.current()
+    assert cur["tombstones"] == [1] and cur["n_docs"] == 2 and cur["epoch"] == 1
+    hits = store.query(spark, [(0, "alpha")])
+    assert {r["doc_id"] for r in hits.collect()} == {3}

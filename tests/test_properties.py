@@ -42,6 +42,8 @@ events_strategy = st.lists(
     ),
     min_size=1,
     max_size=12,
+    # to_rows' total tiebreak needs seq unique across the history
+    unique_by=lambda event: event[3],
 )
 
 

@@ -10,7 +10,7 @@ no error. Contracts pinned here:
   identified same-run replays; additive suppresses within a token,
   RAISES on a cross-token epoch regression, and keeps the legacy
   strictly-monotone silence when either side is tokenless
-- rollup + BM25 stores: a fresh-token query against an existing store
+- rollup, BM25 and drift-monitor stores: a fresh-token query against an existing store
   raises ``ReplayMismatchError`` instead of dropping epochs — under
   BOTH commit backends — while same-token crash replays stay silent
   no-ops and the store bytes stay exactly once
@@ -36,6 +36,7 @@ from nexus_event_stream_spark.streaming.commit import (
     PosixRenameBackend,
 )
 from nexus_event_stream_spark.streaming.dedup import run_token_for
+from nexus_event_stream_spark.streaming.profile import StreamingProfileMonitor
 from nexus_event_stream_spark.streaming.replay import (
     ReplayGuard,
     ReplayMismatchError,
@@ -216,6 +217,28 @@ def test_bm25_fresh_token_raises_not_drops(spark, docs, tmp_path, backend_cls):
     one_shot.apply_batch(spark, docs, 0)
     assert store.current()["n_docs"] == one_shot.current()["n_docs"]
     assert store.current()["sum_dl"] == one_shot.current()["sum_dl"]
+
+
+# -- store level: drift monitor -----------------------------------------------
+
+
+@pytest.mark.parametrize("backend_cls", BACKENDS)
+def test_profile_monitor_fresh_token_raises_not_drops(
+    spark, docs, tmp_path, backend_cls
+):
+    store = StreamingProfileMonitor(
+        str(tmp_path / "profile.json"), backend=backend_cls()
+    )
+    for e in range(3):
+        store.apply_batch(docs.filter(F.col("doc_id") % 3 == e), e, "run-a")
+    cur = store.current()
+    # same-token crash replay: silent no-op, never double-merged
+    store.apply_batch(docs, 2, "run-a")
+    assert store.current() == cur
+    # fresh checkpoint = new token, epoch ids restart at 0: LOUD
+    with pytest.raises(ReplayMismatchError):
+        store.apply_batch(docs, 0, "run-b")
+    assert store.current() == cur
 
 
 # -- end to end: checkpoint restart vs reset ----------------------------------
