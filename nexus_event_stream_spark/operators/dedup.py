@@ -951,84 +951,6 @@ def connected_components(
     )
 
 
-def merge_edges(
-    labels: DataFrame,
-    new_pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Fold a DELTA batch of edges into an existing ``(node, comp)``
-    labeling without recomputing components over the full edge set — the
-    streaming-ingest shape of near-dup clustering (a micro-batch's
-    verified pairs arrive against a corpus whose clusters are already
-    labeled).
-
-    Correctness rests on component contraction: a labeling IS the edge
-    set up to connectivity, so merging new edges only requires CC over
-    the CONTRACTED graph — each old component collapsed to its label,
-    each never-seen node standing for itself. New edge (a, b) becomes
-    (comp(a), comp(b)); the contracted graph has one node per *touched*
-    component, so the iterative CC here runs over O(|delta|) rows no
-    matter how large the accumulated graph is. Old labels then update
-    through one join on their component id (the group side is bounded by
-    touched components — broadcastable in the streaming case), and nodes
-    appearing for the first time take their contracted group's label.
-    Labels stay "min node id in component" because min is associative:
-    group-min over component-mins of member sets == min over the union.
-
-    Equivalent to ``connected_components`` over the union of all edges
-    ever seen — pinned on randomized edge streams in
-    tests/test_dedup_similarity.py.
-    """
-    edges = new_pairs.select(
-        F.col(a_col).cast("long").alias("src"),
-        F.col(b_col).cast("long").alias("dst"),
-    )
-    lab_a = labels.select(
-        F.col("node").alias("__na"), F.col("comp").alias("__ca")
-    )
-    lab_b = labels.select(
-        F.col("node").alias("__nb"), F.col("comp").alias("__cb")
-    )
-    contracted = (
-        edges.join(lab_a, edges.src == lab_a.__na, "left")
-        .join(lab_b, edges.dst == lab_b.__nb, "left")
-        .select(
-            F.coalesce("__ca", "src").alias("ca"),
-            F.coalesce("__cb", "dst").alias("cb"),
-        )
-        # checkpoint BEFORE the iterative CC: its rounds reference the
-        # edge relation twice each, so an un-truncated contracted plan
-        # (which embeds the previous labeling twice) would double per
-        # round — the classic iterative-lineage explosion. O(|delta|)
-        # rows, so materializing here is cheap by construction.
-        .localCheckpoint()
-    )
-    # CC over touched components only — O(|delta|) regardless of history
-    groups = connected_components(contracted, "ca", "cb", max_iter).select(
-        F.col("node").alias("__gnode"), F.col("comp").alias("__gcomp")
-    )
-    relabeled_old = labels.join(
-        groups, labels.comp == groups.__gnode, "left"
-    ).select("node", F.coalesce("__gcomp", "comp").alias("comp"))
-    # first-seen nodes: contracted under their own id, so their group row
-    # (if any) is keyed by the id itself
-    new_nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(labels.select("node"), "node", "left_anti")
-    )
-    labeled_new = new_nodes.join(
-        groups, new_nodes.node == groups.__gnode, "left"
-    ).select("node", F.coalesce("__gcomp", "node").alias("comp"))
-    # truncate lineage: the caller folds batch after batch, and each fold
-    # would otherwise embed the whole previous fold's plan (compounding
-    # until the driver chokes on the plan tree, not the data)
-    return relabeled_old.unionByName(labeled_new).localCheckpoint()
-
-
 def dedup_groups(
     docs: DataFrame,
     pairs: DataFrame,

@@ -104,28 +104,59 @@ def _sidecar(store: SignatureStore) -> PointerStore:
     return PointerStore(_bloom_path(store), store.backend)
 
 
-def read_bloom(store: SignatureStore) -> BloomFilter | None:
+def _bloom_state(
+    store: SignatureStore,
+) -> tuple[dict | None, BloomFilter | None]:
+    """The sidecar pointer snapshot and its filter, from ONE read (both
+    None before the first commit). A commit built from this filter passes
+    the snapshot as ``expected``: under a compare-and-swap backend a
+    rival writer's sidecar commit in between then raises
+    ``CommitConflictError`` instead of losing the rival's bits — a
+    filter missing accepted keys would admit duplicates."""
     cur = _sidecar(store).current()
     if cur is None:
-        return None
-    return BloomFilter(
+        return None, None
+    return cur, BloomFilter(
         m_bits=cur["m_bits"], k=cur["k"], words=tuple(cur["words"])
     )
 
 
+def read_bloom(store: SignatureStore) -> BloomFilter | None:
+    return _bloom_state(store)[1]
+
+
 def _commit_bloom(
-    store: SignatureStore, bf: BloomFilter, n_keys: int
+    store: SignatureStore, bf: BloomFilter, n_keys: int, expected: dict | None
 ) -> None:
-    sidecar = _sidecar(store)
-    sidecar._commit(
+    _sidecar(store)._commit(
         {
             "m_bits": bf.m_bits,
             "k": bf.k,
             "words": list(bf.words),
             "n_keys": n_keys,
         },
-        expected=sidecar.current(),
+        expected=expected,
     )
+
+
+def _register_bloom(
+    store: SignatureStore,
+    cur: dict | None,
+    bf: BloomFilter | None,
+    keys: DataFrame,
+    expected_keys: int,
+    fpr: float,
+) -> None:
+    """OR ``keys``' ``bucket_key`` digests into the filter ``bf`` read as
+    the sidecar snapshot ``cur`` (``_bloom_state``) and commit against
+    that snapshot; a first commit sizes (m, k) for ``expected_keys``."""
+    if bf is None:
+        m, k = bloom_params(expected_keys, fpr)
+        bf = BloomFilter(m_bits=m, k=k, words=tuple([0] * (m // 64)))
+    batch_bf = bloom_build(keys, "bucket_key", m_bits=bf.m_bits, k=bf.k)
+    n_keys = (cur["n_keys"] if cur else 0) + keys.count()
+    _commit_bloom(store, _or_words(bf, batch_bf), n_keys, expected=cur)
+    _warn_if_saturated(store, bf, n_keys, fpr)
 
 
 def _warn_if_saturated(
@@ -149,7 +180,7 @@ def _warn_if_saturated(
             "now pay store probes; run compact_exact_store to rebuild "
             "the filter at the live key count.",
             RuntimeWarning,
-            stacklevel=3,
+            stacklevel=4,
         )
 
 
@@ -213,7 +244,7 @@ def exact_suppress_and_register(
         ).drop("__keep")
 
         # (b) cross-batch: the Bloom filter decides who needs the store
-        bf = read_bloom(store)
+        bloom_cur, bf = _bloom_state(store)
         if bf is None:
             candidates = batch_kept.limit(0)
         else:
@@ -258,20 +289,7 @@ def exact_suppress_and_register(
             )
             # filter FIRST (crash leaves a superset — stray candidates, never
             # admitted duplicates), store append second
-            if bf is None:
-                m, k = bloom_params(expected_keys, fpr)
-                bf = BloomFilter(m_bits=m, k=k, words=tuple([0] * (m // 64)))
-            batch_bf = bloom_build(
-                surv_keys, "bucket_key", m_bits=bf.m_bits, k=bf.k
-            )
-            prev_meta = _sidecar(store).current() or {"n_keys": 0}
-            n_new = surv_keys.count()
-            _commit_bloom(
-                store, _or_words(bf, batch_bf), prev_meta["n_keys"] + n_new
-            )
-            _warn_if_saturated(
-                store, bf, prev_meta["n_keys"] + n_new, fpr
-            )
+            _register_bloom(store, bloom_cur, bf, surv_keys, expected_keys, fpr)
             store.append(
                 surv_keys,
                 epoch,
@@ -301,36 +319,28 @@ def compact_exact_store(
     cur = store.current()
     if cur is None:
         return version
+    bloom_cur, old = _bloom_state(store)
     df = store.read_buckets(spark, list(cur["manifest"]))
-    if df is None:
-        _commit_bloom_reset(store, fpr)
-        return version
-    keys = df.select("bucket_key").distinct()
-    n = keys.count()
+    keys = None if df is None else df.select("bucket_key").distinct()
+    n = 0 if keys is None else keys.count()
     if n == 0:
-        _commit_bloom_reset(store, fpr)
+        if old is not None:  # reset to empty, keeping (m, k)
+            empty = BloomFilter(
+                m_bits=old.m_bits, k=old.k, words=tuple([0] * old.n_words)
+            )
+            _commit_bloom(store, empty, 0, expected=bloom_cur)
         return version
-    old = read_bloom(store)
     if old is not None and old.fpr_estimate(n) <= 4 * fpr:
         m, k = old.m_bits, old.k  # keep (m, k): future ORs stay valid
     else:
         m, k = bloom_params(n, fpr)
-    _commit_bloom(store, bloom_build(keys, "bucket_key", m_bits=m, k=k), n)
+    _commit_bloom(
+        store,
+        bloom_build(keys, "bucket_key", m_bits=m, k=k),
+        n,
+        expected=bloom_cur,
+    )
     return version
-
-
-def _commit_bloom_reset(store: SignatureStore, fpr: float) -> None:
-    old = read_bloom(store)
-    if old is not None:
-        _commit_bloom(
-            store,
-            BloomFilter(
-                m_bits=old.m_bits,
-                k=old.k,
-                words=tuple([0] * old.n_words),
-            ),
-            0,
-        )
 
 
 def paragraph_suppress_and_register(
@@ -397,7 +407,7 @@ def paragraph_suppress_and_register(
         flagged = first_occurrence_flag(units, "__para").persist()
 
         # cross-batch: the filter decides who needs the store
-        bf = read_bloom(store)
+        bloom_cur, bf = _bloom_state(store)
         if bf is None:
             cand = flagged.limit(0).select(F.col("h").alias("bucket_key"))
         else:
@@ -491,20 +501,9 @@ def paragraph_suppress_and_register(
                 )
                 .dropDuplicates(["bucket_key"])
             )
-            if bf is None:
-                m, k = bloom_params(expected_keys, fpr)
-                bf = BloomFilter(m_bits=m, k=k, words=tuple([0] * (m // 64)))
-            batch_bf = bloom_build(novel, "bucket_key", m_bits=bf.m_bits, k=bf.k)
-            prev_meta = _sidecar(store).current() or {"n_keys": 0}
-            n_new = novel.count()
             # filter FIRST (crash leaves a superset — stray candidates,
             # never admitted duplicates), store append second
-            _commit_bloom(
-                store, _or_words(bf, batch_bf), prev_meta["n_keys"] + n_new
-            )
-            _warn_if_saturated(
-                store, bf, prev_meta["n_keys"] + n_new, fpr
-            )
+            _register_bloom(store, bloom_cur, bf, novel, expected_keys, fpr)
             store.append(novel, epoch, run_token)
 
         return out

@@ -56,7 +56,6 @@ from pyspark.sql import types as T
 
 from nexus_event_stream_spark.streaming.projection import (
     BucketedViewStore,
-    ParquetViewStore,
     _bucket_expr,
 )
 from nexus_event_stream_spark.operators.dedup import (
@@ -597,54 +596,10 @@ LABEL_SCHEMA = T.StructType(
 )
 
 
-def label_store(path: str, backend=None):
-    """A ParquetViewStore carrying the cluster labeling instead of the
-    LWW state — same versioned snapshots, pointer commit, replay guard
-    and backend injection, different schema."""
-    return ParquetViewStore(path, backend=backend, schema=LABEL_SCHEMA)
-
-
-def update_cluster_labels(
-    spark: SparkSession,
-    store,
-    pairs: DataFrame,
-    epoch: int | None = None,
-    run_token: str | None = None,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-) -> None:
-    """Maintain near-dup cluster labels ACROSS micro-batches: fold the
-    epoch's verified pairs into the committed ``(node, comp)`` relation
-    with ``operators.dedup.merge_edges`` — per-epoch cost scales with
-    the DELTA (component-contracted CC + one relabel join), never a
-    recompute over the accumulated pair graph — then commit a new
-    snapshot under the projection path's replay guard (same
-    (run_token, epoch) contract as ``apply_batch``; a redelivered epoch
-    is a no-op, and labels are min-id so re-merging is idempotent
-    anyway). Label-equivalence of the folded stream to a full
-    ``connected_components`` over every pair ever seen is pinned in
-    tests/test_streaming_dedup.py.
-    """
-    from nexus_event_stream_spark.operators.dedup import (
-        connected_components,
-        merge_edges,
-    )
-
-    cur = store.current()
-    if store.guard.is_replay(cur, epoch, run_token):
-        return  # already applied within this run
-    labels = store.read(spark)
-    if labels is None:
-        new = connected_components(pairs, a_col, b_col)
-    else:
-        new = merge_edges(labels, pairs, a_col, b_col)
-    store.write(new.select("node", "comp"), epoch, run_token)
-
-
 def bucketed_label_store(path: str, n_buckets: int = 64, backend=None):
     """Labels bucketed BY COMPONENT LABEL (``comp``): a relabel rewrites
     only the buckets housing affected components — the write-cost shape
-    ``update_cluster_labels_bucketed`` needs at scale."""
+    ``update_cluster_labels_bucketed`` needs."""
     return BucketedViewStore(
         path, n_buckets=n_buckets, backend=backend,
         schema=LABEL_SCHEMA, key_col="comp",
@@ -659,52 +614,39 @@ def update_cluster_labels_bucketed(
     run_token: str | None = None,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    mode: str = "auto",
-    rewrite_frac: float = 0.6,
 ) -> None:
-    """The at-scale shape of cluster-label maintenance: per-epoch WRITE
-    cost is O(affected components), not O(all labels).
+    """Maintain near-dup cluster labels ACROSS micro-batches: fold the
+    epoch's verified pairs into the committed ``(node, comp)`` relation
+    (``bucketed_label_store``), comp = min node id of the component.
+    Per-epoch cost scales with the DELTA, never a recompute over the
+    accumulated pair graph, and the write touches O(affected
+    components), not O(all labels).
 
-    ``update_cluster_labels`` computes the fold in O(delta) but rewrites
-    the whole labels snapshot each epoch — fine for a small labeling,
-    wrong at corpus scale. Here the labels live comp-bucketed
-    (``bucketed_label_store``), and an epoch:
+    Correctness rests on component contraction: a labeling IS the edge
+    set up to connectivity, so a delta edge (a, b) only needs CC over the
+    contracted graph (comp(a), comp(b)), each never-seen node standing
+    for itself. Labels stay min-id because min is associative. An epoch:
 
     1. looks up comp(node) for the delta's nodes with one broadcast join
        of the (tiny) node set against the label scan — a filter-scan,
        never a shuffle of the labels;
-    2. runs the contracted CC (O(delta) rows, as merge_edges);
-    3. rewrites ONLY the buckets of components whose label changes —
-       rows move from bucket(old comp) to bucket(new comp), both of
-       which are in the touched set; unchanged components' buckets are
-       not read or written. A mega-merge epoch rewrites exactly the
-       components it merges — unavoidable, their values changed.
-
-    ``mode`` picks the rewrite strategy per epoch, the same
-    touched-bucket-fraction dispatch ``apply_batch_bucketed`` uses (r13
-    verdict #4 — the label store previously left the choice to the
-    caller despite the measured replay800k crossover):
-
-    - ``"bucketed"``: always rewrite only the touched buckets.
-    - ``"full"``: relabel the whole store and rewrite every bucket
-      (collapses the manifest to one version — compaction-style).
-    - ``"auto"`` (default): bucketed below ``rewrite_frac`` of the
-      buckets touched, full at or above it. The fraction comes from the
-      touched-bucket collect the bucketed path pays anyway; a
-      no-component-changed epoch never escalates (nothing to rewrite —
-      the epoch marker alone commits).
+    2. runs CC over the contracted edges (O(delta) rows);
+    3. rewrites the buckets of components whose label changes — rows
+       move from bucket(old comp) to bucket(new comp), both of which are
+       in the touched set. The store picks the rewrite
+       (``BucketedViewStore.rewrite_set``): only the touched buckets on
+       a sparse epoch, every bucket on a dense one. A no-component-changed
+       epoch rewrites nothing (the epoch marker alone commits).
 
     Same (run_token, epoch) replay guard as the other foreachBatch
-    bodies; label-equivalence to full recompute pinned in
-    tests/test_streaming_dedup.py alongside an untouched-bucket pin.
+    bodies (a redelivered epoch is a no-op, and min-id labels make a
+    re-merge idempotent anyway). Label-equivalence to a full
+    ``connected_components`` over every pair ever seen is pinned in
+    tests/test_streaming_dedup.py and tests/test_dedup_similarity.py,
+    alongside an untouched-bucket pin.
     """
-    from nexus_event_stream_spark.operators.dedup import (
-        connected_components,
-        merge_edges,
-    )
+    from nexus_event_stream_spark.operators.dedup import connected_components
 
-    if mode not in ("auto", "bucketed", "full"):
-        raise ValueError(f"mode must be auto|bucketed|full, got {mode!r}")
     cur = store.current()
     if store.guard.is_replay(cur, epoch, run_token):
         return  # already applied within this run
@@ -734,8 +676,8 @@ def update_cluster_labels_bucketed(
     # 1. contraction lookup: broadcast the delta's node set onto the label
     # scan — comp(node) for delta nodes only, no label shuffle
     node_comp = labels_all.join(F.broadcast(delta_nodes), "node").localCheckpoint()
-    # 2. contracted CC over O(delta) rows (merge_edges recipe, against the
-    # delta-restricted lookup instead of the full labeling)
+    # 2. contracted CC over O(delta) rows: each edge end becomes its
+    # component label, a never-seen node stands for itself
     lab_a = node_comp.select(F.col("node").alias("__na"), F.col("comp").alias("__ca"))
     lab_b = node_comp.select(F.col("node").alias("__nb"), F.col("comp").alias("__cb"))
     contracted = (
@@ -777,20 +719,9 @@ def update_cluster_labels_bucketed(
     # touched can be empty (every delta edge lands inside an existing
     # component): still commit the epoch marker so the replay guard
     # engages — same contract as SignatureStore.append on an
-    # all-suppressed batch. A non-empty dense epoch takes the full side
-    # of the measured crossover: partial rewrite would re-read and
-    # re-write ~every bucket anyway, plus per-bucket slice overhead.
-    if touched and (
-        mode == "full"
-        or (mode == "auto" and len(touched) >= rewrite_frac * store.n_buckets)
-    ):
-        touched = list(range(store.n_buckets))
-    full_rewrite = len(touched) == store.n_buckets
-    slice_ = (
-        store.read(spark, buckets=None if full_rewrite else touched)
-        if touched
-        else None
-    )
+    # all-suppressed batch.
+    touched = store.rewrite_set(touched)
+    slice_ = store.read(spark, buckets=touched)  # None when touched is empty
     if slice_ is None:
         updated = new_rows
     else:

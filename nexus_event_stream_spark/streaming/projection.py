@@ -33,6 +33,7 @@ import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from nexus_event_stream_spark.operators.lww import (
     latest_state,
@@ -53,40 +54,32 @@ _READ_POINTER = object()
 #: Tiebreak making the per-key order total when updated_at collides.
 _TIEBREAK = ("created_at", "title")
 
+#: Touched-bucket fraction at or above which a bucketed epoch rewrites
+#: EVERY bucket — the measured ``replay800k_*`` crossover (SCALE.md:
+#: sparse epochs win ~2.7× with the partial rewrite, an all-buckets epoch
+#: wins ~4× with the full one, because a partial rewrite of most buckets
+#: is a full rewrite plus per-bucket file overhead).
+FULL_REWRITE_FRAC = 0.6
+
 
 class ParquetViewStore(PointerStore):
-    """Versioned parquet snapshots with an atomically-updated pointer.
-
-    ``partition_by`` physically partitions each snapshot (e.g. by
-    ``priority``: 3 values → serving-side equality filters prune to one
-    directory, the Spark analogue of the reference's priority ZSet index).
-    Only low-cardinality columns belong here.
+    """Versioned parquet snapshots of the LWW state (``STATE_SCHEMA``)
+    with an atomically-updated pointer — the full-snapshot store: every
+    epoch rewrites the whole view, the simplest layout for small views
+    (``BucketedViewStore`` is the at-scale shape).
 
     ``backend`` is the pointer-commit strategy (streaming/commit.py):
     default POSIX rename; inject ConditionalPutBackend for object-store
     deployments where rename is not atomic.
-
-    ``schema`` pins what ``read`` decodes — STATE_SCHEMA for the LWW view
-    (the default); other snapshot relations (e.g. the near-dup cluster
-    labeling) reuse the store's versioning/commit/vacuum discipline with
-    their own schema.
     """
 
-    def __init__(
-        self,
-        path: str,
-        partition_by: str | None = None,
-        backend=None,
-        schema=None,
-    ):
+    def __init__(self, path: str, backend=None):
         #: replay discipline (streaming/replay.py): the LWW snapshot is
         #: idempotent under re-application, so the guard suppresses only
         #: positively-identified same-run replays and lets cross-run
         #: re-applies through harmlessly.
         super().__init__(os.path.join(path, POINTER), backend, "idempotent")
         self.path = path
-        self.partition_by = partition_by
-        self.schema = schema or STATE_SCHEMA
         os.makedirs(path, exist_ok=True)
 
     # -- read/write ---------------------------------------------------------
@@ -98,7 +91,7 @@ class ParquetViewStore(PointerStore):
             cur = self.current()
         if cur is None:
             return None
-        return spark.read.schema(self.schema).parquet(
+        return spark.read.schema(STATE_SCHEMA).parquet(
             os.path.join(self.path, f"v={cur['version']}")
         )
 
@@ -113,10 +106,7 @@ class ParquetViewStore(PointerStore):
         cur = self.current()
         version = (cur["version"] + 1) if cur else 0
         out = os.path.join(self.path, f"v={version}")
-        writer = df.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(self.partition_by)
-        writer.parquet(out)
+        df.write.mode("overwrite").parquet(out)
         # `expected=cur`: under a CAS backend a concurrent commit since
         # our read surfaces as CommitConflictError, not a lost update
         self._commit(
@@ -167,11 +157,26 @@ def apply_batch(
     )
 
 
+def _stale_tombstone(horizon: dt.datetime):
+    """A delete tombstone older than the out-of-order horizon. NULL-ts
+    tombstones (2-key envelopes) are never stale: they carry no event
+    time, so no horizon can prove them collectable."""
+    return (
+        (F.col("action") == F.lit("deleted"))
+        & F.col("updated_at").isNotNull()
+        & (F.col("updated_at") < F.lit(horizon))
+    )
+
+
+def _drop_stale(state: DataFrame, horizon: dt.datetime) -> DataFrame:
+    # NULL action rows are live (tolerant reader: event with id but no
+    # action) — three-valued logic would silently drop them from a plain
+    # `~stale` keep-filter.
+    return state.filter(F.col("action").isNull() | ~_stale_tombstone(horizon))
+
+
 def compact_tombstones(
-    spark: SparkSession,
-    store: ParquetViewStore,
-    horizon: dt.datetime,
-    ts_col: str = "updated_at",
+    spark: SparkSession, store: ParquetViewStore, horizon: dt.datetime
 ) -> int | None:
     """Drop delete tombstones older than the out-of-order horizon.
 
@@ -194,23 +199,13 @@ def compact_tombstones(
     nothing is collectable (no rewrite — a no-op must not burn a retention
     slot), or if a concurrent write was detected.
     """
-    from pyspark.sql import functions as F
-
     cur = store.current()
     state = store.read(spark)
     if state is None:
         return None
-    stale = (
-        (F.col("action") == F.lit("deleted"))
-        & F.col(ts_col).isNotNull()
-        & (F.col(ts_col) < F.lit(horizon))
-    )
-    if state.filter(stale).limit(1).count() == 0:
+    if state.filter(_stale_tombstone(horizon)).limit(1).count() == 0:
         return None
-    # NULL action rows are live (tolerant reader: event with id but no
-    # action) — three-valued logic would silently drop them from a plain
-    # `action != 'deleted'` keep-filter.
-    keep = state.filter(F.col("action").isNull() | ~stale)
+    keep = _drop_stale(state, horizon)
     if store.current() != cur:
         return None  # a writer committed meanwhile; retry next period
     return store.write(keep, cur.get("epoch"), cur.get("run_token"))
@@ -231,8 +226,6 @@ def _manifest_versions(manifest: dict) -> set[int]:
 
 def _bucket_expr(n_buckets: int, key_col: str = "id"):
     """Stable key → bucket: pmod(xxhash64(key), B); NULL keys land in 0."""
-    from pyspark.sql import functions as F
-
     return F.coalesce(
         F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)), F.lit(0)
     ).cast("int")
@@ -317,6 +310,16 @@ class BucketedViewStore(PointerStore):
         return None if state is None else live_view(state)
 
     # -- write --------------------------------------------------------------
+
+    def rewrite_set(self, touched: list[int]) -> list[int]:
+        """The buckets an epoch rewrites when its input lands in
+        ``touched``: those alone while they are fewer than
+        ``FULL_REWRITE_FRAC`` of the store, else every bucket (which also
+        collapses the manifest to one version). The fraction comes from
+        the touched-bucket collect the partial path pays anyway."""
+        if len(touched) >= FULL_REWRITE_FRAC * self.n_buckets:
+            return list(range(self.n_buckets))
+        return touched
 
     def _write_partitioned(
         self, df: DataFrame, out: str, n_parts: int
@@ -453,40 +456,20 @@ def apply_batch_bucketed(
     batch: DataFrame,
     epoch: int,
     run_token: str | None = None,
-    mode: str = "auto",
-    rewrite_frac: float = 0.6,
 ) -> None:
     """foreachBatch body against the bucketed store: idempotent-epoch guard,
     then LWW-merge the batch against the state it touches.
 
     Same delivery contract as ``apply_batch`` (epoch replay is a no-op
     within a run; cross-run replay is harmless because the merge is
-    idempotent) with per-epoch cost bounded by the touched buckets.
-
-    ``mode`` picks the rewrite strategy per epoch — the two sides of the
-    measured ``replay800k_*`` crossover (SCALE.md: sparse epochs win
-    ~2.7× bucketed, an all-buckets epoch wins ~4× full — partial rewrite
-    degenerates to a full rewrite plus per-bucket file overhead when the
-    batch touches most buckets):
-
-    - ``"bucketed"``: always merge/rewrite only the touched buckets.
-    - ``"full"``: always merge against the whole view and rewrite every
-      bucket (also collapses the manifest to one version — the
-      compaction-style rewrite).
-    - ``"auto"`` (default): bucketed while the batch touches fewer than
-      ``rewrite_frac`` of the buckets, full at or above it. The
-      touched-bucket fraction is the signal the bracket actually
-      measured (batch keys spread over buckets vs view extent); the
-      probe that computes it is one bounded collect the bucketed path
-      pays anyway.
+    idempotent) with per-epoch cost bounded by the touched buckets. The
+    store picks the rewrite per epoch (``BucketedViewStore.rewrite_set``):
+    a sparse epoch merges and rewrites only the buckets its keys land in,
+    a dense one merges against the whole view and rewrites every bucket.
     """
-    if mode not in ("auto", "bucketed", "full"):
-        raise ValueError(f"mode must be auto|bucketed|full, got {mode!r}")
     cur = store.current()
     if store.guard.is_replay(cur, epoch, run_token):
         return
-    from pyspark.sql import functions as F
-
     # Reduce the batch once; its latest-per-key result is reused for the
     # touched-bucket probe and the merge (tiny relation — persist not worth
     # it, but the bucket list collect is bounded by n_buckets).
@@ -503,19 +486,8 @@ def apply_batch_bucketed(
     ]
     if not touched:
         return
-    if mode == "full" or (
-        mode == "auto" and len(touched) >= rewrite_frac * store.n_buckets
-    ):
-        # dense epoch: partial rewrite would touch ~everything anyway —
-        # take the full-rewrite side of the crossover (and collapse the
-        # manifest to one version while at it)
-        touched = list(range(store.n_buckets))
-    full_rewrite = len(touched) == store.n_buckets
-    state_slice = (
-        store.read(spark, buckets=None if full_rewrite else touched)
-        if cur
-        else None
-    )
+    touched = store.rewrite_set(touched)
+    state_slice = store.read(spark, buckets=touched) if cur else None
     if state_slice is None:
         merged = batch_latest
     else:
@@ -535,10 +507,7 @@ def apply_batch_bucketed(
 
 
 def compact_tombstones_bucketed(
-    spark: SparkSession,
-    store: BucketedViewStore,
-    horizon: dt.datetime,
-    ts_col: str = "updated_at",
+    spark: SparkSession, store: BucketedViewStore, horizon: dt.datetime
 ) -> int | None:
     """Bucket-scoped tombstone GC: rewrite ONLY buckets holding a stale
     tombstone — compaction cost tracks garbage, not view size.
@@ -548,28 +517,20 @@ def compact_tombstones_bucketed(
     a bucket whose every key was a stale tombstone disappears from the
     manifest entirely (write_buckets drops buckets with no surviving rows).
     """
-    from pyspark.sql import functions as F
-
     cur = store.current()
     state = store.read(spark)
     if state is None:
         return None
-    stale = (
-        (F.col("action") == F.lit("deleted"))
-        & F.col(ts_col).isNotNull()
-        & (F.col(ts_col) < F.lit(horizon))
-    )
     dirty = [
         r[0]
-        for r in state.filter(stale)
+        for r in state.filter(_stale_tombstone(horizon))
         .select(_bucket_expr(store.n_buckets, store.key_col).alias("b"))
         .distinct()
         .collect()
     ]
     if not dirty:
         return None
-    slice_ = store.read(spark, buckets=dirty)
-    keep = slice_.filter(F.col("action").isNull() | ~stale)
+    keep = _drop_stale(store.read(spark, buckets=dirty), horizon)
     if store.current() != cur:
         return None  # a writer committed meanwhile; retry next period
     return store.write_buckets(keep, dirty, cur.get("epoch"), cur.get("run_token"))
@@ -585,12 +546,12 @@ def start_projection(
     n_buckets: int = 64,
     serving_path: str | None = None,
     publish_every: int = 8,
-    rewrite_mode: str = "auto",
 ):
     """Wire a parsed event stream into the LWW view and start it.
 
     ``bucketed=True`` uses the manifest-tracked BucketedViewStore (per-epoch
-    cost bounded by touched buckets — the at-scale configuration); the
+    cost bounded by touched buckets, partial-vs-full rewrite picked per
+    epoch by the store — the at-scale configuration); the
     default full-snapshot store keeps the simplest possible layout for
     small views. Returns the StreamingQuery; callers use
     ``processAllAvailable()`` in tests or let it run continuously.
@@ -602,11 +563,6 @@ def start_projection(
     Publish failures are logged-and-continued: the serving layout is a
     read optimization with its own staleness contract; it must never take
     down ingest.
-
-    ``rewrite_mode`` (bucketed mode) forwards to ``apply_batch_bucketed``:
-    ``"auto"`` picks bucketed-merge vs full-rewrite per epoch from the
-    touched-bucket fraction (the measured ``replay800k_*`` crossover);
-    ``"bucketed"``/``"full"`` pin either side.
     """
     import uuid
 
@@ -619,9 +575,7 @@ def start_projection(
         bstore = BucketedViewStore(view_path, n_buckets=n_buckets)
 
         def _apply(batch: DataFrame, epoch: int) -> None:
-            apply_batch_bucketed(
-                spark, bstore, batch, epoch, run_token, mode=rewrite_mode
-            )
+            apply_batch_bucketed(spark, bstore, batch, epoch, run_token)
             if serving_path is not None and epoch % publish_every == (
                 publish_every - 1
             ):

@@ -175,34 +175,22 @@ def test_delete_only_batch_leaves_tombstone_not_live_row(spark, store):
     assert row is not None and row["action"] == "deleted"
 
 
-def test_crossover_auto_selects_and_matches_fixed_modes(spark, tmp_path):
-    """The replay800k crossover as a contract: auto picks bucketed on a
-    sparse epoch and full-rewrite on a dense one (pinned via manifest
-    shape), and the committed view is IDENTICAL to both fixed modes."""
+def test_crossover_auto_selects_and_matches_oracle(spark, tmp_path):
+    """The replay800k crossover as a contract: the store picks the
+    partial rewrite on a sparse epoch and the full rewrite on a dense one
+    (pinned via manifest shape), and the committed view equals an oracle
+    fold of every event."""
     batches = [
         [ev("created", f"k{i}", i) for i in range(24)],     # dense seed
         [ev("updated", "k3", 40)],                           # sparse: 1 key
         [ev("updated", f"k{i}", 50 + i) for i in range(24)], # dense again
         [ev("deleted", "k5", 90), ev("created", "k99", 91)], # sparse
     ]
-    stores = {}
-    for mode in ("auto", "bucketed", "full"):
-        s = BucketedViewStore(str(tmp_path / mode), n_buckets=8)
-        for i, rows in enumerate(batches):
-            apply_batch_bucketed(
-                spark, s, df_of(spark, rows), epoch=i, run_token="r",
-                mode=mode,
-            )
-        stores[mode] = s
-    views = {m: collect_view(spark, s) for m, s in stores.items()}
-    assert views["auto"] == views["bucketed"] == views["full"]
-
-    # selection pins via manifest shape after replaying step by step
-    s = BucketedViewStore(str(tmp_path / "probe"), n_buckets=8)
+    s = BucketedViewStore(str(tmp_path / "view"), n_buckets=8)
     apply_batch_bucketed(spark, s, df_of(spark, batches[0]), 0, "r")
     m0 = dict(s.current()["manifest"])
     assert set(m0.values()) == {0}
-    # sparse epoch → bucketed side: untouched buckets keep version 0
+    # sparse epoch → partial side: untouched buckets keep version 0
     apply_batch_bucketed(spark, s, df_of(spark, batches[1]), 1, "r")
     m1 = dict(s.current()["manifest"])
     assert 0 in set(m1.values()) and 1 in set(m1.values())
@@ -212,25 +200,17 @@ def test_crossover_auto_selects_and_matches_fixed_modes(spark, tmp_path):
     apply_batch_bucketed(spark, s, df_of(spark, batches[2]), 2, "r")
     m2 = dict(s.current()["manifest"])
     assert set(m2.values()) == {2}
-    # fixed "bucketed" on the same dense epoch keeps old versions around
-    sb = stores["bucketed"]
-    mb = dict(sb.current()["manifest"])
-    assert len(set(mb.values())) > 1  # sparse epochs left mixed versions
-    # fixed "full" always ends single-version
-    mf = dict(stores["full"].current()["manifest"])
-    assert set(mf.values()) == {3}
-    # a threshold of 1.0 never flips to full on these batches
-    s1 = BucketedViewStore(str(tmp_path / "never"), n_buckets=8)
-    apply_batch_bucketed(
-        spark, s1, df_of(spark, batches[0]), 0, "r", rewrite_frac=1.01
-    )
-    apply_batch_bucketed(
-        spark, s1, df_of(spark, batches[1]), 1, "r", rewrite_frac=1.01
-    )
-    mv = dict(s1.current()["manifest"])
-    assert 0 in set(mv.values())
-    # mode validation
-    with pytest.raises(ValueError):
-        apply_batch_bucketed(
-            spark, s1, df_of(spark, batches[1]), 2, "r", mode="nope"
-        )
+    # sparse again: the cold buckets keep the dense epoch's version
+    apply_batch_bucketed(spark, s, df_of(spark, batches[3]), 3, "r")
+    m3 = dict(s.current()["manifest"])
+    assert set(m3.values()) == {2, 3}
+
+    all_events = df_of(spark, [r for b in batches for r in b])
+    want = {
+        r["id"]: (r["title"], r["updated_at"])
+        for r in latest_live_state(
+            all_events, key=["id"], tiebreak=["created_at", "title"]
+        ).collect()
+    }
+    assert collect_view(spark, s) == want
+    assert "k5" not in want and "k99" in want

@@ -2,8 +2,8 @@
 makes snapshot commits safe where rename is not atomic (object stores).
 
 The backend tests need no SparkSession — the backends are pure
-pointer-file protocols. The two store-level tests at the end pin that a
-stale writer conflicts instead of clobbering; crash replay through the
+pointer-file protocols. The three store-level tests at the end pin that
+a stale writer conflicts instead of clobbering; crash replay through the
 stores is pinned by tests/test_bucketed_crash.py under both backends.
 """
 
@@ -141,3 +141,43 @@ def test_bm25_takedown_racing_an_append_conflicts_instead_of_being_lost(
     assert cur["tombstones"] == [1] and cur["n_docs"] == 2 and cur["epoch"] == 1
     hits = store.query(spark, [(0, "alpha")])
     assert {r["doc_id"] for r in hits.collect()} == {3}
+
+
+def test_bloom_sidecar_commit_racing_a_rival_conflicts_instead_of_losing_bits(
+    tmp_path, spark, monkeypatch
+):
+    """Under CAS, a rival writer's Bloom sidecar commit that lands
+    between a writer's sidecar read and its own sidecar commit makes the
+    writer fail: it OR-merged its digests into the filter it read, and
+    committing that would drop the rival's bits — a filter missing
+    accepted keys admits duplicates."""
+    from nexus_event_stream_spark.streaming import bloom_dedup
+    from nexus_event_stream_spark.streaming.bloom_dedup import (
+        exact_store,
+        exact_suppress_and_register,
+        read_bloom,
+    )
+
+    path = str(tmp_path / "exact")
+    a = exact_store(path, n_buckets=8, backend=ConditionalPutBackend())
+    b = exact_store(path, n_buckets=8, backend=ConditionalPutBackend())
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    exact_suppress_and_register(spark, a, docs([(1, "alpha")]), 0, "A")
+    real_build = bloom_dedup.bloom_build
+    rival_words = []
+
+    def build_after_rival(*args, **kwargs):
+        monkeypatch.setattr(bloom_dedup, "bloom_build", real_build)
+        exact_suppress_and_register(spark, b, docs([(2, "beta")]), 1, "B")
+        rival_words.append(read_bloom(b).words)
+        return real_build(*args, **kwargs)
+
+    monkeypatch.setattr(bloom_dedup, "bloom_build", build_after_rival)
+    with pytest.raises(CommitConflictError):
+        exact_suppress_and_register(spark, a, docs([(3, "gamma")]), 1, "A")
+    # the rival's bits survive; the refused writer committed nothing
+    assert rival_words and read_bloom(a).words == rival_words[0]
+    assert a.current()["epoch"] == 1 and a.current()["run_token"] == "B"

@@ -15,6 +15,10 @@ from nexus_event_stream_spark.operators.similarity import (
     ann_topk_per_vector,
     brute_force_topk,
 )
+from nexus_event_stream_spark.streaming.commit import (
+    ConditionalPutBackend,
+    PosixRenameBackend,
+)
 
 DOC_SCHEMA = "doc_id long, text string, source string"
 
@@ -194,23 +198,42 @@ def test_connected_components_chain_and_clique(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
-def test_merge_edges_matches_full_recompute_on_random_streams(spark):
+def _fold_labels(spark, store, batches):
+    """Fold edge batches epoch by epoch through the streaming label fold
+    and return the committed ``{node: comp}`` labeling."""
+    from nexus_event_stream_spark.streaming.dedup import (
+        update_cluster_labels_bucketed,
+    )
+
+    for epoch, rows in enumerate(batches):
+        pairs = spark.createDataFrame(rows, "doc_a long, doc_b long")
+        update_cluster_labels_bucketed(spark, store, pairs, epoch, "r")
+    return {r["node"]: r["comp"] for r in store.read(spark).collect()}
+
+
+@pytest.mark.parametrize(
+    "backend_cls", [PosixRenameBackend, ConditionalPutBackend],
+    ids=["rename", "cas"],
+)
+def test_label_fold_matches_full_recompute_on_random_streams(
+    spark, tmp_path, backend_cls
+):
     """Incremental CC: folding delta-edge batches into an existing
     labeling must label-match a full recompute over the union of every
     edge seen — including batches that BRIDGE two existing components
-    and batches introducing brand-new nodes."""
+    and batches introducing brand-new nodes. Trials vary the bucket
+    count (1: every epoch rewrites the whole store; 64: epochs rewrite
+    only their touched buckets) under both commit backends."""
     import random
 
-    from nexus_event_stream_spark.operators.dedup import (
-        connected_components,
-        merge_edges,
-    )
+    from nexus_event_stream_spark.operators.dedup import connected_components
+    from nexus_event_stream_spark.streaming.dedup import bucketed_label_store
 
     def df_pairs(rows):
         return spark.createDataFrame(rows, "doc_a long, doc_b long")
 
     rng = random.Random(7)
-    for trial in range(3):
+    for trial, n_buckets in enumerate((1, 8, 64)):
         n_nodes = 30
         all_edges = [
             (rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(40)
@@ -218,18 +241,14 @@ def test_merge_edges_matches_full_recompute_on_random_streams(spark):
         all_edges = [(a, b) for a, b in all_edges if a != b]
         cut = len(all_edges) // 3
         base, deltas = all_edges[:cut], all_edges[cut:]
-
-        labels = connected_components(df_pairs(base)) if base else None
-        # fold the remaining edges in two delta batches
+        # a base epoch, then the remaining edges in two delta epochs
         mid = len(deltas) // 2
-        for chunk in (deltas[:mid], deltas[mid:]):
-            if not chunk:
-                continue
-            if labels is None:
-                labels = connected_components(df_pairs(chunk))
-            else:
-                labels = merge_edges(labels, df_pairs(chunk))
-        got = {r["node"]: r["comp"] for r in labels.collect()}
+        batches = [b for b in (base, deltas[:mid], deltas[mid:]) if b]
+        store = bucketed_label_store(
+            str(tmp_path / f"t{trial}"), n_buckets=n_buckets,
+            backend=backend_cls(),
+        )
+        got = _fold_labels(spark, store, batches)
         want = {
             r["node"]: r["comp"]
             for r in connected_components(df_pairs(all_edges)).collect()
@@ -237,23 +256,14 @@ def test_merge_edges_matches_full_recompute_on_random_streams(spark):
         assert got == want, f"trial {trial} diverged"
 
 
-def test_merge_edges_bridges_components_and_adds_nodes(spark):
+def test_label_fold_bridges_components_and_adds_nodes(spark, tmp_path):
     """The two interesting deltas, pinned explicitly: an edge bridging
     two settled components relabels the LARGER-labeled one wholesale;
     never-seen nodes join with min-id semantics intact."""
-    from nexus_event_stream_spark.operators.dedup import (
-        connected_components,
-        merge_edges,
-    )
+    from nexus_event_stream_spark.streaming.dedup import bucketed_label_store
 
-    base = spark.createDataFrame(
-        [(1, 2), (10, 11)], "doc_a long, doc_b long"
-    )
-    labels = connected_components(base)
-    delta = spark.createDataFrame(
-        [(2, 10), (50, 51)], "doc_a long, doc_b long"
-    )
-    got = {r["node"]: r["comp"] for r in merge_edges(labels, delta).collect()}
+    store = bucketed_label_store(str(tmp_path / "labels"), n_buckets=8)
+    got = _fold_labels(spark, store, [[(1, 2), (10, 11)], [(2, 10), (50, 51)]])
     assert got == {1: 1, 2: 1, 10: 1, 11: 1, 50: 50, 51: 50}
 
 

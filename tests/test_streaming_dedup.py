@@ -383,30 +383,34 @@ def test_compact_preserves_corpus_pointer(spark, store_dir):
 def test_update_cluster_labels_stream_matches_full_recompute(
     spark, tmp_path, backend
 ):
-    """Cluster labels maintained across micro-batches (merge_edges folds
-    under the store's replay guard) must equal one connected_components
-    run over every pair ever seen; a redelivered epoch is a no-op."""
+    """Cluster labels maintained across micro-batches (delta folds under
+    the store's replay guard) must equal one connected_components run
+    over every pair ever seen; a redelivered epoch is a no-op."""
     from nexus_event_stream_spark.operators.dedup import connected_components
     from nexus_event_stream_spark.streaming.dedup import (
-        label_store,
-        update_cluster_labels,
+        bucketed_label_store,
+        update_cluster_labels_bucketed,
     )
 
     def pairs_df(rows):
         return spark.createDataFrame(rows, "doc_a long, doc_b long")
 
-    store = label_store(str(tmp_path / "labels"), backend=backend)
+    store = bucketed_label_store(
+        str(tmp_path / "labels"), n_buckets=8, backend=backend
+    )
     batches = [
         [(1, 2), (3, 4)],
         [(2, 3), (10, 11)],        # bridges {1,2} and {3,4}
         [(11, 12), (50, 51)],      # extends a cluster + a brand-new one
     ]
     for e, rows in enumerate(batches):
-        update_cluster_labels(spark, store, pairs_df(rows), e, "run1")
+        update_cluster_labels_bucketed(spark, store, pairs_df(rows), e, "run1")
     ver = store.current()["version"]
 
     # replay of the last epoch: no new snapshot
-    update_cluster_labels(spark, store, pairs_df(batches[-1]), 2, "run1")
+    update_cluster_labels_bucketed(
+        spark, store, pairs_df(batches[-1]), 2, "run1"
+    )
     assert store.current()["version"] == ver
 
     got = {r["node"]: r["comp"] for r in store.read(spark).collect()}
@@ -862,14 +866,13 @@ def test_tombstone_queue_cap_triggers_full_sweep_on_append(spark, store_dir):
 
 
 def test_update_cluster_labels_bucketed_auto_dispatch(spark, tmp_path):
-    """r13 verdict #4: the label store picks bucketed-vs-full rewrite by
-    the touched-bucket fraction itself (same dispatch as
-    apply_batch_bucketed), instead of leaving it to the caller. Two
-    stores replay identical epochs — ``auto`` vs forced ``bucketed`` —
-    and must end with IDENTICAL labels (equal to a full recompute); the
-    dispatch pin is the manifest shape: the dense epoch collapses auto's
-    manifest to the head version (full rewrite) while the forced
-    bucketed store still carries older versions for untouched buckets."""
+    """r13 verdict #4: the label store picks partial-vs-full rewrite by
+    the touched-bucket fraction itself (the store's ``rewrite_set``, as
+    for apply_batch_bucketed), instead of leaving it to the caller. The
+    dispatch pin is the manifest shape: a sparse epoch leaves the cold
+    buckets at the install version, a dense epoch collapses the manifest
+    to the head version (full rewrite). Labels equal a full recompute
+    after each."""
     from nexus_event_stream_spark.operators.dedup import connected_components
     from nexus_event_stream_spark.streaming.dedup import (
         bucketed_label_store,
@@ -880,52 +883,50 @@ def test_update_cluster_labels_bucketed_auto_dispatch(spark, tmp_path):
     def pairs_df(rows):
         return spark.createDataFrame(rows, "doc_a long, doc_b long")
 
-    install = [(i, i + 10_000) for i in range(64)]  # 64 comps, min-id=i
-    auto = bucketed_label_store(str(tmp_path / "auto"), n_buckets=8)
-    forced = bucketed_label_store(str(tmp_path / "forced"), n_buckets=8)
-    update_cluster_labels_bucketed(spark, auto, pairs_df(install), 0, "r")
-    update_cluster_labels_bucketed(spark, forced, pairs_df(install), 0, "r")
+    def oracle(rows):
+        return {
+            r["node"]: r["comp"]
+            for r in connected_components(pairs_df(rows)).collect()
+        }
 
-    # comp → bucket, computed with the store's own hash; pick one comp
-    # from each of 6 of the 8 buckets and chain-merge them — touched
-    # fraction ≥ 5/8 > rewrite_frac=0.6 ⇒ auto escalates; 2+ buckets
-    # stay cold for the forced-bucketed contrast
+    install = [(i, i + 10_000) for i in range(64)]  # 64 comps, min-id=i
+    store = bucketed_label_store(str(tmp_path / "labels"), n_buckets=8)
+    update_cluster_labels_bucketed(spark, store, pairs_df(install), 0, "r")
+
+    # comp → bucket, computed with the store's own hash
     bmap = {
         r["comp"]: r["b"]
-        for r in auto.read(spark)
+        for r in store.read(spark)
         .select("comp")
         .distinct()
         .select("comp", _bucket_expr(8, "comp").alias("b"))
         .collect()
     }
     assert len(set(bmap.values())) == 8  # install covers every bucket
-    by_bucket: dict[int, int] = {}
+    by_bucket: dict[int, list[int]] = {}
     for comp, b in sorted(bmap.items()):
-        by_bucket.setdefault(b, comp)
-    chain = [by_bucket[b] for b in sorted(by_bucket)[:6]]
+        by_bucket.setdefault(b, []).append(comp)
+    buckets = sorted(by_bucket)
+
+    # sparse epoch: merge two comps of ONE bucket — 1/8 touched, below
+    # the 0.6 crossover, so the other seven buckets stay cold
+    a, b = by_bucket[buckets[0]][:2]
+    sparse = [(a, b)]
+    update_cluster_labels_bucketed(spark, store, pairs_df(sparse), 1, "r")
+    m1 = store.current()["manifest"]
+    assert sorted(set(m1.values())) == [0, 1]
+    assert sum(v == 1 for v in m1.values()) == 1
+    assert {
+        r["node"]: r["comp"] for r in store.read(spark).collect()
+    } == oracle(install + sparse)
+
+    # dense epoch: chain-merge one comp from each of 6 of the 8 buckets —
+    # touched fraction ≥ 5/8 > 0.6, so every bucket is rewritten
+    chain = [by_bucket[k][-1] for k in buckets[:6]]
     dense = list(zip(chain, chain[1:]))
-    update_cluster_labels_bucketed(spark, auto, pairs_df(dense), 1, "r")
-    update_cluster_labels_bucketed(
-        spark, forced, pairs_df(dense), 1, "r", mode="bucketed"
-    )
-
-    want = {
-        r["node"]: r["comp"]
-        for r in connected_components(pairs_df(install + dense)).collect()
-    }
-    got_auto = {r["node"]: r["comp"] for r in auto.read(spark).collect()}
-    got_forced = {r["node"]: r["comp"] for r in forced.read(spark).collect()}
-    assert got_auto == want and got_forced == want
-
-    # dispatch pin: auto's dense epoch rewrote EVERY bucket (manifest
-    # collapsed to the head version); forced-bucketed left the cold
-    # buckets at their install version
-    a_head, a_manifest = auto.current()["version"], auto.current()["manifest"]
-    assert set(a_manifest.values()) == {a_head}
-    f_head = forced.current()["version"]
-    assert any(v < f_head for v in forced.current()["manifest"].values())
-
-    with pytest.raises(ValueError, match="auto|bucketed|full"):
-        update_cluster_labels_bucketed(
-            spark, auto, pairs_df([(1, 2)]), 2, "r", mode="nope"
-        )
+    update_cluster_labels_bucketed(spark, store, pairs_df(dense), 2, "r")
+    head, m2 = store.current()["version"], store.current()["manifest"]
+    assert set(m2.values()) == {head}
+    assert {
+        r["node"]: r["comp"] for r in store.read(spark).collect()
+    } == oracle(install + sparse + dense)

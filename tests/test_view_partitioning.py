@@ -1,14 +1,10 @@
-"""Priority-partitioned view store: roundtrip + serving-side pruning."""
+"""Full-snapshot view store: the current+previous retention window."""
 
 from __future__ import annotations
 
 import datetime as dt
-import json
-
-from pyspark.sql import functions as F
 
 from nexus_event_stream_spark.schemas import STATE_SCHEMA
-from nexus_event_stream_spark.serving import SignalService
 from nexus_event_stream_spark.streaming.projection import ParquetViewStore
 
 UTC = dt.timezone.utc
@@ -17,27 +13,6 @@ UTC = dt.timezone.utc
 def vrow(id_, priority):
     ts = dt.datetime(2026, 2, 23, 18, 0, tzinfo=UTC)
     return ("created", id_, f"t-{id_}", "c", priority, "otavio", ts, ts)
-
-
-def test_partitioned_store_roundtrip_and_pruning(spark, tmp_path):
-    store = ParquetViewStore(str(tmp_path / "view"), partition_by="priority")
-    rows = [vrow("s1", "High"), vrow("s2", "Low"), vrow("s3", "High")]
-    store.write(spark.createDataFrame(rows, STATE_SCHEMA), epoch=0)
-
-    view = store.read_live(spark)
-    assert {r["id"] for r in view.collect()} == {"s1", "s2", "s3"}
-
-    filtered = view.filter(F.col("priority") == "High")
-    plan = filtered._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    # equality on the partition column prunes directories, the Spark
-    # analogue of the reference's priority ZSet index (signal.go:84-96)
-    assert "PartitionFilters: [isnotnull(priority" in plan
-
-    svc = SignalService(spark, store)
-    assert {r["id"] for r in json.loads(svc.list(priority="High"))} == {"s1", "s3"}
-    assert json.loads(svc.list(priority="Bogus")) == []
 
 
 def test_snapshot_retention_window(spark, tmp_path):
