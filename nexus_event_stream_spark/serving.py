@@ -13,24 +13,29 @@ projection/signal.go:70-108; CLI client.go:68-77):
                               ``ErrNotFound`` / HTTP 404 analogue);
 - ``health()``              → view reachability + row count.
 
-``list`` and ``get`` return the response body as JSON text. Each read is
-ONE Spark job whose rows are JSON-encoded in the JVM (``to_json``), so the
-driver builds no per-row ``Row`` objects. Each endpoint is a one-liner
-DataFrame query over the materialized view; Catalyst's pushdown replaces
-the reference's hand-picked Redis indexes (SURVEY.md §4). The lazy view
-plan is built once per committed snapshot and reused until the pointer
-moves (snapshot directories are immutable), so a read pays no file
-listing or scan analysis.
+``list`` and ``get`` return the response body as JSON text. A committed
+pointer names an immutable snapshot directory, so every answer is a pure
+function of (pointer, request): the reference serves from an in-memory
+materialized view (Redis sorted sets), and ``SignalService`` does the
+same with ONE Spark job per committed pointer. The first read after the
+pointer moves collects the live view's ``id``, ``priority``,
+``created_at`` and each row's JSON text (encoded in the JVM by
+``to_json``) as an Arrow table; every later read of that pointer is
+answered from the table by ``pyarrow.compute`` and runs no Spark job
+(the Drizzle argument: pay a job's fixed scheduling cost once per
+snapshot, not once per read).
 """
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from nexus_event_stream_spark.operators.topk import newest_first
 from nexus_event_stream_spark.schemas import PRIORITY_SCORES
 from nexus_event_stream_spark.streaming.projection import ParquetViewStore
 
@@ -55,70 +60,120 @@ def _json(view: DataFrame) -> Column:
 
 
 @dataclass
+class _Snapshot:
+    """The live view under one committed pointer, collected once: the
+    keys the reads order and filter on, plus each row's JSON text."""
+
+    pointer: dict
+    table: pa.Table  # id, priority, created_at, json
+    #: priorities present: any other filter answers ``[]`` unmemoized,
+    #: so client-chosen strings cannot grow the memo
+    priorities: frozenset
+    #: response bodies by priority (``None`` = the unfiltered list); a
+    #: race between handler threads only computes an equal body twice
+    bodies: dict = field(default_factory=dict)
+
+    @classmethod
+    def collect(cls, view: DataFrame, pointer: dict) -> _Snapshot:
+        table = view.select(
+            "id", "priority", "created_at", _json(view).alias("json")
+        ).toArrow()
+        present = pc.unique(table["priority"]).drop_null().to_pylist()
+        return cls(pointer, table, frozenset(present))
+
+    def body(self, priority: str | None) -> str:
+        t = self.table
+        if priority is None:
+            # newest first, ties by id desc, nulls last: Spark's
+            # ``orderBy(created_at.desc(), id.desc())``
+            order = pc.sort_indices(
+                t,
+                [("created_at", "descending"), ("id", "descending")],
+                null_placement="at_end",
+            )[:LIST_LIMIT]
+        else:
+            # ListByPriority has NO 0-49 range (ZRangeArgs ByScore, exact
+            # score): ALL matches, ascending member order, nulls first
+            # like Spark's ``id.asc()``
+            t = t.filter(pc.equal(t["priority"], priority))
+            order = pc.sort_indices(
+                t, [("id", "ascending")], null_placement="at_start"
+            )
+        return "[" + ",".join(t["json"].take(order).to_pylist()) + "]"
+
+
+@dataclass
 class SignalService:
+    """The signal read endpoints over a view store's committed snapshot.
+
+    One Spark job per committed pointer: the first read after a commit
+    collects the snapshot (``_Snapshot``), and list, filter, get and
+    health on that pointer are answered from it with no job. The list
+    body and each present priority's body are memoized on the snapshot.
+
+    Trade-offs: the snapshot costs O(|view|) driver memory — the same
+    order as what the full-snapshot ``ParquetViewStore`` rewrites every
+    epoch; at-scale reads go through ``serving_layout.serve_*`` instead.
+    A one-shot caller (the CLI) pays one snapshot build per command,
+    which costs more than one filtered query would.
+    """
+
     spark: SparkSession
     store: ParquetViewStore
-    #: (pointer, live view) of the snapshot last served: a lazy plan, not
-    #: rows, rebuilt only when the committed pointer moves
-    _live: tuple = field(default=(None, None), init=False, repr=False)
+    #: the snapshot last served; replaced (the old one dropped) when the
+    #: committed pointer moves, so one snapshot stays resident
+    _snap: _Snapshot | None = field(default=None, init=False, repr=False)
+    _build: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False
+    )
 
-    def _view(self) -> DataFrame | None:
-        # HTTP handler threads share the cache without a lock: a request
-        # always serves the plan of the pointer IT read, so a race costs
-        # at most a duplicate rebuild, never a stale or mixed snapshot
+    def _snapshot(self) -> _Snapshot | None:
         cur = self.store.current()
         if cur is None:
             return None
-        pinned, view = self._live
-        if pinned != cur:
-            view = self.store.read_live(self.spark, cur=cur)
-            self._live = (cur, view)
-        return view
+        snap = self._snap
+        if snap is not None and snap.pointer == cur:
+            return snap
+        with self._build:
+            # single flight: a request that waited for another's build
+            # re-reads the pointer and serves the snapshot of THAT read —
+            # the newest commit, never one superseded (maybe vacuumed)
+            # while it waited
+            cur = self.store.current()
+            snap = self._snap
+            if snap is None or snap.pointer != cur:
+                view = self.store.read_live(self.spark, cur=cur) if cur else None
+                snap = None if view is None else _Snapshot.collect(view, cur)
+                self._snap = snap
+        return snap
 
     def list(self, priority: str | None = None) -> str:
-        view = self._view()
-        if view is None:
+        snap = self._snapshot()
+        # Unknown display string maps to score 0 → matches nothing
+        # (projection/signal.go:21-25,84-96): an empty list, not an error
+        if snap is None or (
+            priority is not None and priority not in snap.priorities
+        ):
             return "[]"
-        if priority is not None:
-            # Unknown display string maps to score 0 → matches nothing
-            # (projection/signal.go:21-25,84-96). Equality on the stored
-            # display string reproduces that: bogus values hit no rows.
-            # ListByPriority has NO 0-49 range (ZRangeArgs ByScore, exact
-            # score): it returns ALL matches, ascending member order —
-            # the 50-row cap applies only to the unfiltered list.
-            # The order is applied here to the collected (id, json) pairs,
-            # nulls first like ``id.asc()``: an orderBy would add a
-            # range-sort shuffle to every read.
-            pairs = (
-                view.filter(F.col("priority") == F.lit(priority))
-                .select("id", _json(view))
-                .collect()
-            )
-            pairs.sort(key=lambda r: (r[0] is not None, r[0]))
-            return "[" + ",".join(r[1] for r in pairs) + "]"
-        top = newest_first(
-            view, ts_col="created_at", tiebreak=["id"], limit=LIST_LIMIT
-        ).select(_json(view))
-        return "[" + ",".join(r[0] for r in top.collect()) + "]"
+        body = snap.bodies.get(priority)
+        if body is None:
+            body = snap.bodies[priority] = snap.body(priority)
+        return body
 
     def get(self, id_: str) -> str:
-        view = self._view()
-        # ids are unique in the view, so no limit: the scan is one job
-        rows = (
-            view.filter(F.col("id") == F.lit(id_)).select(_json(view)).collect()
-            if view is not None
-            else []
-        )
-        if not rows:
+        snap = self._snapshot()
+        # ids are unique in the view: the first match is the only one
+        i = -1 if snap is None else pc.index(snap.table["id"], id_).as_py()
+        if i < 0:
             raise NotFoundError(id_)
-        return rows[0][0]
+        return snap.table["json"][i].as_py()
 
     def health(self) -> dict:
-        view = self._view()
+        snap = self._snapshot()
         return {
             "status": "ok",
-            "view_exists": view is not None,
-            "rows": view.count() if view is not None else 0,
+            "view_exists": snap is not None,
+            "rows": 0 if snap is None else snap.table.num_rows,
         }
 
     @staticmethod

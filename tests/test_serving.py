@@ -13,6 +13,8 @@ import threading
 import time
 
 import pytest
+from pyspark import InheritableThread
+from pyspark.sql import functions as F
 
 from nexus_event_stream_spark.schemas import STATE_SCHEMA
 from nexus_event_stream_spark.serving import (
@@ -103,6 +105,9 @@ def test_health_counts(spark, tmp_path):
     svc = SignalService(spark, seed_store(spark, tmp_path, [vrow("s1"), vrow("s2")]))
     h = svc.health()
     assert h["status"] == "ok" and h["rows"] == 2
+    # the row count comes from the pinned snapshot: no job per probe
+    again, jobs = _spark_jobs(spark, "health-again", svc.health)
+    assert again == h and jobs == []
 
 
 def _utc(ts: str) -> dt.datetime:
@@ -123,27 +128,78 @@ def _spark_jobs(spark, group, call):
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_wire_contract_one_job_per_read(spark, tmp_path):
-    """The JSON text ``list``/``get`` return is the HTTP body as sent:
-    nulls kept, microsecond timestamps, newest-50 with id-desc ties, the
-    uncapped id-ascending filter, the 404 analogue — each read ONE job."""
-    ts = dt.datetime(2026, 2, 23, 18, 0, 0, 123456, tzinfo=UTC)
+def _reference_bodies(spark, store, priorities, ids):
+    """The bodies of the one-job-per-read DataFrame queries the snapshot
+    replaced — the byte-level reference: (list and filter bodies keyed by
+    priority, ``None`` = the list; get body or ``None`` per id)."""
+    view = store.read_live(spark)
+    js = F.to_json(
+        F.struct(*view.columns),
+        {
+            "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+            "ignoreNullFields": "false",
+        },
+    )
+
+    def body(texts):
+        return "[" + ",".join(texts) + "]"
+
+    top = view.orderBy(F.col("created_at").desc(), F.col("id").desc()).limit(50)
+    lists = {None: body(r[0] for r in top.select(js).collect())}
+    for p in priorities:
+        pairs = view.filter(F.col("priority") == F.lit(p)).select("id", js).collect()
+        pairs.sort(key=lambda r: (r[0] is not None, r[0]))
+        lists[p] = body(r[1] for r in pairs)
+    gets = {}
+    for i in ids:
+        hit = view.filter(F.col("id") == F.lit(i)).select(js).collect()
+        gets[i] = hit[0][0] if hit else None
+    return lists, gets
+
+
+def _served_bodies(svc, priorities, ids):
+    lists = {p: svc.list(priority=p) for p in [None, *priorities]}
+    gets = {}
+    for i in ids:
+        try:
+            gets[i] = svc.get(i)
+        except NotFoundError:
+            gets[i] = None
+    return lists, gets
+
+
+def _wire_rows(ts, n, prefix):
+    """``n`` view rows in threes sharing one ``created_at`` (ties to break
+    by id), every 7th without an author, every 11th without a priority
+    and every 13th without a ``created_at``."""
     rows = []
-    for i in range(70):
-        # rows come in threes sharing one created_at: ties to break by id
+    for i in range(n):
         created = ts - dt.timedelta(seconds=i // 3, microseconds=7 * (i // 3))
         rows.append(
             (
                 "created",
-                f"s{i:03d}",
+                f"{prefix}{i:03d}",
                 f"title-{i}",
                 "c",
-                ("High", "Low", "Medium")[i % 3],
+                None if i % 11 == 5 else ("High", "Low", "Medium")[i % 3],
                 None if i % 7 == 0 else "otavio",
-                created,
+                None if i % 13 == 12 else created,
                 created + dt.timedelta(microseconds=1),
             )
         )
+    return rows
+
+
+def test_wire_contract_one_job_per_snapshot(spark, tmp_path):
+    """The JSON text ``list``/``get`` return is the HTTP body as sent:
+    nulls kept, microsecond timestamps, newest-50 with id-desc ties and
+    null ``created_at`` last, the uncapped id-ascending filter, the 404
+    analogue — byte-equal to the one-job-per-read queries it replaced.
+    The first read after a commit runs ONE job; every other read of that
+    pointer runs none."""
+    priorities = ["High", "Low", "Medium", "Urgent"]
+    ts = dt.datetime(2026, 2, 23, 18, 0, 0, 123456, tzinfo=UTC)
+    rows = _wire_rows(ts, 70, "s")
     store = ParquetViewStore(str(tmp_path / "view"))
     store.write(
         spark.createDataFrame(rows, STATE_SCHEMA).repartition(3), epoch=0
@@ -155,7 +211,8 @@ def test_wire_contract_one_job_per_read(spark, tmp_path):
     body, jobs = _spark_jobs(spark, "wire-list", svc.list)
     assert len(jobs) == 1
     out = json.loads(body)
-    newest = sorted(rows, key=lambda r: (r[6], r[1]), reverse=True)[:50]
+    dated = [r for r in rows if r[6] is not None]
+    newest = sorted(dated, key=lambda r: (r[6], r[1]), reverse=True)[:50]
     assert [r["id"] for r in out] == [r[1] for r in newest]
     for got in out:
         row = want[got["id"]]
@@ -166,22 +223,101 @@ def test_wire_contract_one_job_per_read(spark, tmp_path):
     body, jobs = _spark_jobs(
         spark, "wire-filter", lambda: svc.list(priority="Low")
     )
-    assert len(jobs) == 1
+    assert jobs == []
     assert [r["id"] for r in json.loads(body)] == sorted(
         r[1] for r in rows if r[4] == "Low"
     )
     body, jobs = _spark_jobs(
         spark, "wire-unknown", lambda: svc.list(priority="Urgent")
     )
-    assert len(jobs) == 1 and json.loads(body) == []
+    assert jobs == [] and json.loads(body) == []
 
     body, jobs = _spark_jobs(spark, "wire-get", lambda: svc.get("s014"))
-    assert len(jobs) == 1
+    assert jobs == []
     got = json.loads(body)
     assert got["author"] is None and got["title"] == "title-14"
     assert _utc(got["created_at"]) == want["s014"][6]
-    with pytest.raises(NotFoundError):
-        svc.get("ghost")
+    _, jobs = _spark_jobs(
+        spark, "wire-404", lambda: pytest.raises(NotFoundError, svc.get, "ghost")
+    )
+    assert jobs == []
+
+    ids = ["s000", "s005", "s012", "s069", "ghost"]
+    served, jobs = _spark_jobs(
+        spark, "wire-all", lambda: _served_bodies(svc, priorities, ids)
+    )
+    assert jobs == []
+    assert served == _reference_bodies(spark, store, priorities, ids)
+
+    # a new commit: the next read runs one job and serves the new rows;
+    # under 50 rows the list shows where null ``created_at`` sorts
+    rows = _wire_rows(ts, 26, "t")
+    store.write(spark.createDataFrame(rows, STATE_SCHEMA), epoch=1)
+    body, jobs = _spark_jobs(spark, "wire-commit", lambda: svc.get("t014"))
+    assert len(jobs) == 1 and json.loads(body)["title"] == "title-14"
+    ids = ["t000", "t012", "t025", "s014"]
+    served, jobs = _spark_jobs(
+        spark, "wire-all-2", lambda: _served_bodies(svc, priorities, ids)
+    )
+    assert jobs == []
+    out = json.loads(served[0][None])
+    assert [r["id"] for r in out[-2:]] == ["t025", "t012"]
+    assert all(r["created_at"] is None for r in out[-2:])
+    assert served[1]["s014"] is None
+    assert served == _reference_bodies(spark, store, priorities, ids)
+
+
+def test_first_read_of_a_pointer_is_single_flight(spark, tmp_path):
+    """Eight handler threads issue the first read of a fresh pointer at
+    once: one of them builds the snapshot, in ONE job, and all serve it."""
+    rows = [vrow(f"s{i:02d}", ("High", "Low")[i % 2]) for i in range(20)]
+    svc = SignalService(spark, seed_store(spark, tmp_path, rows))
+    n = 8
+    gate = threading.Barrier(n)
+    bodies, errors = [None] * n, []
+
+    def reader(k):
+        try:
+            gate.wait(timeout=60)
+            bodies[k] = svc.list(priority="High")
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    def run():
+        # InheritableThread carries the job group into each reader
+        threads = [InheritableThread(target=reader, args=(k,)) for k in range(n)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(interval)
+        return threads
+
+    threads, jobs = _spark_jobs(spark, "single-flight", run)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    assert len(jobs) == 1
+    assert len(set(bodies)) == 1
+    assert [r["id"] for r in json.loads(bodies[0])] == [
+        f"s{i:02d}" for i in range(0, 20, 2)
+    ]
+
+
+def test_unknown_priorities_leave_the_memo_bounded(spark, tmp_path):
+    """Only present priorities are memoized: distinct ``?priority=``
+    strings from a client cannot grow driver memory until the next
+    commit."""
+    rows = [vrow("s1", "High"), vrow("s2", "Low")]
+    svc = SignalService(spark, seed_store(spark, tmp_path, rows))
+    assert len(json.loads(svc.list())) == 2
+    assert [r["id"] for r in json.loads(svc.list(priority="Low"))] == ["s2"]
+    for k in range(1000):
+        assert svc.list(priority=f"p{k}") == "[]"
+    assert set(svc._snap.bodies) <= {None, "High", "Low"}
 
 
 def test_concurrent_reads_follow_commits(spark, tmp_path):
