@@ -16,9 +16,12 @@ size the probe reads the WHOLE store every epoch even when the batch is
   everything else is provably novel (no false negatives) and is accepted
   without reading a single store file (``last_probe_paths == []`` on a
   novel-only batch, pinned);
-- candidates go through the normal bucket-pruned EXACT probe, so unlike
-  raw Dolma the filter's false positives cost a bucket read, never a
-  dropped novel document — the result is exact dedup at Bloom cost.
+- candidates go through the normal bucket-pruned EXACT probe
+  (``SignatureStore.probe``: only the candidates' buckets, tombstones
+  filtered, and on a replay the epoch's own postings masked out), so
+  unlike raw Dolma the filter's false positives cost a bucket read,
+  never a dropped novel document — the result is exact dedup at Bloom
+  cost.
 
 Commit ordering makes the two pointers safe without a joint atomic
 commit: the sidecar (filter) commits BEFORE the store append. A crash
@@ -66,7 +69,6 @@ from nexus_event_stream_spark.operators.bloom import (
 )
 from nexus_event_stream_spark.streaming.commit import PointerStore
 from nexus_event_stream_spark.streaming.dedup import SignatureStore
-from nexus_event_stream_spark.streaming.projection import _bucket_expr
 
 #: posting schema for the exact tier: the digest IS the bucket key.
 EXACT_POSTING_SCHEMA = T.StructType(
@@ -251,30 +253,18 @@ def exact_suppress_and_register(
             candidates = batch_kept.filter(
                 bloom_might_contain(bf, F.col("__digest"))
             )
-        touched = sorted(
-            r[0]
-            for r in candidates.select(
-                _bucket_expr(store.n_buckets, "__digest").alias("b")
-            )
-            .distinct()
-            .collect()
+        # THE Bloom win, pinned by tests: a novel-only batch touches no
+        # bucket and resolves with zero store paths read
+        stored = store.probe(
+            spark,
+            candidates.select(F.col("__digest").alias("bucket_key")),
+            epoch,
+            run_token,
+            replay,
         )
-        if not touched:
-            # THE Bloom win, pinned by tests: a novel-only batch resolves
-            # with zero store paths read
-            store.last_probe_paths = []
-        stored = store.read_buckets(spark, touched) if touched else None
         if stored is None:
             survivors = batch_kept
         else:
-            if replay:
-                # postings this very epoch wrote must not suppress its docs
-                stored = stored.filter(
-                    ~(
-                        (F.col("run") == F.lit(run_token))
-                        & (F.col("epoch") >= F.lit(epoch))
-                    )
-                )
             dup_digests = stored.select(
                 F.col("bucket_key").alias("__digest")
             ).distinct()
@@ -284,8 +274,6 @@ def exact_suppress_and_register(
             surv_keys = survivors.select(
                 F.col("__digest").alias("bucket_key"),
                 F.col(id_col).alias("doc_id"),
-                F.lit(epoch).cast("long").alias("epoch"),
-                F.lit(run_token).cast("string").alias("run"),
             )
             # filter FIRST (crash leaves a superset — stray candidates, never
             # admitted duplicates), store append second
@@ -416,24 +404,8 @@ def paragraph_suppress_and_register(
                 .select(F.col("h").alias("bucket_key"))
                 .distinct()
             )
-        touched = sorted(
-            r[0]
-            for r in cand.select(
-                _bucket_expr(store.n_buckets, "bucket_key").alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        if not touched:
-            store.last_probe_paths = []  # the Bloom win, pinned by tests
-        stored = store.read_buckets(spark, touched) if touched else None
-        if stored is not None and replay:
-            stored = stored.filter(
-                ~(
-                    (F.col("run") == F.lit(run_token))
-                    & (F.col("epoch") >= F.lit(epoch))
-                )
-            )
+        # a novel-only batch reads no store path (the Bloom win, pinned)
+        stored = store.probe(spark, cand, epoch, run_token, replay)
         if stored is not None:
             hist = stored.select(
                 F.col("bucket_key").alias("h")
@@ -496,8 +468,6 @@ def paragraph_suppress_and_register(
                 .select(
                     F.col("h").alias("bucket_key"),
                     F.col("doc_id").cast("long").alias("doc_id"),
-                    F.lit(epoch).cast("long").alias("epoch"),
-                    F.lit(run_token).cast("string").alias("run"),
                 )
                 .dropDuplicates(["bucket_key"])
             )

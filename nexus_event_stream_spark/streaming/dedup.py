@@ -18,7 +18,14 @@ path (streaming/projection.py):
   within-batch LSH self-join (earlier id wins) → bucket-pruned equi-join
   against the store's touched buckets → exact-Jaccard verify → survivors
   registered back into the store (one append segment + atomic
-  pointer commit);
+  pointer commit). That body, ``_suppress_banded``, is shared with the
+  perceptual tier (streaming/phash_dedup.py): the two differ only in
+  their signatures, band keys and ``close(a, b)`` verify predicate;
+- every signature-store tier (lexical, perceptual, exact, paragraph,
+  substring) reads history through ``SignatureStore.probe``: only the
+  buckets its keys hash into, tombstones filtered, and on a replay less
+  the postings that epoch wrote itself (``replay.replay_mask``);
+  ``SignatureStore.append`` stamps each posting's ``epoch``/``run``;
 - the (run_token, epoch) guard from the projection path makes replayed
   micro-batches no-ops on the store, and the suppression decision itself
   is a deterministic recompute (same batch + same visible postings →
@@ -49,19 +56,18 @@ from __future__ import annotations
 
 import os
 import tempfile
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nexus_event_stream_spark.streaming.projection import (
-    BucketedViewStore,
-    _bucket_expr,
-)
+from nexus_event_stream_spark.streaming.projection import BucketedViewStore
+from nexus_event_stream_spark.streaming.replay import replay_mask
 from nexus_event_stream_spark.operators.dedup import (
     band_key_array,
+    bucket_candidates,
     jaccard,
-    minhash_lsh_candidates,
     minhash_signatures,
 )
 
@@ -171,6 +177,30 @@ class SignatureStore:
             df = df.filter(~F.col("doc_id").isin(tomb))
         return df
 
+    def probe(
+        self,
+        spark: SparkSession,
+        keys: DataFrame,
+        epoch: int | None,
+        run_token: str | None,
+        replay: bool,
+    ) -> DataFrame | None:
+        """The stored postings a batch must be checked against: only the
+        buckets ``keys.bucket_key`` hashes into (``read_buckets``, so
+        tombstoned docs are already gone), and on a ``replay`` less the
+        postings this epoch wrote itself (``replay.replay_mask``) — a
+        replayed epoch recomputes the survivors of its first delivery.
+        None when nothing is stored there; ``last_probe_paths`` is ``[]``
+        when ``keys`` touches no bucket."""
+        touched = self._store.touched_buckets(keys, "bucket_key")
+        if not touched:
+            self.last_probe_paths = []
+            return None
+        stored = self.read_buckets(spark, touched)
+        if stored is None or not replay:
+            return stored
+        return replay_mask(stored, epoch, run_token)
+
     # -- write --------------------------------------------------------------
 
     def append(
@@ -186,6 +216,9 @@ class SignatureStore:
         rows as ``corpus_root/v={version}`` — then commit BOTH with one
         atomic pointer rename. Epoch metadata is recorded even when the
         batch produced no survivors, so the replay guard still engages.
+        Each posting is stamped with ``epoch``/``run_token`` here (its
+        ``epoch``/``run`` columns, what ``probe``'s replay mask reads);
+        ``postings`` carries the schema's other columns.
 
         Exactly-once: every data write targets a directory named by the
         not-yet-committed version with ``mode("overwrite")``, so a replay
@@ -207,8 +240,14 @@ class SignatureStore:
             if any(n.endswith(".parquet") for n in os.listdir(cdir)):
                 corpus_versions.append(version)
         tombstones = (cur or {}).get("tombstones", [])
+        stamp = {
+            "epoch": F.lit(epoch).cast("long").alias("epoch"),
+            "run": F.lit(run_token).cast("string").alias("run"),
+        }
         self._store.append_buckets(
-            postings,
+            postings.select(
+                *[stamp.get(f.name, F.col(f.name)) for f in self.schema.fields]
+            ),
             None,  # band keys were not counted: the inner store sizes the write
             epoch,
             run_token,
@@ -404,90 +443,108 @@ def suppress_and_register(
     The cross-batch probe needs no cap: its traffic is |batch postings| ×
     |stored bucket|, linear in the batch.
     """
-    cur = store.current()
-    replay = store.guard.is_replay(cur, epoch, run_token)
     rows_per_band = num_perm // bands
-    sigs = minhash_signatures(
+    minhash = minhash_signatures(
         docs, num_perm, shingle_n, id_col, text_col
     ).persist()
-    shing = sigs.select("doc_id", "__shingles")
-
-    # (a) within-batch: LSH candidates + verify; the larger id loses.
-    cands = minhash_lsh_candidates(sigs, bands, rows_per_band, max_bucket_size)
-    intra = (
-        cands.join(shing.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(shing.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .filter(
-            jaccard(F.col("sa.__shingles"), F.col("sb.__shingles"))
-            >= F.lit(threshold)
+    try:
+        return _suppress_banded(
+            spark,
+            store,
+            docs,
+            minhash.select(
+                "doc_id", "sig", F.col("__shingles").alias("shingles")
+            ),
+            band_key_array(bands, rows_per_band),
+            "shingles",
+            lambda a, b: jaccard(a, b) >= F.lit(threshold),
+            epoch,
+            run_token,
+            id_col,
+            corpus_path,
+            max_bucket_size,
         )
+    finally:
+        # Release the per-batch cache unconditionally, or a long-running
+        # caller accumulates one pinned relation per epoch. The posting
+        # append (and corpus write, when configured) already materialized
+        # everything this epoch commits; collecting the returned
+        # survivors afterwards recomputes deterministically — the probe
+        # relation was built from an explicit version-dir path list, so
+        # the recompute cannot see this epoch's own postings.
+        minhash.unpersist()
+
+
+def _suppress_banded(
+    spark: SparkSession,
+    store: SignatureStore,
+    rows: DataFrame,
+    sigs: DataFrame,
+    band_keys: Column,
+    payload: str,
+    close: Callable[[Column, Column], Column],
+    epoch: int | None,
+    run_token: str | None,
+    id_col: str,
+    corpus_path: str | None,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """The banded suppress-and-register body shared by the lexical
+    (MinHash bands, Jaccard verify) and perceptual (dHash bands, Hamming
+    verify — streaming/phash_dedup.py) tiers. ``sigs`` holds one row per
+    judgeable doc of ``rows``: ``doc_id``, the verify ``payload`` column
+    (named as in the store's posting schema) and whatever ``band_keys``
+    (the doc's array of band keys) reads; ``close(a, b)`` is the verify
+    predicate over two payloads. A doc is suppressed iff a ``close``
+    doc shares a band key with it among (a) same-batch docs with a
+    smaller id or (b) the store's visible postings; the survivors of
+    ``rows`` are returned and, unless the epoch is a replay, their
+    postings (plus the survivor corpus when ``corpus_path`` is given)
+    are appended under one pointer commit."""
+    replay = store.guard.is_replay(store.current(), epoch, run_token)
+    posts = sigs.select(
+        "doc_id", F.explode(band_keys).alias("bucket_key"), payload
+    )
+
+    # (a) within-batch: band candidates (hot buckets starred) + verify;
+    # the larger id loses.
+    cands = bucket_candidates(
+        posts.select("doc_id", F.col("bucket_key").alias("bucket")),
+        max_bucket_size,
+    )
+    intra = (
+        cands.join(sigs.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
+        .join(sigs.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
+        .filter(close(F.col(f"sa.{payload}"), F.col(f"sb.{payload}")))
         .select(F.col("doc_b").alias("doc_id"))
     )
 
     # (b) cross-batch: probe ONLY the store buckets this batch touches.
-    posts = sigs.select(
-        "doc_id",
-        F.explode(band_key_array(bands, rows_per_band)).alias("bucket_key"),
-        F.col("__shingles"),
-    )
-    touched = sorted(
-        r[0]
-        for r in posts.select(
-            _bucket_expr(store.n_buckets, "bucket_key").alias("b")
-        )
-        .distinct()
-        .collect()
-    )
-    stored = store.read_buckets(spark, touched)
-    if stored is not None and replay:
-        # postings this very epoch wrote must not suppress its own docs
-        stored = stored.filter(
-            ~((F.col("run") == F.lit(run_token)) & (F.col("epoch") >= F.lit(epoch)))
-        )
+    stored = store.probe(spark, posts, epoch, run_token, replay)
     if stored is not None:
         cross = (
             posts.join(
-                stored.select(
-                    "bucket_key", F.col("shingles").alias("__stored_sh")
-                ),
+                stored.select("bucket_key", F.col(payload).alias("__stored")),
                 "bucket_key",
             )
-            .filter(
-                jaccard(F.col("__shingles"), F.col("__stored_sh"))
-                >= F.lit(threshold)
-            )
+            .filter(close(F.col(payload), F.col("__stored")))
             .select("doc_id")
         )
         suppressed = intra.union(cross).distinct()
     else:
         suppressed = intra.distinct()
 
-    survivors = docs.join(
+    survivors = rows.join(
         suppressed.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
     )
     if not replay:
-        surv_posts = posts.join(suppressed, "doc_id", "left_anti").select(
-            "bucket_key",
-            "doc_id",
-            F.lit(epoch).cast("long").alias("epoch"),
-            F.lit(run_token).cast("string").alias("run"),
-            F.col("__shingles").alias("shingles"),
-        )
         store.append(
-            surv_posts,
+            posts.join(suppressed, "doc_id", "left_anti"),
             epoch,
             run_token,
             corpus=survivors if corpus_path is not None else None,
             corpus_root=corpus_path,
         )
-    # Release the per-batch cache unconditionally, or a long-running
-    # caller accumulates one pinned relation per epoch. The posting
-    # append (and corpus write, when configured) already materialized
-    # everything this epoch commits; collecting the returned survivors
-    # afterwards recomputes deterministically — the probe relation was
-    # built from an explicit version-dir path list, so the recompute
-    # cannot see this epoch's own postings.
-    sigs.unpersist()
     return survivors
 
 
@@ -664,12 +721,7 @@ def update_cluster_labels_bucketed(
     labels_all = store.read(spark) if cur else None
     if labels_all is None:
         new = connected_components(pairs, a_col, b_col)
-        touched = [
-            r[0]
-            for r in new.select(
-                _bucket_expr(store.n_buckets, "comp").alias("b")
-            ).distinct().collect()
-        ]
+        touched = store.touched_buckets(new, "comp")
         store.write_buckets(new.select("node", "comp"), touched, epoch, run_token)
         return
 
@@ -702,20 +754,12 @@ def update_cluster_labels_bucketed(
     )
     # 3. touched buckets: old comps being renamed + their new labels +
     # new nodes' labels (rows MOVE between comp buckets)
-    touched = [
-        r[0]
-        for r in changed.select(
-            _bucket_expr(store.n_buckets, "__gnode").alias("b")
-        )
-        .unionByName(
-            changed.select(_bucket_expr(store.n_buckets, "__gcomp").alias("b"))
-        )
-        .unionByName(
-            new_rows.select(_bucket_expr(store.n_buckets, "comp").alias("b"))
-        )
-        .distinct()
-        .collect()
-    ]
+    touched = store.touched_buckets(
+        changed.select(F.col("__gnode").alias("comp"))
+        .unionByName(changed.select(F.col("__gcomp").alias("comp")))
+        .unionByName(new_rows.select("comp")),
+        "comp",
+    )
     # touched can be empty (every delta edge lands inside an existing
     # component): still commit the epoch marker so the replay guard
     # engages — same contract as SignatureStore.append on an

@@ -45,8 +45,10 @@ id yields EXACTLY ``exact_substr_dedup(whole_corpus, emit_text=True)``
 
 Replay discipline: each store guards its own append (idempotent — a
 crash between the two appends converges on replay), and a replayed
-epoch recomputes the same survivors while its own postings are masked
-out of the probe, the streaming/bloom_dedup.py convention.
+epoch recomputes the same survivors: both stores are read through
+``SignatureStore.probe``, which masks the epoch's own postings out of a
+replay's probe (``replay.replay_mask``, null-safe, so history written
+without a run token keeps matching).
 
 Scale: probe reads track the batch's anchor-bucket fan-out; history
 text loads track the MATCHED duplicate rate, not the corpus; all
@@ -75,7 +77,6 @@ from nexus_event_stream_spark.operators.exact_substr import (
     _winnow_anchors,
 )
 from nexus_event_stream_spark.streaming.dedup import SignatureStore
-from nexus_event_stream_spark.streaming.projection import _bucket_expr
 
 #: anchor postings: the anchor hash (stringified int64) IS the bucket
 #: key; ``pos`` is the anchor's token offset in the accepted document.
@@ -143,19 +144,6 @@ def forget_substr(spark: SparkSession, store: SubstrStore, doc_ids) -> None:
 
     forget_signatures(spark, store.anchors, doc_ids)
     forget_signatures(spark, store.docs, doc_ids)
-
-
-def _replay_mask(df: DataFrame, replay: bool, epoch, run_token) -> DataFrame:
-    """On a replay, postings this very epoch wrote must not suppress its
-    own documents (the streaming/bloom_dedup.py convention)."""
-    if not replay or df is None:
-        return df
-    return df.filter(
-        ~(
-            (F.col("run") == F.lit(run_token))
-            & (F.col("epoch") >= F.lit(epoch))
-        )
-    )
 
 
 def substr_suppress_and_register(
@@ -236,18 +224,7 @@ def substr_suppress_and_register(
         batch_keys = anchors.select(
             F.col("ahash").cast("string").alias("bucket_key")
         ).distinct()
-        touched = sorted(
-            r[0]
-            for r in batch_keys.select(
-                _bucket_expr(store.anchors.n_buckets, "bucket_key").alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        stored = (
-            store.anchors.read_buckets(spark, touched) if touched else None
-        )
-        stored = _replay_mask(stored, replay, epoch, run_token)
+        stored = store.anchors.probe(spark, batch_keys, epoch, run_token, replay)
         if stored is not None:
             # matched postings: stored anchors sharing a hash with the batch
             matched = stored.join(batch_keys, "bucket_key").select(
@@ -331,27 +308,20 @@ def substr_suppress_and_register(
             hist_pos = matched.groupBy("__hist_id").agg(
                 F.collect_list("pos").alias("__anchor_pos")
             ).persist()
-            # bounded collect: DISTINCT matched doc ids → bucket ids only
-            # (no isin literal over the ids — a high-duplicate epoch would
-            # inflate the plan with one expression node per id; the inner
-            # join with hist_pos below already restricts to matched docs)
-            doc_buckets = sorted(
-                {
-                    r[0]
-                    for r in hist_pos.select(
-                        F.col("__hist_id").cast("string").alias("bucket_key")
-                    )
-                    .select(
-                        _bucket_expr(store.docs.n_buckets, "bucket_key").alias(
-                            "b"
-                        )
-                    )
-                    .distinct()
-                    .collect()
-                }
+            # the probe's bounded collect: matched doc ids → bucket ids
+            # only (no isin literal over the ids — a high-duplicate epoch
+            # would inflate the plan with one expression node per id; the
+            # inner join with hist_pos below already restricts to matched
+            # docs)
+            hist_docs = store.docs.probe(
+                spark,
+                hist_pos.select(
+                    F.col("__hist_id").cast("string").alias("bucket_key")
+                ),
+                epoch,
+                run_token,
+                replay,
             )
-            hist_docs = store.docs.read_buckets(spark, doc_buckets)
-            hist_docs = _replay_mask(hist_docs, replay, epoch, run_token)
         else:
             hist_pos = None
             hist_docs = None
@@ -453,15 +423,11 @@ def substr_suppress_and_register(
         doc_postings = src.select(
             F.col("doc_id").cast("string").alias("bucket_key"),
             F.col("doc_id").cast("long").alias("doc_id"),
-            F.lit(epoch).cast("long").alias("epoch"),
-            F.lit(run_token).cast("string").alias("run"),
             F.col("__text").alias("text"),
         )
         anchor_postings = anchors.select(
             F.col("ahash").cast("string").alias("bucket_key"),
             F.col("doc_id").cast("long").alias("doc_id"),
-            F.lit(epoch).cast("long").alias("epoch"),
-            F.lit(run_token).cast("string").alias("run"),
             "pos",
         )
         if not store.docs.guard.is_replay(store.docs.current(), epoch, run_token):

@@ -16,9 +16,11 @@ SignatureStore machinery the lexical tier already hardened:
   tombstones (``forget_signatures`` works UNCHANGED on media ids), and
   the vacuum grace window are all inherited, not re-implemented;
 - each ``foreachBatch``: one Arrow decode pass → 64-bit dHash per image
-  (payloads never move again) → within-batch banded pairs (the
-  ``bucket_candidates`` star-cap primitive) → bucket-pruned probe of
-  the store's touched band buckets → exact ``bit_count`` Hamming
+  (payloads never move again), then the lexical tier's banded body
+  (``dedup._suppress_banded``) with dHash band keys and an exact
+  ``bit_count`` Hamming verify as its ``close`` predicate: within-batch
+  banded pairs (the ``bucket_candidates`` star-cap primitive) →
+  ``SignatureStore.probe`` of the store's touched band buckets →
   verify → survivors' postings registered back, survivors optionally
   appended to a media corpus under the SAME pointer commit
   (exactly-once, the lexical tier's contract);
@@ -46,7 +48,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nexus_event_stream_spark.operators.dedup import bucket_candidates
 from nexus_event_stream_spark.operators.phash import (
     _bands_for,
     perceptual_audio_hashes,
@@ -55,8 +56,7 @@ from nexus_event_stream_spark.operators.phash import (
     phash_band_keys,
 )
 
-from .dedup import SignatureStore, run_token_for
-from .projection import _bucket_expr
+from .dedup import SignatureStore, _suppress_banded, run_token_for
 
 __all__ = [
     "PHASH_POSTING_SCHEMA",
@@ -168,8 +168,6 @@ def suppress_and_register_media(
     """
     if kind not in ("image", "audio", "video"):
         raise ValueError(f"kind must be image|audio|video, got {kind!r}")
-    cur = store.current()
-    replay = store.guard.is_replay(cur, epoch, run_token)
     if bands is None:
         bands = _bands_for(max_hamming)
     if kind == "video":
@@ -187,9 +185,7 @@ def suppress_and_register_media(
             )
             return F.when(F.size(a) == F.size(b), aligned).otherwise(F.lit(64))
 
-        def _band_src(c: Column) -> Column:
-            return c[0]
-
+        band_src = F.col(fp)[0]
     else:
         hasher = (
             perceptual_hashes if kind == "image" else perceptual_audio_hashes
@@ -202,85 +198,27 @@ def suppress_and_register_media(
         def _ham(a: Column, b: Column) -> Column:
             return F.bit_count(a.bitwiseXOR(b))
 
-        def _band_src(c: Column) -> Column:
-            return c
+        band_src = F.col(fp)
 
-    sigs = hashes.filter(F.col(fp).isNotNull()).select(
-        F.col(id_col).alias("doc_id"), fp
-    )
-
-    # (a) within-batch: banded candidates + Hamming verify; larger id loses.
-    keyed = sigs.select(
-        "doc_id",
-        F.explode(phash_band_keys(_band_src(F.col(fp)), bands)).alias(
-            "bucket"
-        ),
-    )
-    cands = bucket_candidates(keyed, max_bucket_size)
-    intra = (
-        cands.join(sigs.alias("ha"), F.col("doc_a") == F.col("ha.doc_id"))
-        .join(sigs.alias("hb"), F.col("doc_b") == F.col("hb.doc_id"))
-        .filter(_ham(F.col(f"ha.{fp}"), F.col(f"hb.{fp}")) <= max_hamming)
-        .select(F.col("doc_b").alias("doc_id"))
-    )
-
-    # (b) cross-batch: probe ONLY the store buckets this batch touches.
-    posts = sigs.select(
-        "doc_id",
-        F.explode(phash_band_keys(_band_src(F.col(fp)), bands)).alias(
-            "bucket_key"
-        ),
-        fp,
-    )
-    touched = sorted(
-        r[0]
-        for r in posts.select(
-            _bucket_expr(store.n_buckets, "bucket_key").alias("b")
-        )
-        .distinct()
-        .collect()
-    )
-    stored = store.read_buckets(spark, touched)
-    if stored is not None and replay:
-        # postings this very epoch wrote must not suppress its own images
-        stored = stored.filter(
-            ~((F.col("run") == F.lit(run_token)) & (F.col("epoch") >= F.lit(epoch)))
-        )
-    if stored is not None:
-        cross = (
-            posts.join(
-                stored.select(
-                    "bucket_key", F.col(fp).alias("__stored_fp")
-                ),
-                "bucket_key",
-            )
-            .filter(_ham(F.col(fp), F.col("__stored_fp")) <= max_hamming)
-            .select("doc_id")
-        )
-        suppressed = intra.union(cross).distinct()
-    else:
-        suppressed = intra.distinct()
-
-    survivors = media.join(
-        suppressed.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
-    )
-    if not replay:
-        surv_posts = posts.join(suppressed, "doc_id", "left_anti").select(
-            "bucket_key",
-            "doc_id",
-            F.lit(epoch).cast("long").alias("epoch"),
-            F.lit(run_token).cast("string").alias("run"),
+    try:
+        return _suppress_banded(
+            spark,
+            store,
+            media,
+            hashes.filter(F.col(fp).isNotNull()).select(
+                F.col(id_col).alias("doc_id"), fp
+            ),
+            phash_band_keys(band_src, bands),
             fp,
-        )
-        store.append(
-            surv_posts,
+            lambda a, b: _ham(a, b) <= max_hamming,
             epoch,
             run_token,
-            corpus=survivors if corpus_path is not None else None,
-            corpus_root=corpus_path,
+            id_col,
+            corpus_path,
+            max_bucket_size,
         )
-    hashes.unpersist()
-    return survivors
+    finally:
+        hashes.unpersist()
 
 
 def start_media_dedup_ingest(

@@ -309,6 +309,17 @@ class BucketedViewStore(PointerStore):
         state = self.read(spark, cur=cur)
         return None if state is None else live_view(state)
 
+    def touched_buckets(self, df: DataFrame, col: str) -> list[int]:
+        """The sorted buckets ``df``'s ``col`` values hash into — the one
+        bucket-of-a-relation collect every bucketed writer and probe
+        runs (one job, bounded by ``n_buckets`` rows)."""
+        return sorted(
+            r[0]
+            for r in df.select(_bucket_expr(self.n_buckets, col).alias("b"))
+            .distinct()
+            .collect()
+        )
+
     # -- write --------------------------------------------------------------
 
     def rewrite_set(self, touched: list[int]) -> list[int]:
@@ -476,14 +487,7 @@ def apply_batch_bucketed(
     batch_latest = latest_state(
         batch, key=["id"], ts_col="updated_at", tiebreak=list(_TIEBREAK)
     )
-    touched = [
-        r[0]
-        for r in batch_latest.select(
-            _bucket_expr(store.n_buckets, store.key_col).alias("b")
-        )
-        .distinct()
-        .collect()
-    ]
+    touched = store.touched_buckets(batch_latest, store.key_col)
     if not touched:
         return
     touched = store.rewrite_set(touched)
@@ -521,13 +525,9 @@ def compact_tombstones_bucketed(
     state = store.read(spark)
     if state is None:
         return None
-    dirty = [
-        r[0]
-        for r in state.filter(_stale_tombstone(horizon))
-        .select(_bucket_expr(store.n_buckets, store.key_col).alias("b"))
-        .distinct()
-        .collect()
-    ]
+    dirty = store.touched_buckets(
+        state.filter(_stale_tombstone(horizon)), store.key_col
+    )
     if not dirty:
         return None
     keep = _drop_stale(store.read(spark, buckets=dirty), horizon)

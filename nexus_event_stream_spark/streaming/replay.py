@@ -1,4 +1,5 @@
-"""Shared replay-guard protocol for the snapshot stores.
+"""Shared replay-guard protocol for the snapshot stores, and the replay
+mask the suppression tiers probe through.
 
 Every streaming store in this package is maintained from a
 ``foreachBatch`` body, and Structured Streaming's delivery contract is
@@ -44,6 +45,16 @@ The sharded corpus sink (sources/shards.py) keeps its own O(1)
 ``max_epoch`` watermark. Every store holds its guard through the
 pointer-store base (streaming/commit.py).
 
+The guard decides WHETHER an epoch is a replay; ``replay_mask`` is the
+other half of the contract for the suppression tiers, which recompute a
+replayed epoch's survivors instead of skipping it: the probe must not
+see the postings that epoch itself wrote, or a doc would suppress
+itself. The mask is null-safe — history registered by a call without a
+token has NULL ``run``/``epoch`` and keeps suppressing on the replay.
+``SignatureStore.probe`` (streaming/dedup.py) applies it for every
+signature-store tier; the semantic tier (streaming/semdedup.py) calls it
+on its centroid-list probe.
+
 Run tokens come from ``dedup.run_token_for(checkpoint_path)``: minted
 once per checkpoint generation, persisted inside the checkpoint dir, so
 a crash-recovery restart presents the same identity and a checkpoint
@@ -55,7 +66,25 @@ Extends the reference's commit-after-write consumer contract
 
 from __future__ import annotations
 
-__all__ = ["ReplayGuard", "ReplayMismatchError"]
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+__all__ = ["ReplayGuard", "ReplayMismatchError", "replay_mask"]
+
+
+def replay_mask(stored: DataFrame, epoch: int, run_token: str) -> DataFrame:
+    """``stored`` less the rows a replayed ``(run_token, epoch)`` wrote
+    itself (same run, epoch at or after the replayed one). eqNullSafe
+    and the ``-1`` epoch default keep rows with NULL ``run``/``epoch``
+    (written without a token): a plain ``==`` makes the predicate NULL
+    on them and the filter would drop them, so a replay would stop
+    seeing history the first delivery was suppressed against."""
+    return stored.filter(
+        ~(
+            F.col("run").eqNullSafe(F.lit(run_token))
+            & (F.coalesce(F.col("epoch"), F.lit(-1)) >= F.lit(epoch))
+        )
+    )
 
 
 class ReplayMismatchError(RuntimeError):

@@ -58,7 +58,7 @@ import logging
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from .projection import BucketedViewStore, _bucket_expr
+from .projection import BucketedViewStore
 
 logger = logging.getLogger(__name__)
 
@@ -629,14 +629,7 @@ class RollupStore:
         if self._guard.is_replay(cur, epoch, run_token):
             return
         batch_partials = self.partials(batch)
-        touched = [
-            r[0]
-            for r in batch_partials.select(
-                _bucket_expr(self._store.n_buckets, "bucket_ts").alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
+        touched = self._store.touched_buckets(batch_partials, "bucket_ts")
         if not touched:
             # empty batch still advances the epoch pointer, or a crash
             # replaying it could land AFTER later epochs and double-apply

@@ -49,7 +49,7 @@ import logging
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..operators.search import BM25Index, bm25_topk, search_tokens
-from .projection import BucketedViewStore, _bucket_expr
+from .projection import BucketedViewStore
 
 logger = logging.getLogger(__name__)
 
@@ -135,14 +135,7 @@ class BM25IndexStore:
                 .agg(F.count(F.lit(1)).alias("tf"))
                 .select("term", "doc_id", "tf", "dl")
             )
-            touched = [
-                r[0]
-                for r in postings.select(
-                    _bucket_expr(self._store.n_buckets, "term").alias("b")
-                )
-                .distinct()
-                .collect()
-            ]
+            touched = self._store.touched_buckets(postings, "term")
             self._apply_postings(
                 spark, cur, postings, touched, epoch,
                 int(n_new), int(sum_dl_new or 0), run_token,
@@ -357,17 +350,9 @@ class BM25IndexStore:
         )
         if not terms:
             return None
-        n_buckets = self._store.n_buckets
         # same bucket function as the store key — pruned read
-        buckets = sorted(
-            {
-                r[0]
-                for r in spark.createDataFrame(
-                    [(t,) for t in terms], "term string"
-                )
-                .select(_bucket_expr(n_buckets, "term").alias("b"))
-                .collect()
-            }
+        buckets = self._store.touched_buckets(
+            spark.createDataFrame([(t,) for t in terms], "term string"), "term"
         )
         slice_ = self._store.read(spark, buckets=buckets, cur=cur)
         if slice_ is None:

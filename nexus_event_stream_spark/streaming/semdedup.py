@@ -44,7 +44,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..operators.semdedup import _normalized, semantic_dedup_pairs
 from ..operators.similarity import ivf_assign
-from .projection import BucketedViewStore, _bucket_expr
+from .projection import BucketedViewStore
+from .replay import replay_mask
 
 __all__ = ["EmbeddingStore", "suppress_and_register_semantic", "start_semantic_ingest"]
 
@@ -142,10 +143,6 @@ class EmbeddingStore:
         influencing the corpus); docs it already suppressed stay
         suppressed (suppression decisions are not re-litigated).
         Centroids, epoch, and run token ride through unchanged."""
-        from pyspark.sql import functions as F
-
-        from .projection import _bucket_expr
-
         cur = self.current()
         if cur is None or not cur["manifest"]:
             return 0
@@ -155,14 +152,7 @@ class EmbeddingStore:
         idf = spark.createDataFrame([(i,) for i in ids], "vec_id long")
         allrows = self._store.read(spark, cur=cur)
         victims = allrows.join(F.broadcast(idf), "vec_id", "left_semi")
-        touched = [
-            int(r[0])
-            for r in victims.select(
-                _bucket_expr(self.n_buckets, "centroid_id").alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
+        touched = self._store.touched_buckets(victims, "centroid_id")
         if not touched:
             return 0
         n_gone = victims.count()
@@ -226,27 +216,11 @@ def suppress_and_register_semantic(
     assigned = ivf_assign(
         embs, cents, id_col=id_col, vec_col=vec_col, include_vec=True
     )
-    touched = sorted(
-        r[0]
-        for r in assigned.select(
-            _bucket_expr(store.n_buckets, "centroid_id").alias("b")
-        )
-        .distinct()
-        .collect()
-    )
+    touched = store._store.touched_buckets(assigned, "centroid_id")
     stored = store.read_buckets(spark, touched) if touched else None
     if stored is not None and replay:
-        # rows this very epoch wrote must not suppress its own docs.
-        # eqNullSafe, not ==: history registered by an un-tokened batch
-        # call has NULL run/epoch, and (NULL == token) is NULL — a plain
-        # != filter would three-valued-logic those rows OUT of the probe
-        # and make same-run replay non-idempotent against them
-        stored = stored.filter(
-            ~(
-                F.col("run").eqNullSafe(F.lit(run_token))
-                & (F.coalesce(F.col("epoch"), F.lit(-1)) >= F.lit(epoch))
-            )
-        )
+        # rows this very epoch wrote must not suppress its own docs
+        stored = replay_mask(stored, epoch, run_token)
     if stored is not None:
         hist = stored.select(
             "centroid_id",

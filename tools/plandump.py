@@ -7,11 +7,21 @@ plans of the flagship queries — so a reviewer can audit the plans
 without running Spark. tests/test_plans.py PINS the properties that are
 contractual; this artifact makes the whole surface visible.
 
-Usage: python tools/plandump.py [sf_dir] [out_md]
+Usage: python tools/plandump.py [sf_dir] [out_md] [plans_dir]
+
+With ``plans_dir``, the full formatted plan of EVERY catalog query is
+also written to ``plans_dir/<query>.txt`` (the per-round evidence dumps
+under plans/; compare two heads by dumping each into its own directory).
+
+Plans are captured from ``df.explain(mode="formatted")``'s stdout, not
+from the private classic-mode JVM internals
+(``df._jdf.queryExecution()``), which do not exist under Spark Connect.
 """
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import re
 import sys
@@ -46,26 +56,35 @@ def plan_props(plan: str) -> dict:
     }
 
 
+def formatted_plan(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode="formatted")
+    return buf.getvalue()
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_md = sys.argv[2] if len(sys.argv) > 2 else "PLANS.md"
+    plans_dir = sys.argv[3] if len(sys.argv) > 3 else None
 
     from nexus_event_stream_spark.plans.catalog import CATALOG
     from nexus_event_stream_spark.session import get_spark
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
+    if plans_dir is not None:
+        os.makedirs(plans_dir, exist_ok=True)
 
     rows = []
     full = {}
     for name, spec in CATALOG.items():
-        df = spec.build(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(mode)
+        plan = formatted_plan(spec.build(spark, sf_dir))
         rows.append((name, plan_props(plan)))
         if name in FLAGSHIPS:
             full[name] = plan
+        if plans_dir is not None:
+            with open(os.path.join(plans_dir, f"{name}.txt"), "w") as fh:
+                fh.write(plan)
 
     lines = [
         "# PLANS — physical-plan audit of the declared catalog",
@@ -98,6 +117,8 @@ def main() -> int:
     with open(out_md, "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print(f"wrote {out_md}: {len(rows)} queries, {len(full)} full plans")
+    if plans_dir is not None:
+        print(f"wrote {len(rows)} formatted plans to {plans_dir}")
     return 0
 
 
