@@ -83,18 +83,12 @@ EXACT_POSTING_SCHEMA = T.StructType(
 BLOOM_POINTER = "_bloom.json"
 
 
-def exact_store(
-    path: str, n_buckets: int = 64, backend=None, **kwargs
-) -> SignatureStore:
+def exact_store(path: str, n_buckets: int = 64, backend=None) -> SignatureStore:
     """A ``SignatureStore`` wearing the exact-digest posting schema —
     tombstones, partial/full compaction, replay discipline and
     ``forget_signatures`` all apply unchanged."""
     return SignatureStore(
-        path,
-        n_buckets=n_buckets,
-        backend=backend,
-        schema=EXACT_POSTING_SCHEMA,
-        **kwargs,
+        path, n_buckets=n_buckets, backend=backend, schema=EXACT_POSTING_SCHEMA
     )
 
 

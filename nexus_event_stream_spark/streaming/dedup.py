@@ -37,10 +37,10 @@ Scale notes: the posting row carries the shingle set once per band
 (bands× write amplification) so the verify join needs no second hop back
 to a shingle table; at extreme scale store shingles once per doc and
 verify via a doc-keyed join instead — the probe shape is unchanged.
-Buckets accumulate one segment per epoch; ``append`` schedules
-``compact()`` automatically once any bucket's segment list exceeds
-``compact_threshold``, folding the history back to one version per
-bucket (``write_buckets``).
+Buckets accumulate one segment per epoch; the inner store folds a
+bucket back to one version once its segment list outgrows
+``projection.MAX_SEGMENTS``, and takedowns queue and sweep through it
+(``BucketedViewStore.forget``/``compact``).
 
 Exactly-once corpus: the survivor append shares the store's pointer
 commit — survivors are written to ``corpus_root/v={version}`` BEFORE the
@@ -89,44 +89,31 @@ class SignatureStore:
     ``BucketedViewStore`` keyed on ``bucket_key``, the way the rollup,
     BM25 and embedding stores are.
 
-    Layout, commit and vacuum are the inner store's: postings land as
-    append segments (``append_buckets``), the manifest maps each bucket
-    to the list of versions holding its postings, and reading a bucket
-    unions those directories and nothing else. Commit is a single atomic
+    Layout, commit, vacuum, takedowns and folds are the inner store's:
+    postings land as append segments (``append_buckets``), the manifest
+    maps each bucket to the list of versions holding its postings, and
+    reading a bucket unions those directories and nothing else, less the
+    queued takedowns (``id_col = doc_id``). Commit is a single atomic
     pointer rename; a crash between data write and commit leaves an
-    unreferenced directory, never a corrupt store.
+    unreferenced directory, never a corrupt store. Buckets whose segment
+    list grows past ``MAX_SEGMENTS`` fold after the append that grew
+    them, so per-bucket file counts stay bounded over unbounded epochs
+    while the fold's cost tracks the hot buckets, not the store.
 
     The same pointer also publishes the survivor CORPUS (when ``append``
     is given one): corpus directories live under a caller-supplied root
     as ``v={version}`` and only pointer-listed versions
     (``corpus_versions``) are visible — that one rename is what makes
-    the corpus append exactly-once. Queued takedowns (``tombstones``)
-    ride the pointer too.
-
-    ``compact_threshold`` bounds manifest growth: once a bucket's segment
-    list exceeds it, ``append`` triggers a PARTIAL ``compact()`` of just
-    the offending buckets, so per-bucket file counts stay O(threshold)
-    over unbounded epochs while compaction cost tracks the hot buckets,
-    not the store.
+    the corpus append exactly-once.
     """
 
     def __init__(
         self,
         path: str,
         n_buckets: int = 64,
-        compact_threshold: int | None = 8,
         backend=None,
         schema: T.StructType | None = None,
-        max_tombstones: int = 512,
     ):
-        self.compact_threshold = compact_threshold
-        #: when the queued-takedown list carried by the pointer exceeds
-        #: this, the next ``append`` escalates to a FULL compact (the
-        #: only sweep that may clear the queue) — without it a
-        #: long-running stream whose scheduled compactions are all
-        #: PARTIAL would grow the queue (and every probe's anti-filter)
-        #: without bound and never physically remove victims.
-        self.max_tombstones = max_tombstones
         #: posting row schema — default is the lexical MinHash shape;
         #: other suppression tiers (streaming/phash_dedup.py) reuse the
         #: whole store with their own payload columns, as long as
@@ -143,6 +130,7 @@ class SignatureStore:
             backend=backend,
             schema=schema or POSTING_SCHEMA,
             key_col="bucket_key",
+            id_col="doc_id",
         )
         self.path = path
         self.n_buckets = n_buckets
@@ -160,22 +148,13 @@ class SignatureStore:
 
     def read_buckets(self, spark: SparkSession, buckets) -> DataFrame | None:
         """Postings of ``buckets`` only — the probe path; never the whole
-        store. Postings of queued-takedown docs (``tombstones`` in the
-        pointer) are filtered HERE, so every consumer — the suppression
-        probe, forget counting, compaction's fold — sees them as already
-        gone the moment the forget pointer lands."""
+        store. Postings of queued-takedown docs are already gone (the
+        inner store's read drops them)."""
         cur = self.current()
-        paths = self._store._bucket_paths(cur["manifest"], buckets) if cur else []
-        self.last_probe_paths = paths
-        if not paths:
-            return None
-        df = spark.read.schema(self.schema).parquet(*paths)
-        tomb = [int(d) for d in cur.get("tombstones", [])]
-        if tomb:
-            # literal-list filter: parquet-pushable, and the queue is
-            # bounded by compaction cadence
-            df = df.filter(~F.col("doc_id").isin(tomb))
-        return df
+        self.last_probe_paths = (
+            self._store._bucket_paths(cur["manifest"], buckets) if cur else []
+        )
+        return self._store.read(spark, buckets=buckets, cur=cur)
 
     def probe(
         self,
@@ -223,11 +202,10 @@ class SignatureStore:
         Exactly-once: every data write targets a directory named by the
         not-yet-committed version with ``mode("overwrite")``, so a replay
         after a crash-before-commit rewrites the identical directories
-        instead of appending beside them. The corpus version, the queue
-        and the commit all come from ONE pointer read: a writer that
-        moved the pointer in between (a takedown, a sweep) makes the
-        commit fail under a compare-and-swap backend, never lose its
-        update.
+        instead of appending beside them. The corpus version and the
+        commit come from ONE pointer read: a writer that moved the
+        pointer in between (a takedown, a sweep) makes the commit fail
+        under a compare-and-swap backend, never lose its update.
         """
         cur = self.current()
         version = (cur["version"] + 1) if cur else 0
@@ -239,7 +217,6 @@ class SignatureStore:
             # readers open an empty directory
             if any(n.endswith(".parquet") for n in os.listdir(cdir)):
                 corpus_versions.append(version)
-        tombstones = (cur or {}).get("tombstones", [])
         stamp = {
             "epoch": F.lit(epoch).cast("long").alias("epoch"),
             "run": F.lit(run_token).cast("string").alias("run"),
@@ -251,28 +228,9 @@ class SignatureStore:
             None,  # band keys were not counted: the inner store sizes the write
             epoch,
             run_token,
-            # queued takedowns ride through every append
-            extra={"corpus_versions": corpus_versions, "tombstones": tombstones},
+            extra={"corpus_versions": corpus_versions},
             cur=cur,
         )
-        if self.compact_threshold is not None:
-            over = [
-                b
-                for b, v in self.current()["manifest"].items()
-                if isinstance(v, list) and len(v) > self.compact_threshold
-            ]
-            if over:
-                # fold ONLY the offending buckets: scheduled compaction
-                # cost tracks the hot buckets' data, not the whole store,
-                # keeping the per-epoch contract O(batch + touched)
-                self.compact(postings.sparkSession, buckets=over)
-        if self.max_tombstones is not None and len(tombstones) > self.max_tombstones:
-            # the takedown queue outgrew its budget: a FULL compact is
-            # the one sweep that physically removes victims and clears
-            # the queue — partial folds never may (victims can hold
-            # postings in unfolded buckets). Amortized: at most one full
-            # sweep per max_tombstones takedowns.
-            self.compact(postings.sparkSession)
         return version
 
     def read_corpus(self, spark: SparkSession, corpus_root: str) -> DataFrame | None:
@@ -290,113 +248,29 @@ class SignatureStore:
 
     def compact(self, spark: SparkSession, buckets=None) -> int | None:
         """Fold the segment lists of ``buckets`` (default: all) into one
-        version each (bounds per-bucket file counts after many epochs).
-
-        Partial compaction is what ``append`` schedules: only buckets
-        whose segment list exceeded the threshold fold, so the cost is
-        proportional to THOSE buckets' data — the store is never rescanned
-        wholesale inside a micro-batch. Single-writer, like view-store
-        compaction; returns the new version or None if nothing to fold.
-        """
-        cur = self.current()
-        if cur is None or not cur["manifest"]:
-            return None
-        targets = [
-            b for b in (cur["manifest"] if buckets is None else map(str, buckets))
-            if b in cur["manifest"]
-        ]
-        return self._fold(spark, cur, targets)
-
-    def _fold(
-        self, spark: SparkSession, cur: dict, targets, drop: DataFrame | None = None
-    ) -> int | None:
-        """Rewrite ``targets``' postings as one version each through the
-        tombstone-filtered read, less ``drop``'s doc ids, in one
-        ``write_buckets`` commit. A FULL fold has physically removed every
-        queued victim, so it clears the queue; a partial fold keeps it
-        (victims may still have postings in unfolded buckets). Epoch,
-        token and corpus references ride through, and the commit is
-        conditional on ``cur`` itself: an append or takedown that landed
-        after the caller's read fails the fold under a compare-and-swap
-        backend instead of being folded away. ``last_probe_paths``
-        (the batch-probe test pin) is preserved across the read."""
-        saved_probe = self.last_probe_paths
-        df = self.read_buckets(spark, targets) if targets else None
-        self.last_probe_paths = saved_probe
-        if df is None:
-            return None
-        if drop is not None:
-            df = df.join(F.broadcast(drop), "doc_id", "left_anti")
-        full = set(targets) == set(cur["manifest"])
-        return self._store.write_buckets(
-            df,
-            [int(b) for b in targets],
-            cur.get("epoch"),
-            cur.get("run_token"),
-            extra={
-                # corpus dirs live under their own root and are NOT part
-                # of posting compaction — carry the references through
-                "corpus_versions": cur.get("corpus_versions", []),
-                "tombstones": [] if full else cur.get("tombstones", []),
-            },
-            cur=cur,
-        )
+        version each and, on a full fold, sweep queued takedowns
+        (``BucketedViewStore.compact``). Corpus references ride through;
+        returns the new version or None if there is nothing to fold."""
+        return self._store.compact(spark, buckets)
 
 
 def forget_signatures(
     spark: SparkSession, store: SignatureStore, doc_ids, mode: str = "tombstone"
 ) -> int:
-    """Right-to-be-forgotten maintenance for the lexical suppression
-    store: remove every LSH posting of ``doc_ids`` (the BM25/embedding
-    stores' ``forget`` twin — a doc's band keys scatter across buckets,
-    so the physical removal is a full-sweep compact-with-filter).
-
-    ``mode='tombstone'`` (default) amortizes that sweep: victims queue
-    in the pointer (one read-only counting job + one atomic pointer
-    swing through the inner store, zero data writes), ``read_buckets``
-    anti-filters the queue so every probe treats them as gone
-    IMMEDIATELY, and the next FULL ``store.compact()`` folds the
-    physical removal in for free — N takedowns between compactions cost
-    one sweep. ``mode='sweep'`` rewrites now (the same fold as
-    ``compact``, less the victims), clearing the queue alongside.
+    """Right-to-be-forgotten maintenance for a signature store: remove
+    every posting of ``doc_ids`` (``BucketedViewStore.forget``; a doc's
+    band keys scatter across buckets, so the physical removal is a
+    full-sweep fold less the victims). ``mode='tombstone'`` (default)
+    queues the victims — one pointer swing, zero data writes, every
+    probe treats them as gone IMMEDIATELY, and the next full fold sweeps
+    them; ``mode='sweep'`` rewrites now, clearing the queue alongside.
 
     Returns how many distinct victim docs held postings. A forgotten
     doc stops suppressing future near-duplicates of itself; docs it
     already suppressed stay suppressed. Epoch/token/corpus references
     ride through unchanged (the survivor CORPUS dirs are the caller's
     to redact — this sweeps the signature index)."""
-    if mode not in ("tombstone", "sweep"):
-        raise ValueError(f"mode must be tombstone|sweep, got {mode!r}")
-    cur = store.current()
-    if cur is None or not cur["manifest"]:
-        return 0
-    ids = [int(d) for d in doc_ids]
-    if not ids:
-        return 0
-    targets = list(cur["manifest"])
-    # read_buckets already excludes previously-queued victims — a
-    # repeated takedown request counts (and queues) nothing twice
-    df = store.read_buckets(spark, targets)
-    if df is None:
-        return 0
-    idf = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-    present = [
-        int(r.doc_id)
-        for r in df.join(F.broadcast(idf), "doc_id", "left_semi")
-        .select("doc_id")
-        .distinct()
-        .collect()
-    ]
-    if not present:
-        return 0
-    if mode == "tombstone":
-        queued = sorted(
-            {int(d) for d in cur.get("tombstones", [])} | set(present)
-        )
-        store._store._commit({**cur, "tombstones": queued}, expected=cur)
-    else:
-        store._fold(spark, cur, targets, drop=idf)
-    return len(present)
+    return store._store.forget(spark, doc_ids, mode)
 
 
 def suppress_and_register(
@@ -469,9 +343,8 @@ def suppress_and_register(
         # caller accumulates one pinned relation per epoch. The posting
         # append (and corpus write, when configured) already materialized
         # everything this epoch commits; collecting the returned
-        # survivors afterwards recomputes deterministically — the probe
-        # relation was built from an explicit version-dir path list, so
-        # the recompute cannot see this epoch's own postings.
+        # survivors afterwards reads the checkpointed suppressed-id set,
+        # so it cannot see this epoch's own postings.
         minhash.unpersist()
 
 
@@ -521,8 +394,9 @@ def _suppress_banded(
 
     # (b) cross-batch: probe ONLY the store buckets this batch touches.
     stored = store.probe(spark, posts, epoch, run_token, replay)
+    suppressed = intra
     if stored is not None:
-        cross = (
+        suppressed = intra.union(
             posts.join(
                 stored.select("bucket_key", F.col(payload).alias("__stored")),
                 "bucket_key",
@@ -530,9 +404,12 @@ def _suppress_banded(
             .filter(close(F.col(payload), F.col("__stored")))
             .select("doc_id")
         )
-        suppressed = intra.union(cross).distinct()
-    else:
-        suppressed = intra.distinct()
+    # Materialize the small suppressed-id set ONCE: the posting write,
+    # the corpus write and the caller's collect of the survivors then
+    # read it, instead of each recomputing the candidates, both
+    # verifies and the probe (the exact tier checkpoints its survivors
+    # the same way).
+    suppressed = suppressed.distinct().localCheckpoint()
 
     survivors = rows.join(
         suppressed.withColumnRenamed("doc_id", id_col), id_col, "left_anti"

@@ -114,23 +114,19 @@ class SubstrStore:
     docs: SignatureStore
 
 
-def substr_store(
-    path: str, n_buckets: int = 64, backend=None, **kwargs
-) -> SubstrStore:
+def substr_store(path: str, n_buckets: int = 64, backend=None) -> SubstrStore:
     return SubstrStore(
         anchors=SignatureStore(
             os.path.join(path, "anchors"),
             n_buckets=n_buckets,
             backend=backend,
             schema=ANCHOR_POSTING_SCHEMA,
-            **kwargs,
         ),
         docs=SignatureStore(
             os.path.join(path, "docs"),
             n_buckets=n_buckets,
             backend=backend,
             schema=DOC_POSTING_SCHEMA,
-            **kwargs,
         ),
     )
 

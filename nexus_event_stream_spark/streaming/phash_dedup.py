@@ -99,7 +99,6 @@ VIDEO_PHASH_POSTING_SCHEMA = T.StructType(
 def media_signature_store(
     path: str,
     n_buckets: int = 64,
-    compact_threshold: int | None = 8,
     backend=None,
     kind: str = "image",
 ) -> SignatureStore:
@@ -112,11 +111,7 @@ def media_signature_store(
         VIDEO_PHASH_POSTING_SCHEMA if kind == "video" else PHASH_POSTING_SCHEMA
     )
     return SignatureStore(
-        path,
-        n_buckets=n_buckets,
-        compact_threshold=compact_threshold,
-        backend=backend,
-        schema=schema,
+        path, n_buckets=n_buckets, backend=backend, schema=schema
     )
 
 

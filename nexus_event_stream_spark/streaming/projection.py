@@ -24,6 +24,14 @@ At scale the store maps directly onto Delta/Iceberg (swap write() for
 MERGE INTO); the LWW merge itself (operators/lww.py) is one shuffle on the
 entity key over |view|+|batch| rows, and the view can additionally be
 partitioned by a stable hash of the key to keep per-file sizes bounded.
+
+``BucketedViewStore`` is that hash-bucketed shape, and it is also the
+one segment-store lifecycle under the derived stores (rollup, BM25,
+embedding, signature): the reference applies a ``deleted`` event to its
+view the way it applies an upsert (signal.go:38-67), and the derived
+stores carry that over as right-to-be-forgotten takedowns (a queue in
+the pointer, ``forget``) and segment folds (``compact``), with one rule
+for when to fold (``MAX_SEGMENTS``, ``MAX_TOMBSTONES``).
 """
 
 from __future__ import annotations
@@ -60,6 +68,19 @@ _TIEBREAK = ("created_at", "title")
 #: wins ~4× with the full one, because a partial rewrite of most buckets
 #: is a full rewrite plus per-bucket file overhead).
 FULL_REWRITE_FRAC = 0.6
+
+#: Segment-list length past which an append folds the bucket: an
+#: append-store bucket's read unions one directory per segment, so the
+#: fold bounds per-bucket file counts at O(MAX_SEGMENTS) over unbounded
+#: epochs, at a cost that tracks the hot buckets, not the store.
+MAX_SEGMENTS = 8
+
+#: Takedown-queue length past which an append escalates to a FULL fold
+#: (the only fold that may clear the queue): partial folds never clear
+#: it, so without the cap a stream would grow the queue, and every
+#: read's anti-filter, without bound. At most one full sweep per
+#: MAX_TOMBSTONES takedowns.
+MAX_TOMBSTONES = 512
 
 
 class ParquetViewStore(PointerStore):
@@ -246,6 +267,30 @@ class BucketedViewStore(PointerStore):
     version referenced by the current or the immediately previous pointer
     (in-flight readers), so partial writes and crashes never corrupt a
     committed snapshot.
+
+    The store also owns the segment-store lifecycle its delegates (the
+    rollup, BM25, embedding and signature stores) share:
+
+    - **Pointer carry-through.** Every commit starts from the pointer it
+      replaces, so store-level keys (corpus counters, centroids, corpus
+      versions, the takedown queue) survive appends, folds and forgets
+      unless a write overlays them.
+    - **Takedowns.** A store constructed with ``id_col`` (the row
+      identity its delegate forgets by) keeps a queue of forgotten ids in
+      the pointer (``tombstones``); ``read`` drops queued ids on every
+      path, and ``forget`` either queues victims (one pointer swing, no
+      data write) or sweeps them.
+    - **The fold.** ``compact`` rewrites buckets as one version each
+      through the queue filter, applying the store's row fold
+      (``fold_rows``: identity here, the partial merge for rollups).
+    - **When to fold.** After an append commits, buckets whose segment
+      list is longer than ``MAX_SEGMENTS`` fold (through
+      ``rewrite_set``), and a queue longer than ``MAX_TOMBSTONES``
+      escalates to a full fold.
+
+    ``rewrite_set`` and every fold emit one ``logging`` record (INFO,
+    the decision as a dict in ``record.rewrite``) and run no Spark job
+    for it.
     """
 
     def __init__(
@@ -256,6 +301,7 @@ class BucketedViewStore(PointerStore):
         schema=None,
         key_col: str = "id",
         guard_mode: str = "idempotent",
+        id_col: str | None = None,
     ):
         #: replay discipline, declared at construction (streaming/replay.py).
         #: Idempotent for LWW/label snapshots; ADDITIVE substrates (rollup
@@ -270,6 +316,8 @@ class BucketedViewStore(PointerStore):
         #: relabel rewrite touches only affected components' buckets.
         self.schema = schema or STATE_SCHEMA
         self.key_col = key_col
+        #: row identity of takedowns (None: the store has no queue)
+        self.id_col = id_col
         os.makedirs(path, exist_ok=True)
 
     # -- read ---------------------------------------------------------------
@@ -295,7 +343,10 @@ class BucketedViewStore(PointerStore):
         here could interleave with a concurrent commit and mix two
         snapshots' buckets); the one-generation ``prev_refs`` vacuum
         grace keeps the pinned snapshot's files alive through a racing
-        commit."""
+        commit. Rows of queued takedowns are dropped here, so every
+        consumer sees them gone the moment the forget pointer lands (the
+        queue is bounded by ``MAX_TOMBSTONES``, so an ``isin`` literal
+        list, parquet-pushable, beats a join)."""
         if cur is None:
             cur = self.current()
         if cur is None or not cur["manifest"]:
@@ -303,7 +354,9 @@ class BucketedViewStore(PointerStore):
         paths = self._bucket_paths(cur["manifest"], buckets)
         if not paths:
             return None
-        return spark.read.schema(self.schema).parquet(*paths)
+        df = spark.read.schema(self.schema).parquet(*paths)
+        queue = cur.get("tombstones")
+        return df.filter(~F.col(self.id_col).isin(queue)) if queue else df
 
     def read_live(self, spark: SparkSession, cur=None) -> DataFrame | None:
         state = self.read(spark, cur=cur)
@@ -320,7 +373,21 @@ class BucketedViewStore(PointerStore):
             .collect()
         )
 
+    @staticmethod
+    def deep_buckets(cur: dict | None, n: int) -> list[str]:
+        """Buckets of ``cur`` whose segment list is longer than ``n``."""
+        return [
+            b
+            for b, v in ((cur or {}).get("manifest") or {}).items()
+            if isinstance(v, list) and len(v) > n
+        ]
+
     # -- write --------------------------------------------------------------
+
+    def _rewrite_shape(self, touched: list[int]) -> list[int]:
+        if len(touched) >= FULL_REWRITE_FRAC * self.n_buckets:
+            return list(range(self.n_buckets))
+        return touched
 
     def rewrite_set(self, touched: list[int]) -> list[int]:
         """The buckets an epoch rewrites when its input lands in
@@ -328,9 +395,23 @@ class BucketedViewStore(PointerStore):
         ``FULL_REWRITE_FRAC`` of the store, else every bucket (which also
         collapses the manifest to one version). The fraction comes from
         the touched-bucket collect the partial path pays anyway."""
-        if len(touched) >= FULL_REWRITE_FRAC * self.n_buckets:
-            return list(range(self.n_buckets))
-        return touched
+        rewritten = self._rewrite_shape(touched)
+        self._record(
+            touched, rewritten, len(rewritten) == self.n_buckets, False, "epoch"
+        )
+        return rewritten
+
+    def _record(self, touched, rewritten, full, cleared, trigger) -> None:
+        """The one decision record of a rewrite (pure driver state)."""
+        record = {
+            "store": self.path,
+            "touched": [int(b) for b in touched],
+            "rewritten": [int(b) for b in rewritten],
+            "shape": "full" if full else "partial",
+            "queue_cleared": cleared,
+            "trigger": trigger,
+        }
+        logger.info("bucket rewrite %s", record, extra={"rewrite": record})
 
     def _write_partitioned(
         self, df: DataFrame, out: str, n_parts: int
@@ -366,10 +447,14 @@ class BucketedViewStore(PointerStore):
         version of those buckets and commit the stitched manifest: each
         touched bucket is REPLACED by the new version, or dropped when
         none of its rows survived (every key deleted upstream — e.g. a
-        compaction). ``extra`` rides the SAME atomic pointer commit —
-        store-level scalars (e.g. the search index's exact corpus
-        counters) must never land in a second commit, or a crash between
-        the two leaves data committed with its bookkeeping lost.
+        compaction). ``extra`` overlays store-level keys on the carried
+        pointer in the SAME atomic commit — store-level scalars (e.g. the
+        search index's exact corpus counters) must never land in a
+        second commit, or a crash between the two leaves data committed
+        with its bookkeeping lost. An empty ``touched`` writes no data:
+        it commits a new version with the manifest unchanged (the epoch
+        marker and ``extra``), so the replay guard engages on an epoch
+        that wrote nothing.
 
         ``cur`` is the pointer snapshot (None: no pointer yet) the caller
         built ``extra`` from; the commit is conditional on THAT snapshot,
@@ -396,7 +481,8 @@ class BucketedViewStore(PointerStore):
         bucket); None — the caller did not count its rows' buckets —
         runs one task per core. The manifest records every bucket the
         write produced, so a ``touched`` list that undercounts the rows'
-        buckets cannot drop any of them. ``cur`` as in ``write_buckets``.
+        buckets cannot drop any of them. ``extra``, ``cur`` and an empty
+        ``touched`` as in ``write_buckets``.
 
         The additive-store write path (BM25 postings, signature postings
         and any append-only substrate): per-epoch write cost is O(|batch|)
@@ -404,21 +490,55 @@ class BucketedViewStore(PointerStore):
         ``write_buckets`` would re-read and re-write every touched
         bucket's history, which for natural-language postings (every
         batch touches nearly every term bucket) degenerates to rewriting
-        the whole index per epoch. Segment lists grow with epochs;
-        ``write_buckets`` (e.g. from a compaction read-union-rewrite)
-        collapses a bucket's list back to one owning version. Same
-        pointer-last atomic commit, same vacuum safety (every listed
-        segment version stays referenced)."""
-        return self._write_segment(
+        the whole index per epoch. Same pointer-last atomic commit, same
+        vacuum safety (every listed segment version stays referenced).
+
+        Once the append has committed, the store folds: the buckets whose
+        segment list outgrew ``MAX_SEGMENTS`` (through ``rewrite_set``'s
+        partial-vs-full rule), or every bucket once the takedown queue
+        outgrew ``MAX_TOMBSTONES``. A failed fold is logged and the
+        committed epoch stands — the fold is file-count maintenance and
+        must never take down ingest."""
+        version = self._write_segment(
             df, touched, epoch, run_token, extra, cur, append=True
         )
+        committed = self.current()
+        deep = self.deep_buckets(committed, MAX_SEGMENTS)
+        if len(committed.get("tombstones", ())) > MAX_TOMBSTONES:
+            targets, trigger = None, "tombstones"
+        elif deep:
+            targets = self._rewrite_shape(sorted(map(int, deep)))
+            trigger = "segments"
+        else:
+            return version
+        try:
+            self.compact(df.sparkSession, targets, cur=committed, trigger=trigger)
+        except Exception:  # noqa: BLE001 — ingest must survive
+            logger.warning(
+                "bucketed fold failed (%s, version %d)",
+                trigger,
+                version,
+                exc_info=True,
+            )
+        return version
 
     def _write_segment(
         self, df, touched, epoch, run_token, extra, cur, append: bool
     ) -> int:
         if cur is _READ_POINTER:
             cur = self.current()
-        version = (cur["version"] + 1) if cur else 0
+        pointer = dict(cur or {"version": -1, "manifest": {}, "prev_refs": []})
+        if append and self.id_col is not None:
+            # an append store's pointer carries its takedown queue from
+            # the first commit on; a merge store's appears with a forget
+            pointer.setdefault("tombstones", [])
+        version = pointer["version"] + 1
+        pointer.update(extra or {}, version=version, epoch=epoch, run_token=run_token)
+        if touched is not None and not touched:
+            # the epoch marker alone: no data, the manifest (and so the
+            # files every reader needs) unchanged
+            self._commit(pointer, expected=cur)
+            return version
         out = os.path.join(self.path, f"v={version}")
         n_parts = (
             df.sparkSession.sparkContext.defaultParallelism
@@ -426,7 +546,7 @@ class BucketedViewStore(PointerStore):
             else max(1, len(touched))
         )
         self._write_partitioned(df, out, min(self.n_buckets, n_parts))
-        manifest = dict(cur["manifest"]) if cur else {}
+        manifest = dict(pointer["manifest"])
         written = {
             name.split("=", 1)[1]
             for name in os.listdir(out)
@@ -445,20 +565,124 @@ class BucketedViewStore(PointerStore):
                 else:
                     manifest.pop(b, None)
         prev_refs = sorted(_manifest_versions(cur["manifest"]) | {cur["version"]}) if cur else []
-        self._commit(
-            {
-                **(extra or {}),
-                "version": version,
-                "epoch": epoch,
-                "run_token": run_token,
-                "manifest": manifest,
-                "prev_refs": prev_refs,
-            },
-            expected=cur,
-        )
+        pointer.update(manifest=manifest, prev_refs=prev_refs)
+        self._commit(pointer, expected=cur)
         keep = _manifest_versions(manifest) | set(prev_refs) | {version}
         vacuum(self.path, {f"v={v}" for v in keep}, "v=")
         return version
+
+    # -- lifecycle ------------------------------------------------------------
+
+    def fold_rows(self, df: DataFrame) -> DataFrame:
+        """The row fold ``compact`` applies to a bucket's rows: identity
+        (a bucket's segments already hold distinct rows); the rollup's
+        store merges partials instead."""
+        return df
+
+    def compact(
+        self,
+        spark: SparkSession,
+        buckets=None,
+        drop: DataFrame | None = None,
+        *,
+        cur=_READ_POINTER,
+        extra: dict | None = None,
+        trigger: str = "compact",
+    ) -> int | None:
+        """Fold ``buckets`` (default: every bucket) into one version each:
+        read them through the queue filter, remove ``drop``'s ids (an
+        ``id_col`` relation), apply ``fold_rows`` and write them in one
+        ``write_buckets`` commit. Reads answer the same before and after;
+        this is the Lucene-merge / parquet-compaction analogue.
+
+        A fold that covered every bucket has physically removed every
+        queued victim, so it clears the queue; a partial fold keeps it
+        (victims may still have rows in unfolded buckets). Epoch, token
+        and the store-level keys ride through (``extra`` overlays them),
+        and the commit is conditional on ``cur`` (default: read here): an
+        append or takedown that landed after that read fails the fold
+        under a compare-and-swap backend instead of being folded away.
+        Single-writer, like every store write. Returns the new version,
+        or None when there is nothing to fold or drop (no target bucket
+        holds a segment list and no queue is due to clear)."""
+        if cur is _READ_POINTER:
+            cur = self.current()
+        if cur is None or not cur["manifest"]:
+            return None
+        manifest = cur["manifest"]
+        targets = sorted(
+            {str(b) for b in (manifest if buckets is None else buckets)}
+            & set(manifest),
+            key=int,
+        )
+        full = len(targets) == len(manifest)
+        cleared = full and bool(cur.get("tombstones"))
+        if drop is None and not cleared and not any(
+            isinstance(manifest[b], list) for b in targets
+        ):
+            return None
+        df = self.read(spark, buckets=targets, cur=cur)
+        if df is None:
+            return None
+        if drop is not None:
+            df = df.join(F.broadcast(drop), self.id_col, "left_anti")
+        self._record(targets, targets, full, cleared, trigger)
+        return self.write_buckets(
+            self.fold_rows(df),
+            [int(b) for b in targets],
+            cur.get("epoch"),
+            cur.get("run_token"),
+            extra={**(extra or {}), **({"tombstones": []} if cleared else {})},
+            cur=cur,
+        )
+
+    def forget(
+        self,
+        spark: SparkSession,
+        ids,
+        mode: str = "tombstone",
+        cols: tuple[str, ...] = (),
+        extra=None,
+    ) -> int:
+        """Right-to-be-forgotten: remove every row whose ``id_col`` is in
+        ``ids``. Returns how many distinct ids were present.
+
+        One job collects the present victims (``id_col`` plus ``cols``),
+        read through the queue filter, so a repeated request counts and
+        queues nothing twice. ``mode='tombstone'`` (default) queues them:
+        one atomic pointer swing, ZERO data writes; every read drops them
+        at once, and the next full fold sweeps them physically, so N
+        takedowns between folds cost ONE sweep. ``mode='sweep'`` folds
+        every bucket now, less the victims (``compact``), clearing the
+        queue alongside. ``extra(cur, victims)`` returns store-level keys
+        (e.g. decremented corpus counters) that land in the same commit.
+        Epoch and run token ride through, so the owning stream keeps
+        appending."""
+        if mode not in ("tombstone", "sweep"):
+            raise ValueError(f"mode must be tombstone|sweep, got {mode!r}")
+        cur = self.current()
+        ids = [int(i) for i in ids]
+        if cur is None or not cur["manifest"] or not ids:
+            return 0
+        idf = spark.createDataFrame([(i,) for i in ids], f"{self.id_col} long")
+        victims = (
+            self.read(spark, cur=cur)
+            .join(F.broadcast(idf), self.id_col, "left_semi")
+            .select(self.id_col, *cols)
+            .distinct()
+            .collect()
+        )
+        if not victims:
+            return 0
+        overlay = extra(cur, victims) if extra else {}
+        if mode == "tombstone":
+            queue = set(cur.get("tombstones", [])) | {int(r[0]) for r in victims}
+            self._commit(
+                {**cur, **overlay, "tombstones": sorted(queue)}, expected=cur
+            )
+        else:
+            self.compact(spark, drop=idf, cur=cur, extra=overlay, trigger="forget")
+        return len({r[0] for r in victims})
 
 
 def apply_batch_bucketed(

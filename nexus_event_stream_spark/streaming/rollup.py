@@ -23,9 +23,10 @@ convention), three properties fall out by construction:
   last seconds come from the queue. Exactness rests on the caller's
   stored∕tail DISJOINTNESS contract (the stream's own delivery boundary).
 
-Storage reuses ``BucketedViewStore`` verbatim (pointer-last atomic
-commit under both backends, touched-bucket-only rewrites, vacuum keeping
-reader-referenced versions) with ``key_col = bucket_ts``: per-epoch write
+Storage reuses ``BucketedViewStore`` (pointer-last atomic commit under
+both backends, touched-bucket-only rewrites, vacuum keeping
+reader-referenced versions, and the segment folds, whose row fold here
+is ``merge_partials``) with ``key_col = bucket_ts``: per-epoch write
 cost is O(|batch partials| + |touched time buckets|), never O(|history|).
 A year of hourly × 1k-dim partials is ~9M rows — the STORE is bounded by
 the rollup grain, not the event volume, which is the whole point of
@@ -54,13 +55,9 @@ equal in tests/test_rollup.py).
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .projection import BucketedViewStore
-
-logger = logging.getLogger(__name__)
 
 __all__ = [
     "RollupStore",
@@ -366,6 +363,18 @@ def realtime_aggregate(
     )
 
 
+class _PartialStore(BucketedViewStore):
+    """The rollup's ``BucketedViewStore``: its fold merges each key's
+    partials (one per segment) into one row."""
+
+    def __init__(self, path: str, merge, **kwargs):
+        super().__init__(path, **kwargs)
+        self._merge = merge
+
+    def fold_rows(self, df: DataFrame) -> DataFrame:
+        return self._merge(df)
+
+
 class RollupStore:
     """Incrementally-maintained time-bucket rollup over an event stream.
 
@@ -374,7 +383,8 @@ class RollupStore:
     ``value_col`` aggregates as integer cents. Storage, atomic commit,
     touched-bucket locality, and vacuum come from BucketedViewStore
     (key = bucket_ts, so one time bucket's partials — all dims — live in
-    one hash bucket and late-merges rewrite only that bucket's dir).
+    one hash bucket and late-merges rewrite only that bucket's dir), and
+    so do the segment folds: the store's fold merges partials.
     """
 
     def __init__(
@@ -426,9 +436,9 @@ class RollupStore:
         batches scatter across many old time buckets (each late sliver
         no longer drags its whole bucket's rewrite). Reads merge the
         segments at read time (partials are mergeable — that is the
-        rollup invariant) and scheduled ``compact()`` folds segment
-        lists back to one merged row per key. Open a store with the
-        same mode it is written with."""
+        rollup invariant), whichever mode the store is opened with, and
+        the store folds long segment lists back to one merged row per
+        key after the append that grew them."""
         if write_mode not in ("merge", "append"):
             raise ValueError(f"write_mode must be merge|append, got {write_mode!r}")
         self.write_mode = write_mode
@@ -441,8 +451,9 @@ class RollupStore:
         self.kmv_k = kmv_k
         self.topk_col = topk_col
         self.mg_capacity = mg_capacity
-        self._store = BucketedViewStore(
+        self._store = _PartialStore(
             path,
+            self._merge,
             n_buckets=n_buckets,
             backend=backend,
             schema=_schema(
@@ -455,6 +466,15 @@ class RollupStore:
             guard_mode="additive",
         )
         self._guard = self._store.guard
+
+    def _merge(self, partials: DataFrame) -> DataFrame:
+        return merge_partials(
+            partials,
+            self.dims,
+            sketch=self.quantile_k is not None,
+            distinct=self.distinct_col is not None,
+            topk=self.topk_col is not None,
+        )
 
     @property
     def _sketchy(self) -> bool:
@@ -496,13 +516,7 @@ class RollupStore:
                 F.min("__c").alias("min_cents"),
                 F.max("__c").alias("max_cents"),
             )
-        return merge_partials(
-            self._batch_sketch_rows(keyed),
-            self.dims,
-            sketch=self.quantile_k is not None,
-            distinct=self.distinct_col is not None,
-            topk=self.topk_col is not None,
-        )
+        return self._merge(self._batch_sketch_rows(keyed))
 
     def _batch_sketch_rows(self, keyed: DataFrame) -> DataFrame:
         """Per-Arrow-batch partial rows incl. batch-local sketches — the
@@ -587,21 +601,17 @@ class RollupStore:
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         """The materialized partials table (None before the first epoch):
-        one row per (bucket_ts, dims). In ``append`` mode the stored
-        segments hold one PARTIAL per epoch per key — the read merges
-        them (mergeability is the rollup invariant, so this is exact);
-        in ``merge`` mode rows are already unique per key and the read
-        is the plain union."""
-        df = self._store.read(spark)
-        if df is None or self.write_mode == "merge":
+        one row per (bucket_ts, dims). A bucket whose manifest entry
+        lists more than one segment (``append`` writes) holds one PARTIAL
+        per segment per key, so then the read merges them (mergeability
+        is the rollup invariant, so this is exact); otherwise rows are
+        already unique per key and the read is the plain union. The
+        store's manifest decides, not the mode it was opened with."""
+        cur = self.current()
+        df = self._store.read(spark, cur=cur)
+        if df is None or not self._store.deep_buckets(cur, 1):
             return df
-        return merge_partials(
-            df,
-            self.dims,
-            sketch=self.quantile_k is not None,
-            distinct=self.distinct_col is not None,
-            topk=self.topk_col is not None,
-        )
+        return self._merge(df)
 
     def finalized(self, spark: SparkSession) -> DataFrame | None:
         stored = self.read(spark)
@@ -630,22 +640,13 @@ class RollupStore:
             return
         batch_partials = self.partials(batch)
         touched = self._store.touched_buckets(batch_partials, "bucket_ts")
-        if not touched:
-            # empty batch still advances the epoch pointer, or a crash
-            # replaying it could land AFTER later epochs and double-apply
-            if cur is not None:
-                self._store._commit(
-                    {**cur, "epoch": epoch, "run_token": run_token},
-                    expected=cur,
-                )
-            return
         cols = [f.name for f in self._store.schema.fields]
         if self.write_mode == "append":
             # SEGMENT append: only this batch's partials are written —
             # the stored history is never read or rewritten, so a late
             # sliver touching an old time bucket costs O(sliver), not
-            # O(that bucket's history). Reads merge segments; compact()
-            # folds them back.
+            # O(that bucket's history). Reads merge segments; the store
+            # folds long segment lists.
             self._store.append_buckets(
                 batch_partials.select(*cols), touched, epoch,
                 run_token=run_token, cur=cur,
@@ -657,46 +658,23 @@ class RollupStore:
         merged = (
             batch_partials
             if state_slice is None
-            else merge_partials(
-                state_slice.unionByName(batch_partials),
-                self.dims,
-                sketch=self.quantile_k is not None,
-                distinct=self.distinct_col is not None,
-                topk=self.topk_col is not None,
-            )
+            else self._merge(state_slice.unionByName(batch_partials))
         )
+        # an empty batch writes nothing but still commits its epoch, or
+        # a crash replaying it could land AFTER later epochs and
+        # double-apply
         self._store.write_buckets(
             merged.select(*cols), touched, epoch, run_token=run_token, cur=cur
         )
 
     def compact(self, spark: SparkSession) -> int | None:
         """Fold every bucket's segment list into ONE merged row per
-        (bucket_ts, dims) — pure file-count/read-amplification
-        maintenance for ``append``-mode stores, the same scheduled shape
-        as the BM25 index's compaction. Finalized results are identical
+        (bucket_ts, dims) (``BucketedViewStore.compact`` with the
+        partial merge as its row fold). Finalized results are identical
         before and after (pinned); epoch and run token ride the pointer
-        commit unchanged. Returns the new version or None when no bucket
-        holds more than one segment."""
-        cur = self.current()
-        if cur is None or not cur["manifest"]:
-            return None
-        if not any(
-            isinstance(v, list) and len(v) > 1 for v in cur["manifest"].values()
-        ):
-            return None
-        merged = merge_partials(
-            self._store.read(spark, cur=cur),
-            self.dims,
-            sketch=self.quantile_k is not None,
-            distinct=self.distinct_col is not None,
-            topk=self.topk_col is not None,
-        )
-        cols = [f.name for f in self._store.schema.fields]
-        touched = [int(b) for b in cur["manifest"]]
-        return self._store.write_buckets(
-            merged.select(*cols), touched, cur.get("epoch"),
-            run_token=cur.get("run_token"), cur=cur,
-        )
+        commit unchanged. Returns the new version or None when there is
+        nothing to fold."""
+        return self._store.compact(spark)
 
     def realtime(
         self, spark: SparkSession, tail_events: DataFrame
@@ -722,32 +700,21 @@ def start_rollup(
     store: RollupStore,
     checkpoint_path: str,
     trigger_seconds: int | None = None,
-    compact_every: int | None = None,
 ):
     """Wire a parsed event stream into the rollup store and start it —
     the continuous-aggregate twin of ``start_projection``. The run token
     is checkpoint-stable (``run_token_for``): a crash-recovery restart
     presents the same identity (replays suppress silently), while a
     checkpoint RESET presents a fresh one — which the additive guard
-    rejects loudly instead of swallowing the new run's epochs.
-
-    ``compact_every`` schedules inline segment-fold maintenance for
-    ``append``-mode stores (every N epochs; the start_search_index
-    shape) — logged-and-continued, never fatal to ingest. None (default)
-    disables; merge-mode stores never need it."""
+    rejects loudly instead of swallowing the new run's epochs. An
+    ``append``-mode store folds its segment lists as they grow
+    (``BucketedViewStore.append_buckets``)."""
     from .dedup import run_token_for
 
     run_token = run_token_for(checkpoint_path)
 
     def _apply(batch: DataFrame, epoch: int) -> None:
         store.apply_batch(spark, batch, epoch, run_token)
-        if compact_every and epoch % compact_every == compact_every - 1:
-            try:
-                store.compact(spark)
-            except Exception:  # noqa: BLE001 — ingest must survive
-                logger.warning(
-                    "rollup segment compaction failed (epoch %d)", epoch, exc_info=True
-                )
 
     writer = (
         events.writeStream.outputMode("update")

@@ -35,7 +35,9 @@ write, BucketedViewStore.write_buckets) — correct and atomic; the same
 store's append segments (``append_buckets``, what SignatureStore and the
 BM25 index use) are the upgrade path if bucket rewrite bandwidth ever
 dominates (the probe already reads the
-full touched list either way).
+full touched list either way). Takedowns are the inner store's, keyed
+on ``vec_id``: ``EmbeddingStore.forget`` folds only the victims'
+centroid buckets (``BucketedViewStore.compact``).
 """
 
 from __future__ import annotations
@@ -72,6 +74,7 @@ class EmbeddingStore:
             backend=backend,
             schema=_STORE_SCHEMA,
             key_col="centroid_id",
+            id_col="vec_id",
         )
         #: the inner store's idempotent replay discipline
         #: (streaming/replay.py): a replayed registration self-suppresses
@@ -136,36 +139,27 @@ class EmbeddingStore:
         from the accepted store, one atomic pointer swing (the BM25
         store's ``forget`` twin). Returns how many were present.
 
-        The store is centroid-bucketed, so only the buckets actually
-        holding the victims rewrite. Consequence to know: a forgotten
+        The store is centroid-bucketed, so the sweep is a fold
+        (``BucketedViewStore.compact``) of only the buckets actually
+        holding the victims. Consequence to know: a forgotten
         vector stops suppressing future near-duplicates of itself —
         that IS the semantics of forgetting (its content must not keep
         influencing the corpus); docs it already suppressed stay
         suppressed (suppression decisions are not re-litigated).
         Centroids, epoch, and run token ride through unchanged."""
         cur = self.current()
-        if cur is None or not cur["manifest"]:
-            return 0
         ids = [int(v) for v in vec_ids]
-        if not ids:
+        if cur is None or not cur["manifest"] or not ids:
             return 0
         idf = spark.createDataFrame([(i,) for i in ids], "vec_id long")
-        allrows = self._store.read(spark, cur=cur)
-        victims = allrows.join(F.broadcast(idf), "vec_id", "left_semi")
+        victims = self._store.read(spark, cur=cur).join(
+            F.broadcast(idf), "vec_id", "left_semi"
+        )
         touched = self._store.touched_buckets(victims, "centroid_id")
         if not touched:
             return 0
         n_gone = victims.count()
-        slice_ = self._store.read(spark, buckets=touched, cur=cur)
-        kept = slice_.join(F.broadcast(idf), "vec_id", "left_anti")
-        self._store.write_buckets(
-            kept.select(*[f.name for f in _STORE_SCHEMA.fields]),
-            touched,
-            cur.get("epoch"),
-            cur.get("run_token"),
-            extra={"centroids": cur.get("centroids")},
-            cur=cur,
-        )
+        self._store.compact(spark, touched, idf, cur=cur, trigger="forget")
         return int(n_gone)
 
 

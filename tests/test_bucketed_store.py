@@ -214,3 +214,86 @@ def test_crossover_auto_selects_and_matches_oracle(spark, tmp_path):
     }
     assert collect_view(spark, s) == want
     assert "k5" not in want and "k99" in want
+
+
+def _jobs(spark, group, call):
+    """(result of ``call()``, number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_rewrite_decisions_are_logged_at_zero_jobs(
+    spark, tmp_path, caplog, monkeypatch
+):
+    """``rewrite_set`` and every fold emit ONE decision record: the
+    touched and rewritten buckets, partial or full, whether the takedown
+    queue cleared, and the trigger. The records cost no Spark job: the
+    same fold on two identical stores runs as many jobs with the records
+    off as with them on, and ``rewrite_set`` runs none."""
+    import logging
+
+    from nexus_event_stream_spark.streaming import projection
+
+    log = projection.logger.name
+
+    def records():
+        out = [r.rewrite for r in caplog.records if hasattr(r, "rewrite")]
+        caplog.clear()
+        return out
+
+    def seg_store(name):
+        s = BucketedViewStore(
+            str(tmp_path / name), n_buckets=4,
+            schema="k string, doc_id long", key_col="k", id_col="doc_id",
+        )
+        for e in range(2):
+            rows = [(f"k{i}", 10 * e + i) for i in range(6)]
+            s.append_buckets(spark.createDataFrame(rows, s.schema), None, e, "r")
+        s.forget(spark, [0])
+        return s
+
+    a, b = seg_store("a"), seg_store("b")
+    caplog.set_level(logging.INFO, logger=log)
+    caplog.clear()
+
+    touched, jobs = _jobs(spark, "rewrite-set", lambda: a.rewrite_set([1]))
+    assert touched == [1] and jobs == 0
+    assert records() == [{
+        "store": a.path, "touched": [1], "rewritten": [1], "shape": "partial",
+        "queue_cleared": False, "trigger": "epoch",
+    }]
+    assert a.rewrite_set([0, 1, 2]) == [0, 1, 2, 3]
+    assert records()[0]["shape"] == "full"
+
+    with caplog.at_level(logging.WARNING, logger=log):
+        _, jobs_off = _jobs(spark, "fold-off", lambda: a.compact(spark))
+    assert records() == []
+    _, jobs_on = _jobs(spark, "fold-on", lambda: b.compact(spark))
+    assert jobs_on == jobs_off > 0
+    buckets = sorted(int(k) for k in b.current()["manifest"])
+    assert records() == [{
+        "store": b.path, "touched": buckets, "rewritten": buckets,
+        "shape": "full", "queue_cleared": True, "trigger": "compact",
+    }]
+
+    # the append-time triggers, and a sweep
+    monkeypatch.setattr(projection, "MAX_SEGMENTS", 1)
+    b.append_buckets(spark.createDataFrame([("k1", 99)], b.schema), None, 2, "r")
+    (rec,) = records()
+    assert rec["trigger"] == "segments" and rec["shape"] == "partial"
+    assert rec["touched"] == rec["rewritten"] and len(rec["touched"]) == 1
+    monkeypatch.setattr(projection, "MAX_SEGMENTS", 8)
+    monkeypatch.setattr(projection, "MAX_TOMBSTONES", 0)
+    b.forget(spark, [1])
+    b.append_buckets(spark.createDataFrame([("k2", 98)], b.schema), None, 3, "r")
+    (rec,) = records()
+    assert rec["trigger"] == "tombstones" and rec["queue_cleared"] is True
+    assert b.forget(spark, [2], mode="sweep") == 1
+    (rec,) = records()
+    assert rec["trigger"] == "forget" and rec["shape"] == "full"

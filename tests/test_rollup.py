@@ -34,13 +34,6 @@ from nexus_event_stream_spark.streaming.rollup import (
     start_rollup,
 )
 
-#: r15 two-tier suite (VERDICT r14 #6): this module is a multi-second
-#: store/protocol INTEGRATION suite — the dominant cost of the ~93-min
-#: full run that outgrew the driver's verification window. Skipped by
-#: default (SPARK_GRAFT_FULL_TESTS=1 runs it); the operators it
-#: exercises keep fast-tier unit coverage in the sibling suites.
-pytestmark = pytest.mark.slow
-
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -592,6 +585,34 @@ def test_append_mode_equals_merge_mode_and_oracle(
     assert stored_rows(spark, store) == batch_rollup(events)
 
 
+def test_reopen_in_default_mode_merges_append_segments(spark, tmp_path):
+    """A store written in append mode and reopened with the default mode
+    still merges its segments on read: the manifest, not the mode the
+    store was opened with, says whether a key holds several partials, so
+    ``finalized()`` gives one row per key, equal to the one-shot oracle."""
+    import datetime as dt
+
+    hour = dt.datetime(2024, 1, 9, 19)
+    schema = "ts timestamp, event_type string, value double"
+    epochs = [
+        [(hour.replace(minute=5), "click", 1.5), (hour.replace(minute=20), "view", 2.0)],
+        [(hour.replace(minute=40), "click", 3.25), (hour.replace(minute=50), "view", 0.5)],
+    ]
+    path = str(tmp_path / "ro")
+    writer = RollupStore(path, n_buckets=8, write_mode="append")
+    for e, rows in enumerate(epochs):
+        writer.apply_batch(spark, spark.createDataFrame(rows, schema), e)
+    assert list(writer.current()["manifest"].values()) == [[0, 1]]
+
+    got = sorted(
+        (r.bucket_ts, r.event_type, r.n_events, round(r.sum_value * 100))
+        for r in RollupStore(path, n_buckets=8).finalized(spark).collect()
+    )
+    oracle = batch_rollup(spark.createDataFrame(epochs[0] + epochs[1], schema))
+    want = sorted((ts, et, n, s) for (ts, et), (n, s, _lo, _hi) in oracle.items())
+    assert got == want
+
+
 def test_append_mode_late_data_is_a_new_segment(spark, events, tmp_path):
     """A late sliver for an old bucket lands as ONE small segment — the
     old bucket's history is not re-read or rewritten — and the merged
@@ -645,11 +666,15 @@ def test_append_mode_compact_folds_identically(
 
 
 def test_append_mode_streaming_with_scheduled_compaction(
-    spark, events, tmp_path
+    spark, events, tmp_path, monkeypatch
 ):
-    """Real Structured Streaming run with compact_every: segment lists
+    """Real Structured Streaming run with MAX_SEGMENTS=2: segment lists
     stay bounded through a live stream and the result is exact."""
     import os
+
+    from nexus_event_stream_spark.streaming import projection
+
+    monkeypatch.setattr(projection, "MAX_SEGMENTS", 2)
 
     src = str(tmp_path / "src")
     parts = [
@@ -661,9 +686,7 @@ def test_append_mode_streaming_with_scheduled_compaction(
     stream = spark.readStream.schema(
         "ts timestamp, event_type string, value double"
     ).option("maxFilesPerTrigger", "1").parquet(src + "/*")
-    q = start_rollup(
-        spark, stream, store, str(tmp_path / "ckpt"), compact_every=2
-    )
+    q = start_rollup(spark, stream, store, str(tmp_path / "ckpt"))
     try:
         q.processAllAvailable()
         for i in (1, 2, 3):
@@ -674,7 +697,7 @@ def test_append_mode_streaming_with_scheduled_compaction(
     finally:
         q.stop()
     assert stored_rows(spark, store) == batch_rollup(events)
-    # compaction ran: manifests are bounded (≤ compact_every segments)
+    # compaction ran: manifests are bounded (≤ MAX_SEGMENTS segments)
     assert all(
         len(v) <= 2 if isinstance(v, list) else True
         for v in store.current()["manifest"].values()

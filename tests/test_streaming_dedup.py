@@ -308,12 +308,16 @@ def test_run_token_stable_across_restarts_fresh_after_reset(tmp_path):
     assert run_token_for(ckpt) != tok  # new generation, guard disarmed
 
 
-def test_append_schedules_compaction_bounding_manifest(spark, store_dir):
+def test_append_schedules_compaction_bounding_manifest(
+    spark, store_dir, monkeypatch
+):
     """Version lists stay bounded over many epochs touching the same
     buckets, and probe results are unchanged by the folds."""
+    from nexus_event_stream_spark.streaming import projection
     from nexus_event_stream_spark.streaming.dedup import POSTING_SCHEMA
 
-    store = SignatureStore(store_dir, n_buckets=4, compact_threshold=3)
+    monkeypatch.setattr(projection, "MAX_SEGMENTS", 3)
+    store = SignatureStore(store_dir, n_buckets=4)
     for e in range(10):
         posts = spark.createDataFrame(
             [("bucket-x", 100 + e, e, "run1", [1, 2, 3 + e])], POSTING_SCHEMA
@@ -321,7 +325,7 @@ def test_append_schedules_compaction_bounding_manifest(spark, store_dir):
         store.append(posts, epoch=e, run_token="run1")
         cur = store.current()
         assert all(
-            (len(v) if isinstance(v, list) else 1) <= store.compact_threshold
+            (len(v) if isinstance(v, list) else 1) <= projection.MAX_SEGMENTS
             for v in cur["manifest"].values()
         )
     # all ten epochs' postings remain probe-able after repeated folds
@@ -842,15 +846,19 @@ def test_streaming_lm_gate_composes_with_suppression(spark, store_dir):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_tombstone_queue_cap_triggers_full_sweep_on_append(spark, store_dir):
+def test_tombstone_queue_cap_triggers_full_sweep_on_append(
+    spark, store_dir, monkeypatch
+):
     """Regression: the streaming path only schedules PARTIAL compacts,
-    which never clear the takedown queue — max_tombstones makes the
+    which never clear the takedown queue — MAX_TOMBSTONES makes the
     next append escalate to a FULL sweep once the queue outgrows its
     budget, so a long-running stream cannot accumulate victims (or
     probe anti-filters) without bound."""
+    from nexus_event_stream_spark.streaming import projection
     from nexus_event_stream_spark.streaming.dedup import forget_signatures
 
-    store = SignatureStore(store_dir, n_buckets=8, max_tombstones=2)
+    monkeypatch.setattr(projection, "MAX_TOMBSTONES", 2)
+    store = SignatureStore(store_dir, n_buckets=8)
     assert surviving_ids(
         spark, store, [(1, A_TEXT), (2, B_TEXT), (3, C_TEXT)], 0
     ) == [1, 2, 3]

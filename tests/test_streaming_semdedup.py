@@ -33,13 +33,6 @@ from nexus_event_stream_spark.streaming.semdedup import (
     suppress_and_register_semantic,
 )
 
-#: r15 two-tier suite (VERDICT r14 #6): this module is a multi-second
-#: store/protocol INTEGRATION suite — the dominant cost of the ~93-min
-#: full run that outgrew the driver's verification window. Skipped by
-#: default (SPARK_GRAFT_FULL_TESTS=1 runs it); the operators it
-#: exercises keep fast-tier unit coverage in the sibling suites.
-pytestmark = pytest.mark.slow
-
 SF_DIR = "/root/testdata/sf0.001"
 EPS = 0.99
 
